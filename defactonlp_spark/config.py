@@ -52,23 +52,18 @@ class EngineConfig:
     #: output (same ascending-term float64 summation); SPEED choice only.
     dense_eval_threshold: int = 50_000_000
 
-    #: batch query serving: claims are grouped into batches of this size and
-    #: each segment slice ships/decodes ONCE PER BATCH instead of once per
-    #: claim — head-term blobs dominate the gather shuffle, and claims
-    #: overwhelmingly share head terms. Measured r3 (200 claims, 320k-doc
-    #: index, warm ServingSession): a one-shot sweep read 8 -> 30.6
-    #: claims/s, 16 -> 41.8, 32 -> 42.9; interleaved re-measurement (5
-    #: alternating warm pairs, shared session) read 8 slightly AHEAD of 16
-    #: on every pair (medians 9.9 vs 11.5 s under drift; quiet reps 6.75
-    #: vs 7.39) — the sweep's 16-advantage was host drift, not the batch
-    #: size. 8 keeps batch count >= core count down to ~256-claim sets;
-    #: large sets saturate cores at any batch size.
-    serve_claims_per_batch: int = 8
-
-    #: pinned partition count for the distributed batch-id assignment in
-    #: query serving (cluster-size independent, like doc-id assignment —
-    #: batch membership must not depend on parallelism)
-    serve_batch_parts: int = 64
+    #: batch query serving: each claim hashes to one of
+    #: ``max(defaultParallelism, ceil(n_claims / serve_claims_per_batch))``
+    #: kernel groups, so this is the CAP on claims per group: a serving-sized
+    #: batch gets one group per core, and only huge claim sets reach the cap,
+    #: which bounds one task's claim rows and decoded slices. Each segment
+    #: slice ships and decodes ONCE PER GROUP, so fewer, larger groups do
+    #: less work: the batch kernel alone scored 256 Zipf-head claims over a
+    #: 2,000-doc index in 0.55 s of CPU as 4-claim groups, 0.38 s as 8,
+    #: 0.09 s as 64 and 0.04 s as one group of 256 (4-vCPU host). The dense
+    #: kernel ranks a claim over its own postings when they are fewer than
+    #: the group's doc union, so a larger group adds no per-claim cost.
+    serve_claims_per_batch: int = 256
 
     #: live-docs serving guard: the WAND kernels mask delete tombstones with
     #: a sorted int64 array that rides the task closure (IndexReader

@@ -17,8 +17,8 @@ grouping column (``salt' = salt * n_shards + doc_id % n_shards``), so
 ``encode_segments``'s one range shuffle + streaming encode kernel is reused
 unchanged — each (term, shard) sub-list becomes its own delta+varbyte
 slice, sorted by doc_id, with the GLOBAL df stored (stats are computed
-before sharding). Serving fans the claim batches out per shard via a
-(batch, shard) cogroup key: each kernel call sees only its shard's blobs
+before sharding). Serving fans the claim kernel groups out per shard via
+a (group, shard) cogroup key: each kernel call sees only its shard's blobs
 (on a real cluster: only that shard's executors' local slices), and one
 window over the |claims| x n_shards x k local winners keeps the global k.
 
@@ -95,7 +95,7 @@ def wand_topk_sharded(
     """Fan-out/merge top-k over a sharded segment table (``shard`` column).
 
     Delegates the batching/pruning/kernel machinery to
-    :func:`defactonlp_spark.operators.wand.wand_topk` with the (batch,
+    :func:`defactonlp_spark.operators.wand.wand_topk` with the (group,
     shard) cogroup key; see module docstring for the exactness argument.
     """
     from defactonlp_spark.operators.wand import wand_topk

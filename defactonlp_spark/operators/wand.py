@@ -15,12 +15,13 @@ BM25 path. Three pinned choices make that provable:
    uses — so scores are bit-identical, not merely close.
 
 Distribution model: segments are term-range partitioned (build layout), so a
-claim's terms live in several partitions. The query plan assigns batch ids
-to claims distributively, gathers each batch's (term, salt) slices with a
-join on term, and runs the kernels in ONE cogrouped
-``applyInPandas(batch)`` stage — the shuffle moves only compressed blobs of
-the query's terms (bounded per slice by salting), never the corpus, and
-nothing claim-shaped is ever collected to the driver. Inside the kernel,
+claim's terms live in several partitions. The query plan hashes each claim
+to a kernel group (about one group per core), gathers each group's
+(term, salt) slices with a join on term, and runs the kernels in ONE
+cogrouped ``applyInPandas`` stage with one task per core — the shuffle
+moves only compressed blobs of the query's terms (bounded per slice by
+salting), never the corpus, and nothing claim-shaped is ever collected to
+the driver. Inside the kernel,
 decode is deferred: the dense/WAND planning uses only the ``n`` column,
 dense claims decode just the slices they touch, and WAND cursors
 decompress lazily block by block.
@@ -82,19 +83,19 @@ class _Cursor:
 
     def __init__(self, row, n_docs: int, avgdl: float, params: BM25Params, block_size: int,
                  deletes: np.ndarray | None = None):
-        self.term = row["term"]
-        self.n = int(row["n"])
+        self.term = row.term
+        self.n = int(row.n)
         self.block_size = block_size
-        self.docs_blob = row["docs_blob"]
-        self.tfs_blob = row["tfs_blob"]
-        self.dls_blob = row["dls_blob"]
-        bm = row["blockmax"]
+        self.docs_blob = row.docs_blob
+        self.tfs_blob = row.tfs_blob
+        self.dls_blob = row.dls_blob
+        bm = row.blockmax
         self.last_ids = np.array([b["last_doc_id"] for b in bm], dtype=np.int64)
         self.max_scores = np.array([b["max_score"] for b in bm], dtype=np.float64)
         self.doc_offs = np.array([b["doc_off"] for b in bm], dtype=np.int64)
         self.tf_offs = np.array([b["tf_off"] for b in bm], dtype=np.int64)
         self.dl_offs = np.array([b["dl_off"] for b in bm], dtype=np.int64)
-        self.idf_t = float(idf(int(row["df"]), n_docs))
+        self.idf_t = float(idf(int(row.df), n_docs))
         self.avgdl = avgdl
         self.params = params
         self.ub = float(self.max_scores.max())
@@ -208,7 +209,7 @@ def wand_topk_kernel(
     sorted by (score desc, doc_id asc), len <= k."""
     cursors = [
         _Cursor(row, n_docs, avgdl, params, block_size, deletes=deletes)
-        for _, row in slices.iterrows()
+        for row in slices.itertuples(index=False)
     ]
     cursors = [c for c in cursors if not c.exhausted]
     heap: list[tuple[float, int]] = []  # (score, -doc_id): heap[0] is the WORST kept
@@ -290,8 +291,8 @@ def _batch_kernel(
     dense_thresh: int,
     deletes: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Score every claim of one batch over the batch's (deduplicated)
-    slices.
+    """Score every claim of one kernel group over the group's
+    (deduplicated) slices.
 
     Planning happens BEFORE any decode: each claim's candidate volume is the
     sum of its slices' ``n`` column, so the dense-vs-WAND choice needs no
@@ -305,7 +306,9 @@ def _batch_kernel(
     Dense claims accumulate their terms' contribution arrays into a dense
     score buffer indexed by task-local doc position — a strictly
     left-to-right, ascending-term sequence of vectorized adds, so scores
-    stay bit-identical to the cursor kernel."""
+    stay bit-identical to the cursor kernel. A claim whose postings are
+    fewer than the group's doc union ranks and resets only the positions
+    it touched, so group size adds no per-claim cost."""
     from defactonlp_spark.operators.segments import decode_slice
 
     pdf = pdf.sort_values(["term", "salt"]).reset_index(drop=True)
@@ -327,15 +330,15 @@ def _batch_kernel(
     by_term: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
     all_ids: list[np.ndarray] = []
     if dense_terms:
-        for _, row in pdf[pdf["term"].isin(dense_terms)].iterrows():
+        for row in pdf[pdf["term"].isin(dense_terms)].itertuples(index=False):
             ids, tfs, dls = decode_slice(row)
             m = _live(ids, deletes)
             if m is not None:
                 ids, tfs, dls = ids[m], tfs[m], dls[m]
             if ids.size == 0:
                 continue
-            contrib = bm25_contrib(tfs, dls, float(idf(int(row["df"]), n_docs)), avgdl, params)
-            by_term.setdefault(row["term"], []).append((ids, contrib))
+            contrib = bm25_contrib(tfs, dls, float(idf(int(row.df), n_docs)), avgdl, params)
+            by_term.setdefault(row.term, []).append((ids, contrib))
             all_ids.append(ids)
     # manual sort+dedup instead of np.unique: unique() flattens (copies) its
     # input first — on a multi-million-id union that copy was half the call
@@ -347,8 +350,8 @@ def _batch_kernel(
         uniq = _cat[np.concatenate(([True], _cat[1:] != _cat[:-1]))] if _cat.size else _cat
     else:
         uniq = np.empty(0, dtype=np.int64)
-    pos_by_term: dict[str, list[np.ndarray]] = {
-        t: [np.searchsorted(uniq, ids) for ids, _ in slices]
+    pos_by_term: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {
+        t: [(np.searchsorted(uniq, ids), contrib) for ids, contrib in slices]
         for t, slices in by_term.items()
     }
     scores = np.zeros(uniq.size, dtype=np.float64)
@@ -359,20 +362,28 @@ def _batch_kernel(
             rows = pdf[pdf["term"].isin(present)]
             top = wand_topk_kernel(rows, n_docs, avgdl, k, params, block_size, deletes=deletes)
         else:
-            scores[:] = 0.0
-            for t in present:  # ascending term order — the parity contract
-                for (ids, contrib), pos in zip(by_term.get(t, ()), pos_by_term.get(t, ())):
-                    scores[pos] += contrib
-            neg = -scores
-            matched = np.nonzero(scores > 0.0)[0]
-            if matched.size > k:
-                kth = np.partition(neg[matched], k - 1)[k - 1]
-                cand = matched[neg[matched] <= kth]
-            else:
-                cand = matched
-            order2 = np.lexsort((uniq[cand], neg[cand]))
-            top_idx = cand[order2][:k]
-            top = [(int(uniq[i]), float(scores[i])) for i in top_idx]
+            # ascending term order — the parity contract
+            parts = [pc for t in present for pc in pos_by_term.get(t, ())]
+            if not parts:
+                continue
+            # rank only this claim's own positions while they are fewer than
+            # the group's doc union, else one scan of the buffer: per-claim
+            # cost stays O(min(own postings, union)). Contributions are > 0,
+            # so a zero score marks a position's first touch by this claim.
+            own = sum(pos.size for pos, _ in parts) < uniq.size
+            fresh = []
+            for pos, contrib in parts:
+                if own:
+                    fresh.append(pos[scores[pos] == 0.0])
+                scores[pos] += contrib
+            cand = np.concatenate(fresh) if own else np.flatnonzero(scores)
+            sc = scores[cand]
+            scores[cand] = 0.0  # leave the buffer zeroed for the next claim
+            if cand.size > k:
+                kth = np.partition(sc, cand.size - k)[cand.size - k]
+                cand, sc = cand[sc >= kth], sc[sc >= kth]
+            order = np.lexsort((uniq[cand], -sc))[:k]
+            top = [(int(uniq[i]), float(v)) for i, v in zip(cand[order], sc[order])]
         for r, (d, s) in enumerate(top, 1):
             out_claim.append(claim_id)
             out_rank.append(r)
@@ -412,47 +423,52 @@ def wand_topk(
     size is capped by the caller (config.max_serving_deletes) — compaction
     via merge_builds is the scale path for large tombstone sets.
 
-    Batch-gather plan, fully distributed (no driver materialization of the
+    Group-gather plan, fully distributed (no driver materialization of the
     claim set — VERDICT r1 'What's wrong' #1):
 
-    1. batch ids are assigned like doc ids (operators/postings.py): a
-       PINNED-count hash repartition on claim_id + per-partition row_number
-       — deterministic, cluster-size independent, zero global sorts, and
-       the claim table never touches the driver;
+    1. the distinct (claim_id, term) relation is tokenized ONCE per call and
+       held as a local checkpoint; the term probe and both kernel inputs
+       read that copy. Each claim then hashes to one of
+       ``G = max(defaultParallelism, ceil(n_claims /
+       cfg.serve_claims_per_batch))`` kernel groups — one expression, no
+       shuffle. A serving-sized claim batch gets one group per core; huge
+       claim sets get groups of bounded size. A claim's score never depends
+       on its group, so results do not either;
     2. the segment scan is pruned to the query's DISTINCT terms — collected
        for an `isin` pushdown (parquet row-group stats apply; the distinct
        term count is vocabulary-bounded by Heaps' law, NOT |claims|-bounded)
        when small, a term semi-join beyond ``cfg.isin_pushdown_max_terms``;
-    3. slices join (batch, term) so each blob ships ONCE PER BATCH (not per
+    3. slices join (group, term) so each blob ships ONCE PER GROUP (not per
        claim — claims share Zipf-head terms, so per-claim gathering
        multiplies the heaviest blobs by |claims|; measured 9x). The join is
-       unhinted: AQE broadcasts the batch-term side when it is small and
+       unhinted: AQE broadcasts the group-term side when it is small and
        falls back to a shuffle join when a huge claim set makes it large —
-       either way the blob volume is the inherent per-batch duplication;
-    4. ONE cogrouped ``applyInPandas`` stage per batch receives the claim->
-       term rows AS DATA (left cogroup side) and the slices (right side) —
-       nothing claim-shaped rides the task closure. Per claim the planner
-       picks the vectorized dense kernel or lazy block-max WAND by
-       candidate volume; both are bit-identical
+       either way the blob volume is the inherent per-group duplication;
+    4. ONE cogrouped ``applyInPandas`` stage receives each group's claim->
+       term rows AS DATA (left cogroup side) and its slices (right side) —
+       nothing claim-shaped rides the task closure. Both sides are placed
+       by group id into exactly ``defaultParallelism`` partitions, so AQE
+       cannot coalesce the kernel stage below the core count. Per claim
+       the planner picks the vectorized dense kernel or lazy block-max WAND
+       by candidate volume; both are bit-identical
        (tests/test_topk_parity.py).
     """
-    from pyspark.sql import Window
+    from pyspark.sql import Observation, Window
 
-    per_batch = max(cfg.serve_claims_per_batch, 1)
-    qt = qterms.select("claim_id", "term").distinct()
+    spark = segments.sparkSession
+    par = spark.sparkContext.defaultParallelism
 
-    # -- 1. distributed batch assignment -----------------------------------
-    claims = qt.select("claim_id").distinct()
-    parted = claims.repartition(cfg.serve_batch_parts, "claim_id").withColumn(
-        "_pid", F.spark_partition_id()
+    # -- 1. tokenize once, then one group expression ------------------------
+    # the checkpoint job also counts the claims; the HLL estimate only sizes
+    # the groups, so it need not be exact, and it saves a count() job
+    seen = Observation()
+    qt = (
+        qterms.select("claim_id", "term").distinct()
+        .observe(seen, F.approx_count_distinct("claim_id").alias("n_claims"))
+        .localCheckpoint()
     )
-    w = Window.partitionBy("_pid").orderBy("claim_id")
-    cb = parted.withColumn(
-        "batch",
-        F.col("_pid").cast("long") * F.lit(1 << 32)
-        + F.floor((F.row_number().over(w) - 1) / per_batch).cast("long"),
-    ).select("claim_id", "batch")
-    qt_b = qt.join(cb, "claim_id")
+    n_groups = max(par, -(-seen.get["n_claims"] // max(cfg.serve_claims_per_batch, 1)))
+    qt_g = qt.withColumn("grp", F.pmod(F.xxhash64("claim_id"), F.lit(n_groups)).cast("int"))
 
     # -- 2. segment pruning on distinct terms ------------------------------
     terms_df = qt.select("term").distinct()
@@ -461,7 +477,7 @@ def wand_topk(
     # they ARE the pushdown list (saves a separate count() job per query)
     probe_rows = terms_df.limit(cfg.isin_pushdown_max_terms + 1).collect()
     if not probe_rows:
-        return segments.sparkSession.createDataFrame([], RESULTS_SCHEMA)
+        return spark.createDataFrame([], RESULTS_SCHEMA)
     if len(probe_rows) <= cfg.isin_pushdown_max_terms:
         terms = sorted(r["term"] for r in probe_rows)
         pruned = segments
@@ -488,50 +504,49 @@ def wand_topk(
         else:
             hits = segments.join(terms_df, "term", "left_semi")
 
-    # -- 3. per-batch gather ------------------------------------------------
-    # fresh alias for the gather side's batch column: both cogroup sides
-    # descend from qt_b, and Spark's ambiguous-self-join check rejects the
+    # -- 3. per-group gather ------------------------------------------------
+    # fresh alias for the gather side's group column: both cogroup sides
+    # descend from qt, and Spark's ambiguous-self-join check rejects the
     # same attribute id appearing on both sides
-    batch_terms = qt_b.select(F.col("batch").alias("b_batch"), "term").distinct()
-    joined = hits.join(batch_terms, "term", "inner")
+    group_terms = qt_g.select(F.col("grp").alias("s_grp"), "term").distinct()
+    joined = hits.join(group_terms, "term", "inner")
 
     params, bs, dense_thresh = cfg.bm25, cfg.block_size, cfg.dense_eval_threshold
 
     # -- 4. cogrouped kernel: claim rows arrive as data, not closure --------
-    def per_batch_fn(key: tuple, claims_pdf: pd.DataFrame, slices_pdf: pd.DataFrame) -> pd.DataFrame:
-        batch_claims = [
-            (int(cid), grp["term"].tolist())
-            for cid, grp in claims_pdf.groupby("claim_id", sort=True)
+    def per_group_fn(key: tuple, claims_pdf: pd.DataFrame, slices_pdf: pd.DataFrame) -> pd.DataFrame:
+        group_claims = [
+            (int(cid), g["term"].tolist())
+            for cid, g in claims_pdf.groupby("claim_id", sort=True)
         ]
         return _batch_kernel(
-            slices_pdf, batch_claims, n_docs, avgdl, k, params, bs, dense_thresh,
+            slices_pdf, group_claims, n_docs, avgdl, k, params, bs, dense_thresh,
             deletes=deletes,
         )
 
-    if n_shards is None:
-        return (
-            qt_b.groupBy("batch")
-            .cogroup(joined.groupBy("b_batch"))
-            .applyInPandas(per_batch_fn, schema=RESULTS_SCHEMA)
-        )
-
-    # -- sharded fan-out (operators/sharding.py): each (batch, shard) group
+    # -- sharded fan-out (operators/sharding.py): each (group, shard) cogroup
     # computes a LOCAL top-k over its shard's slices with GLOBAL stats; a
     # window over the claims x shards x k local winners keeps the global k,
     # with the kernels' exact tie-break (score desc, doc_id asc) — so the
     # result is rank-and-score identical to the unsharded path. The claim
     # side replicates to the shard list via a broadcast range (n_shards
-    # rows), never self-joining the gather relation.
-    shards = (
-        segments.sparkSession.range(n_shards)
-        .select(F.col("id").cast("int").alias("_shard"))
-    )
-    qt_bs = qt_b.crossJoin(F.broadcast(shards))
+    # rows), never self-joining the gather relation. The pair folds into one
+    # key column: partitioning placed by an expression over two columns
+    # would not satisfy a two-column cogroup, and Spark would shuffle again.
+    if n_shards is not None:
+        shards = spark.range(n_shards).select(F.col("id").cast("int").alias("_shard"))
+        qt_g = qt_g.crossJoin(F.broadcast(shards)).withColumn(
+            "grp", F.col("grp") * n_shards + F.col("_shard")
+        )
+        joined = joined.withColumn("s_grp", F.col("s_grp") * n_shards + F.col("shard"))
+
     local = (
-        qt_bs.groupBy("batch", "_shard")
-        .cogroup(joined.groupBy("b_batch", "shard"))
-        .applyInPandas(per_batch_fn, schema=RESULTS_SCHEMA)
+        qt_g.repartitionById(par, "grp").groupBy("grp")
+        .cogroup(joined.repartitionById(par, "s_grp").groupBy("s_grp"))
+        .applyInPandas(per_group_fn, schema=RESULTS_SCHEMA)
     )
+    if n_shards is None:
+        return local
     wm = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local.withColumn("rank", F.row_number().over(wm).cast("int"))

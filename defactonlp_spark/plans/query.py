@@ -92,6 +92,13 @@ class ServingSession:
     relation it prunes cached RDD partitions via in-memory batch stats
     instead of parquet footers. ``close()`` releases executor storage.
 
+    Each ``topk`` batch runs through :func:`wand_topk`: the claims are
+    tokenized once into a local checkpoint, hashed into about one kernel
+    group per core (``EngineConfig.serve_claims_per_batch`` caps a group's
+    claims), and every cached slice a group needs ships to it once. So a
+    batch costs one tokenize pass, one term probe and one kernel stage that
+    runs a task on every core.
+
     Scale note: MEMORY_AND_DISK distributes slices across the cluster's
     executor storage and spills cleanly when the index exceeds aggregate
     RAM (local disk on the executors — still orders faster than re-reading

@@ -285,6 +285,69 @@ def test_wand_kernel_matches_bruteforce_under_deletes(case_seed, block_size, k):
                                rtol=0, atol=1e-12)
 
 
+@given(_wand_case, st.integers(min_value=1, max_value=8))
+@settings(deadline=None, max_examples=60)
+def test_dense_group_kernel_matches_bruteforce(case_seed, k):
+    """The dense path of one kernel group ranks each claim either over its
+    own touched positions or over the whole group buffer, depending on its
+    posting count; both must give the brute-force top-k bit for bit, with
+    salted (multi-slice) terms and tombstones. Single-term claims take the
+    own-positions path, the all-terms claim the buffer scan."""
+    import pandas as pd
+
+    from defactonlp_spark.operators.wand import _batch_kernel
+
+    rng = np.random.default_rng(case_seed)
+    n_universe = int(rng.integers(5, 300))
+    n_terms = int(rng.integers(1, 6))
+    dls = rng.integers(1, 50, size=n_universe).astype(np.int64)
+    avgdl = float(dls.mean())
+    n_docs = n_universe + int(rng.integers(0, 20))
+    cfg = EngineConfig()
+
+    rows, term_posts = [], {}
+    for t in range(n_terms):
+        term = f"t{t:02d}"
+        sz = int(rng.integers(1, n_universe + 1))
+        ids = np.sort(rng.choice(n_universe, size=sz, replace=False)).astype(np.int64)
+        tfs = rng.integers(1, 6, size=sz).astype(np.int64)
+        term_posts[term] = (ids, tfs)
+        n_salts = int(rng.integers(1, 3))
+        for salt in range(n_salts):
+            m = ids % n_salts == salt
+            if m.any():
+                seg = encode_slice(ids[m], tfs[m], dls[ids[m]], term_df=sz,
+                                   n_docs=n_docs, avgdl=avgdl, cfg=cfg)
+                rows.append({**seg, "term": term, "salt": salt})
+    terms = sorted(term_posts)
+    claims = [(i, [t]) for i, t in enumerate(terms)]
+    claims.append((len(claims), terms))
+    for _ in range(3):
+        pick = rng.choice(terms, size=int(rng.integers(1, len(terms) + 1)), replace=False)
+        claims.append((len(claims), list(pick)))
+    dead = rng.choice(n_universe, size=int(rng.integers(0, n_universe // 3 + 1)), replace=False)
+    deletes = np.unique(dead.astype(np.int64))
+
+    got = _batch_kernel(pd.DataFrame(rows), claims, n_docs, avgdl, k, cfg.bm25,
+                        cfg.block_size, 10**12, deletes=deletes)
+
+    live = np.ones(n_universe, dtype=bool)
+    live[deletes] = False
+    for cid, cterms in claims:
+        acc = np.zeros(n_universe, dtype=np.float64)
+        seen = np.zeros(n_universe, dtype=bool)
+        for term in sorted(set(cterms)):  # ascending term order
+            ids, tfs = term_posts[term]
+            acc[ids] += bm25_contrib(tfs, dls[ids], float(idf(ids.size, n_docs)),
+                                     avgdl, cfg.bm25)
+            seen[ids] = True
+        cand = np.flatnonzero(seen & live)
+        order = np.lexsort((cand, -acc[cand]))[:k]
+        expect = [(int(cand[i]), float(acc[cand[i]])) for i in order]
+        mine = got[got["claim_id"] == cid].sort_values("rank")
+        assert list(zip(mine["doc_id"].tolist(), mine["score"].tolist())) == expect
+
+
 @given(st.lists(st.integers(min_value=0, max_value=(1 << 32) - 1),
                 min_size=1, max_size=50))
 @settings(max_examples=200, deadline=None)
