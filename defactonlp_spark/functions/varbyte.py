@@ -8,8 +8,9 @@ Format (pinned — on-disk contract for posting segments, SURVEY.md §2.B4):
 Both encode and decode are numpy-vectorized: encode places all j-th bytes of
 all values with one masked scatter per byte position (<=10 passes); decode
 reconstructs values with a single segmented reduce over bit-shifted
-contributions. No per-element Python loops — this is the hot kernel inside
-``applyInPandas`` during segment encode/decode.
+contributions. No per-element Python loops — this is the hot kernel of
+segment encode (which codes a whole Arrow batch of posting lists in one
+call, see ``vb_encode_parts``) and of every decode.
 
 Reference analog: DrQA persists its index as a scipy CSR ``.npz`` (dense
 int32/float arrays, no compression) — see SURVEY.md §1.1; delta+varbyte is
@@ -23,11 +24,14 @@ import numpy as np
 _MAX_BYTES = 10  # ceil(63 / 7)
 
 
-def vb_encode(values: np.ndarray) -> bytes:
-    """Encode a 1-D array of unsigned ints (< 2**63) to a VByte buffer."""
+def vb_encode_parts(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Encode a 1-D array of unsigned ints (< 2**63) -> (uint8 VByte stream,
+    int64 bytes per value).
+
+    Every value is coded on its own, so the stream of a concatenation is the
+    concatenation of the streams: a caller holding many lists encodes them
+    in one call and cuts each list's blob out by cumulative byte sizes."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
     if v.size and int(v.max()) >= (1 << 63):
         raise ValueError("vb_encode: values must be < 2**63")
     # bytes needed per value: 1 + number of 7-bit groups above the first
@@ -36,7 +40,7 @@ def vb_encode(values: np.ndarray) -> bytes:
         nbytes += (v >= np.uint64(1 << (7 * k))).astype(np.int64)
     ends = np.cumsum(nbytes)
     starts = ends - nbytes
-    out = np.empty(int(ends[-1]), dtype=np.uint8)
+    out = np.empty(int(ends[-1]) if v.size else 0, dtype=np.uint8)
     for j in range(_MAX_BYTES):
         sel = nbytes > j
         if not sel.any():
@@ -44,7 +48,12 @@ def vb_encode(values: np.ndarray) -> bytes:
         chunk = (v[sel] >> np.uint64(7 * j)) & np.uint64(0x7F)
         cont = (nbytes[sel] - 1 > j).astype(np.uint8) << 7
         out[starts[sel] + j] = chunk.astype(np.uint8) | cont
-    return out.tobytes()
+    return out, nbytes
+
+
+def vb_encode(values: np.ndarray) -> bytes:
+    """Encode a 1-D array of unsigned ints (< 2**63) to a VByte buffer."""
+    return vb_encode_parts(values)[0].tobytes()
 
 
 def vb_decode(buf: bytes | np.ndarray, n_values: int | None = None) -> np.ndarray:

@@ -150,6 +150,8 @@ def _power_iteration(
     uniformly (classic PageRank); a seed list teleports uniformly over the
     seeds (personalized). The teleport column ``tp`` is a codegen
     expression, not a join — seeds are an in-plan literal IN-list."""
+    if iters < 1:
+        raise ValueError(f"pagerank: iters must be >= 1, got {iters}")
     if weight_col is None:
         edges = edges.select("src", "dst", F.lit(1.0).alias("w"))
     else:
@@ -281,6 +283,8 @@ def hits(
     Same execution envelope as :func:`pagerank`: two shuffled join+agg
     per iteration, eager localCheckpoint every ``checkpoint_every``
     rounds. Returns (id, auth, hub) doubles, each side summing to 1."""
+    if iters < 1:
+        raise ValueError(f"hits: iters must be >= 1, got {iters}")
     ed = edges.select("src", "dst").persist()
     n_nodes = nodes.count()
     hub = nodes.withColumn("s", F.lit(1.0 / n_nodes))

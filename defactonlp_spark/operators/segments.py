@@ -20,12 +20,18 @@ Physical layout (one segment row per (term, salt) slice):
               BM25 contribution of any doc in the block, byte offsets of the
               block start in each blob.
 
-Encode runs inside ``mapInPandas`` AFTER ``repartitionByRange(term, salt)``
+Encode runs inside ``mapInArrow`` AFTER ``repartitionByRange(term, salt)``
 + ``sortWithinPartitions(term, salt, doc_id)`` — the exact physical plan the
 north star mandates. The kernel is a streaming group-by over the sorted
-Arrow batches (a term slice may span batch boundaries; a buffer carries the
-open group), so memory is bounded by one term-slice, which salting bounds in
-turn. All hot loops are numpy (varbyte kernels, score computation).
+Arrow batches: every complete (term, salt) run of a batch is encoded by ONE
+call of :func:`encode_runs` — whole-batch numpy passes for gaps, the three
+varbyte streams, block maxima and skip offsets, with the blob columns built
+zero-copy over the encoded streams — and the batch's segment rows leave as
+one Arrow record batch. There is no per-slice loop; a run that continues
+past the batch end is carried into the next batch, so memory is bounded by
+one batch plus one term-slice, which salting bounds in turn. There is one
+encoder: :func:`encode_slice` (used by the merge kernel) is a one-run call
+of the same function, so the on-disk format has a single writer.
 
 Reference analog: DrQA's CSR ``.npz`` is a single non-compressed in-memory
 matrix (SURVEY.md §1.3); segments are its distributed, compressed,
@@ -38,12 +44,15 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from defactonlp_spark.config import BM25Params, EngineConfig
-from defactonlp_spark.functions.varbyte import delta_encode, vb_decode, vb_encode
+from defactonlp_spark.functions.varbyte import vb_decode, vb_encode_parts
 
 BLOCKMAX_T = T.ArrayType(
     T.StructType(
@@ -85,12 +94,103 @@ def bm25_contrib(tf, dl, idf_t, avgdl, p: BM25Params):
     return idf_t * tf * (p.k1 + 1.0) / (tf + p.k1 * (1.0 - p.b + p.b * dl / avgdl))
 
 
-def _vb_sizes(values: np.ndarray) -> np.ndarray:
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    nbytes = np.ones(v.size, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += (v >= np.uint64(1 << (7 * k))).astype(np.int64)
-    return nbytes
+#: SEGMENT_SCHEMA as Arrow: the record batches encode_segments emits
+SEGMENT_ARROW = to_arrow_schema(SEGMENT_SCHEMA)
+_BLOCKMAX_ARROW = SEGMENT_ARROW.field("blockmax").type
+_ENCODED_COLS = SEGMENT_ARROW.names[2:]  # df .. blockmax, one value per run
+
+
+def _binary_array(stream: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """Zero-copy binary column over one byte stream; row i is
+    ``stream[offsets[i]:offsets[i + 1]]``."""
+    if stream.size >= 1 << 31:
+        raise ValueError(
+            "encode_runs: a batch's blob stream exceeds the 2 GiB binary "
+            "column limit (raise n_salts to split the slice)"
+        )
+    return pa.Array.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(stream)],
+    )
+
+
+def encode_runs(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    run_starts: np.ndarray,
+    run_df: np.ndarray,
+    n_docs: int,
+    avgdl: float,
+    cfg: EngineConfig,
+) -> list[pa.Array]:
+    """THE segment encoder: consecutive sorted runs -> the segment columns
+    ``df .. blockmax``, one row per run. Run i covers rows
+    ``[run_starts[i], run_starts[i + 1])``; the last run ends at the end of
+    the arrays; ``run_df[i]`` is its term's full df.
+
+    Whole-array passes, no per-run loop. Varbyte codes every value on its
+    own, so each stream (gaps, tfs, dls) is encoded once and each run's blob
+    is a byte range of it; block maxima are one ``maximum.reduceat`` over
+    the global block starts.
+    """
+    doc = np.ascontiguousarray(doc_ids, dtype=np.int64)
+    rs = np.asarray(run_starts, dtype=np.int64)
+    lens = np.diff(rs, append=doc.size)
+    if rs.size == 0 or rs[0] != 0 or (lens <= 0).any():
+        raise ValueError("encode_runs: runs must tile the arrays, each non-empty")
+    # delta gaps restart at every run: its first gap is its absolute doc id
+    gaps = np.empty(doc.size, dtype=np.int64)
+    np.subtract(doc[1:], doc[:-1], out=gaps[1:])
+    gaps[rs] = doc[rs]
+    if gaps.min() < 0:
+        raise ValueError("encode_runs: doc ids must ascend within a run and be >= 0")
+    tfs = np.ascontiguousarray(tfs, dtype=np.uint64)
+    dls = np.ascontiguousarray(dls, dtype=np.uint64)
+
+    # idf through the scalar call, once per distinct df, then broadcast:
+    # np.log1p over an array may take a SIMD loop that rounds differently,
+    # and block maxima must be the exact max of the served contributions
+    run_df = np.asarray(run_df, dtype=np.int64)
+    uniq, inv = np.unique(run_df, return_inverse=True)
+    run_idf = np.array([float(idf(int(d), n_docs)) for d in uniq])[inv]
+    scores = bm25_contrib(tfs, dls, np.repeat(run_idf, lens), avgdl, cfg.bm25)
+
+    B = cfg.block_size
+    run_blocks = -(-lens // B)
+    run_first_block = np.cumsum(run_blocks) - run_blocks
+    blk_run = np.repeat(np.arange(rs.size), run_blocks)
+    blk_start = rs[blk_run] + (np.arange(blk_run.size) - run_first_block[blk_run]) * B
+    blk_end = np.minimum(blk_start + B, (rs + lens)[blk_run])
+
+    blobs, blk_offs = [], []
+    n_bytes = np.zeros(rs.size, dtype=np.int64)
+    for vals in (gaps, tfs, dls):
+        stream, sizes = vb_encode_parts(vals)
+        before = np.cumsum(sizes) - sizes  # stream offset of each value
+        run_off = np.append(before[rs], stream.size)
+        blobs.append(_binary_array(stream, run_off))
+        blk_offs.append(pa.array((before[blk_start] - before[rs][blk_run]).astype(np.int32)))
+        n_bytes += np.diff(run_off)
+
+    blocks = pa.StructArray.from_arrays(
+        [pa.array(doc[blk_end - 1]), pa.array(np.maximum.reduceat(scores, blk_start)), *blk_offs],
+        fields=list(_BLOCKMAX_ARROW.value_type),
+    )
+    blockmax = pa.ListArray.from_arrays(
+        pa.array(np.append(run_first_block, blk_run.size).astype(np.int32)),
+        blocks,
+        type=_BLOCKMAX_ARROW,
+    )
+    return [
+        pa.array(run_df),
+        pa.array(lens),
+        # blob bytes as a plain column so build metrics scan ints, not blobs
+        pa.array(n_bytes),
+        pa.array(run_blocks.astype(np.int32)),
+        *blobs,
+        blockmax,
+    ]
 
 
 def encode_slice(
@@ -102,49 +202,11 @@ def encode_slice(
     avgdl: float,
     cfg: EngineConfig,
 ) -> dict:
-    """Encode one sorted (term, salt) slice to a segment-row dict."""
-    n = int(doc_ids.size)
-    B = cfg.block_size
-    gaps = delta_encode(doc_ids, base=0).astype(np.uint64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.uint64)
-    dls = np.ascontiguousarray(dls, dtype=np.uint64)
-    scores = bm25_contrib(tfs, dls, float(idf(term_df, n_docs)), avgdl, cfg.bm25)
-
-    starts = np.arange(0, n, B, dtype=np.int64)
-    n_blocks = int(starts.size)
-    d_sz, t_sz, l_sz = (np.cumsum(_vb_sizes(a)) for a in (gaps, tfs, dls))
-
-    def offs(csz: np.ndarray) -> np.ndarray:
-        o = np.zeros(n_blocks, dtype=np.int64)
-        o[1:] = csz[starts[1:] - 1]
-        return o
-
-    d_off, t_off, l_off = offs(d_sz), offs(t_sz), offs(l_sz)
-    ends = np.minimum(starts + B, n)
-    last_ids = doc_ids[ends - 1]
-    max_scores = np.maximum.reduceat(scores, starts)
-    blockmax = [
-        {
-            "last_doc_id": int(last_ids[k]),
-            "max_score": float(max_scores[k]),
-            "doc_off": int(d_off[k]),
-            "tf_off": int(t_off[k]),
-            "dl_off": int(l_off[k]),
-        }
-        for k in range(n_blocks)
-    ]
-    docs_blob, tfs_blob, dls_blob = vb_encode(gaps), vb_encode(tfs), vb_encode(dls)
-    return {
-        "df": int(term_df),
-        "n": n,
-        # blob bytes as a plain column so build metrics scan ints, not blobs
-        "n_bytes": len(docs_blob) + len(tfs_blob) + len(dls_blob),
-        "n_blocks": n_blocks,
-        "docs_blob": docs_blob,
-        "tfs_blob": tfs_blob,
-        "dls_blob": dls_blob,
-        "blockmax": blockmax,
-    }
+    """Encode one sorted (term, salt) slice to a segment-row dict: a
+    one-run call of :func:`encode_runs`."""
+    cols = encode_runs(doc_ids, tfs, dls, np.zeros(1, dtype=np.int64),
+                       np.array([term_df]), n_docs, avgdl, cfg)
+    return {name: col[0].as_py() for name, col in zip(_ENCODED_COLS, cols)}
 
 
 def decode_slice(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -156,6 +218,27 @@ def decode_slice(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     tfs = vb_decode(get("tfs_blob"), n).astype(np.int64)
     dls = vb_decode(get("dls_blob"), n).astype(np.int64)
     return doc_ids, tfs, dls
+
+
+def _run_starts(batch: pa.RecordBatch) -> np.ndarray:
+    """Row index of each (term, salt) run start in a batch sorted by
+    (term, salt, doc_id)."""
+    term, salt = batch.column("term"), batch.column("salt")
+    change = np.ones(batch.num_rows, dtype=bool)
+    if batch.num_rows > 1:
+        diff = pc.or_(pc.not_equal(term[1:], term[:-1]), pc.not_equal(salt[1:], salt[:-1]))
+        change[1:] = diff.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change)
+
+
+def _key(batch: pa.RecordBatch, row: int) -> tuple:
+    return batch.column("term")[row].as_py(), batch.column("salt")[row].as_py()
+
+
+def _concat(batches: list[pa.RecordBatch]) -> pa.RecordBatch:
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
 
 
 def encode_segments(
@@ -170,7 +253,14 @@ def encode_segments(
 
     Physical plan: broadcast-join full-term df -> repartitionByRange(term,
     salt) [THE big shuffle, skew-managed by salt] -> sortWithinPartitions
-    (term, salt, doc_id) -> streaming mapInPandas encode.
+    (term, salt, doc_id) -> streaming mapInArrow encode.
+
+    Each Arrow batch is encoded whole: every complete (term, salt) run in it
+    goes through one :func:`encode_runs` call and leaves as one record
+    batch, so the cost is a handful of numpy passes per batch, not per
+    slice (a tail-term range holds thousands of few-posting slices). The
+    last run of a batch may continue into the next one; it is carried over
+    and encoded with that batch.
     """
     P = n_partitions or cfg.n_buckets
     joined = salted_postings.join(F.broadcast(stats_df), "term", "inner")
@@ -178,61 +268,39 @@ def encode_segments(
         "term", "salt", "doc_id"
     )
 
-    def encode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[pd.DataFrame] = []
+    def encode_batch(batch: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+        col = batch.column
+        cols = encode_runs(
+            col("doc_id").to_numpy(), col("tf").to_numpy(), col("dl").to_numpy(),
+            starts, col("df").to_numpy()[starts], n_docs, avgdl, cfg,
+        )
+        keys = [col("term").take(starts).cast(pa.string()),
+                col("salt").take(starts).cast(pa.int32())]
+        return pa.RecordBatch.from_arrays(keys + cols, schema=SEGMENT_ARROW)
 
-        def flush(pdf: pd.DataFrame, complete_only: bool):
-            # input is sorted by (term, salt, doc_id), so groups are
-            # contiguous RUNS: detect boundaries on numpy arrays once and
-            # encode array views — the pandas groupby built a frame per
-            # group and re-converted each column (measured ~2x the whole
-            # kernel's cost on realistic batches)
-            terms = pdf["term"].to_numpy(object)
-            salts = pdf["salt"].to_numpy(np.int64)
-            n_rows = len(pdf)
-            change = np.empty(n_rows, dtype=bool)
-            change[0] = True
-            np.not_equal(terms[1:], terms[:-1], out=change[1:])
-            change[1:] |= salts[1:] != salts[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.append(starts[1:], n_rows)
-            doc = pdf["doc_id"].to_numpy(np.int64)
-            tf = pdf["tf"].to_numpy(np.int64)
-            dl = pdf["dl"].to_numpy(np.int64)
-            dfreq = pdf["df"].to_numpy(np.int64)
-            rows = []
-            tail = None
-            for s, e in zip(starts, ends):
-                if complete_only and e == n_rows:
-                    tail = pdf.iloc[s:]  # open group: may continue next batch
-                    break
-                rows.append(
-                    {
-                        "term": terms[s],
-                        "salt": int(salts[s]),
-                        **encode_slice(
-                            doc[s:e], tf[s:e], dl[s:e], int(dfreq[s]),
-                            n_docs, avgdl, cfg,
-                        ),
-                    }
-                )
-            return rows, tail
-
-        for pdf in batches:
-            if pdf.empty:
+    def encode_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # batches holding the open run, which may continue in the next batch;
+        # concatenated once when the run closes, so a slice spanning many
+        # batches is copied once, not once per batch
+        carry: list[pa.RecordBatch] = []
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            buf.append(pdf)
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            rows, tail = flush(whole, complete_only=True)
-            buf = [tail] if tail is not None else []
-            if rows:
-                yield pd.DataFrame(rows)
-        if buf:
-            rows, _ = flush(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0], complete_only=False)
-            if rows:
-                yield pd.DataFrame(rows)
+            starts = _run_starts(batch)
+            if carry and starts.size == 1 and _key(carry[-1], -1) == _key(batch, 0):
+                carry.append(batch)
+                continue
+            if carry:
+                batch = _concat(carry + [batch])
+                starts = _run_starts(batch)
+            last = int(starts[-1])
+            if last:
+                yield encode_batch(batch.slice(0, last), starts[:-1])
+            carry = [batch.slice(last)]
+        if carry:
+            yield encode_batch(_concat(carry), np.zeros(1, dtype=np.int64))
 
-    return arranged.mapInPandas(encode_iter, schema=SEGMENT_SCHEMA)
+    return arranged.mapInArrow(encode_iter, schema=SEGMENT_SCHEMA)
 
 
 def merge_segments(

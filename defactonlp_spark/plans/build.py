@@ -59,6 +59,21 @@ METRICS_COLS = (
 )
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A short list of tuples -> DataFrame through pandas; columns bind by
+    position to the flat DDL ``schema``.
+
+    With Arrow on (the session default) the frame is an Arrow local
+    relation, so writing it starts no Python worker. A tuple list would
+    become a Python RDD job and fork a worker pool just for a few
+    bookkeeping rows. Bare sessions without Arrow take pyspark's row
+    fallback and get the same column types."""
+    import pandas as pd
+
+    names = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
+
+
 def _parquet_rows(path: str) -> int:
     """Row count from parquet footers — no Spark job."""
     import pyarrow.parquet as pq
@@ -129,7 +144,7 @@ def bucket_boundaries(stats: DataFrame, n_buckets: int, n_terms_hint: int | None
     for r in partials:
         offsets.append((r["_pid"], off))
         off += int(r["psum"])
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+    off_df = local_frame(spark, offsets, "_pid int, _off long")
 
     w = Window.partitionBy("_pid").orderBy("term").rowsBetween(Window.unboundedPreceding, 0)
     cum = (
@@ -431,8 +446,8 @@ class IndexBuild:
                 m_rows.append(
                     (self.build_id, b, rows / (share / 1000.0), rows, nbytes, share, time.time())
                 )
-            self.checkpoints.append(spark.createDataFrame(ck_rows, CHECKPOINT_COLS))
-            self.metrics.append(spark.createDataFrame(m_rows, METRICS_COLS))
+            self.checkpoints.append(local_frame(spark, ck_rows, CHECKPOINT_COLS))
+            self.metrics.append(local_frame(spark, m_rows, METRICS_COLS))
             committed += 1
             if fail_after_groups is not None and committed >= fail_after_groups:
                 raise RuntimeError(f"injected failure after {committed} group commits")
@@ -454,7 +469,7 @@ class IndexBuild:
             "wall_s": time.time() - t0,
         }
         self.manifest.overwrite(
-            spark.createDataFrame([(self.build_id,)], "build_id string"), properties=props
+            local_frame(spark, [(self.build_id,)], "build_id string"), properties=props
         )
         return props
 
@@ -472,7 +487,7 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids, note: str | None = N
     ints (driver-sized convenience path).
     """
     if not isinstance(doc_ids, DataFrame):
-        doc_ids = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
+        doc_ids = local_frame(spark, [(int(d),) for d in doc_ids], "doc_id long")
     tbl = LocalTable(os.path.join(out_dir, "deletes"))
     props = {"operation": "delete"}
     if note:
@@ -644,7 +659,7 @@ def merge_builds(
         "wall_s": time.time() - t0,
     }
     LocalTable(os.path.join(dest_dir, "manifest")).overwrite(
-        spark.createDataFrame([("merge",)], "build_id string"), properties=props
+        local_frame(spark, [("merge",)], "build_id string"), properties=props
     )
     if live is not None:
         live.unpersist()

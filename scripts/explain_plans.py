@@ -91,7 +91,8 @@ def main():
         must=["BroadcastHashJoin", "HashAggregate", "WindowGroupLimit"],
     )
 
-    # 4. the build shuffle: exactly one range exchange keyed (term, salt)
+    # 4. the build shuffle: exactly one range exchange keyed (term, salt),
+    # feeding one MapInArrow encode
     cfg = EngineConfig(n_buckets=8)
     salted = P.with_salt(postings, P.salt_plan(stats, 500, cfg))
     seg = encode_segments(salted, stats, 500, 56.0, cfg, 8)
@@ -100,6 +101,15 @@ def main():
     print(f"== build shuffle ==\n  [x] rangepartitioning exchanges: {n_range} (want 1)")
     ok &= n_range == 1
     ok &= check("build shuffle broadcast salt plan", plan, must=["BroadcastHashJoin", "Sort"])
+    # the encode is ONE whole-batch MapInArrow node straight on the sorted
+    # range shuffle: no second exchange between it and the output (the
+    # operator tree is printed root first, so "above" = after it)
+    tree = plan.split("\n\n", 1)[0]
+    n_encode = tree.count("MapInArrow")
+    above = tree.split("MapInArrow", 1)[0]
+    print(f"  [{'x' if n_encode == 1 else '!'}] MapInArrow encode nodes: {n_encode} (want 1)")
+    print(f"  [{'x' if 'Exchange' not in above else '!'}] no exchange after the encode")
+    ok &= n_encode == 1 and "Exchange" not in above
 
     # 5. segment scan pruning by query terms
     seg.write.mode("overwrite").parquet("/tmp/plan_seg")

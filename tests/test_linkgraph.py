@@ -150,6 +150,28 @@ def test_hits_edgeless_all_zero(spark):
     assert (r.auth == 0.0).all() and (r.hub == 0.0).all()
 
 
+@pytest.mark.parametrize("iters", [0, -1])
+def test_hits_rejects_no_iterations(spark, iters):
+    from defactonlp_spark.operators.linkgraph import hits
+
+    nodes = spark.createDataFrame([(0,), (1,)], "id long")
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    with pytest.raises(ValueError, match="iters"):
+        hits(nodes, edges, iters=iters)
+
+
+@pytest.mark.parametrize("iters", [0, -1])
+def test_pagerank_rejects_no_iterations(spark, iters):
+    from defactonlp_spark.operators.linkgraph import personalized_pagerank
+
+    nodes = spark.createDataFrame([(0,), (1,)], "id long")
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    with pytest.raises(ValueError, match="iters"):
+        pagerank(nodes, edges, 2, iters=iters)
+    with pytest.raises(ValueError, match="iters"):
+        personalized_pagerank(nodes, edges, 2, [0], iters=iters)
+
+
 def test_link_hits_entry(spark, docs):
     from defactonlp_spark.operators.linkgraph import link_hits_topn
 
