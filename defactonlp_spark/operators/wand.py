@@ -38,7 +38,7 @@ import heapq
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -399,6 +399,24 @@ def _batch_kernel(
     )
 
 
+def term_in(terms: list[str]) -> Column:
+    """``term IN ('t1', 't2', ...)`` as ONE parsed expression.
+
+    ``F.col("term").isin(terms)`` makes one py4j call per literal (about
+    0.4 ms each on a 4-core host; 7-9 s for 20,000 terms); this is one. The
+    parser yields the same ``In`` predicate (``InSet`` past the optimizer's
+    10-value threshold), so parquet pushdown is unchanged
+    (``PushedFilters: [In(term, ...``). Literals escape backslash and quote
+    for the default ``spark.sql.parser.escapedStringLiterals=false``. An
+    empty list is ``False`` (``IN ()`` does not parse)."""
+    if not terms:
+        return F.lit(False)
+    lits = ", ".join(
+        "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'" for t in terms
+    )
+    return F.expr(f"term IN ({lits})")
+
+
 def wand_topk(
     segments: DataFrame,
     qterms: DataFrame,
@@ -435,9 +453,10 @@ def wand_topk(
        claim sets get groups of bounded size. A claim's score never depends
        on its group, so results do not either;
     2. the segment scan is pruned to the query's DISTINCT terms — collected
-       for an `isin` pushdown (parquet row-group stats apply; the distinct
-       term count is vocabulary-bounded by Heaps' law, NOT |claims|-bounded)
-       when small, a term semi-join beyond ``cfg.isin_pushdown_max_terms``;
+       for an ``IN``-list pushdown (:func:`term_in`; parquet row-group stats
+       apply; the distinct term count is vocabulary-bounded by Heaps' law,
+       NOT |claims|-bounded) when small, a term semi-join beyond
+       ``cfg.isin_pushdown_max_terms``;
     3. slices join (group, term) so each blob ships ONCE PER GROUP (not per
        claim — claims share Zipf-head terms, so per-claim gathering
        multiplies the heaviest blobs by |claims|; measured 9x). The join is
@@ -490,7 +509,7 @@ def wand_topk(
             bks = term_buckets(terms)
             if bks:
                 pruned = segments.filter(F.col("bucket").isin(bks))
-        hits = pruned.filter(F.col("term").isin(terms))
+        hits = pruned.filter(term_in(terms))
     else:
         # huge term sets (claims >> vocabulary probe cap): semi-join instead
         # of isin. With the bucket-partitioned layout, joining on (bucket,

@@ -27,7 +27,7 @@ from defactonlp_spark.operators.bm25 import (
     score_exhaustive,
 )
 from defactonlp_spark.operators.segments import decode_slice
-from defactonlp_spark.operators.wand import wand_topk
+from defactonlp_spark.operators.wand import term_in, wand_topk
 from defactonlp_spark.plans.build import IndexReader
 
 DECODED_SCHEMA = T.StructType(
@@ -154,7 +154,7 @@ def _pruned_postings(reader: IndexReader, q: DataFrame):
     bks = reader.buckets_for_terms(terms)
     if bks and "bucket" in seg.columns:
         seg = seg.filter(F.col("bucket").isin(bks))
-    hits = seg.filter(F.col("term").isin(terms))
+    hits = seg.filter(term_in(terms))
     # full-term df is carried on every slice; one row per (term) suffices
     stats = hits.groupBy("term").agg(F.first("df").alias("df"))
     postings = decode_segments(hits)
@@ -199,7 +199,7 @@ def query_lm_dirichlet(
         terms = [r["term"] for r in q.select("term").distinct().collect()]
         cstats = (
             reader.postings()
-            .filter(F.col("term").isin(terms))
+            .filter(term_in(terms))
             .groupBy("term")
             .agg(F.sum("tf").cast("long").alias("ctf"))
         )
@@ -315,7 +315,7 @@ def query_phrase(
     bks = reader.buckets_for_terms(terms)
     if bks and "bucket" in toks.columns:
         toks = toks.filter(F.col("bucket").isin(bks))
-    toks = toks.filter(F.col("term").isin(terms))
+    toks = toks.filter(term_in(terms))
 
     return score_phrase(
         postings, stats, toks, phrases, reader.n_docs, reader.avgdl,

@@ -146,6 +146,17 @@ def main():
         plan_of(query_wand(reader, claims2, k=5, cfg=cfg)),
         must=["PartitionFilters: [bucket", "PushedFilters: [In(term"],
     )
+    # past 10 terms the optimizer turns the IN list into InSet; the scan
+    # must still push it down
+    claims12 = spark.createDataFrame(
+        [(0, "the merge join of twelve distinct words keeps pruning every segment file")],
+        "claim_id long, claim string",
+    )
+    ok &= check(
+        "query_wand scan, >10 terms (InSet)",
+        plan_of(query_wand(reader, claims12, k=5, cfg=cfg)),
+        must=["PartitionFilters: [bucket", "PushedFilters: [In(term", "INSET"],
+    )
 
     # 7. phrase serving: the positional-sidecar scan prunes files (bucket)
     # and row groups (term) exactly like the segment scan
