@@ -71,7 +71,9 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
 # 1. decode as in extract_text_one (undecodable page -> no links),
 # 2. take every <a ...> tag's href attribute value (case-insensitive tag
 #    and attribute, single/double/no quotes), BEFORE any block stripping —
-#    nav/header links are links,
+#    nav/header links are links; the tag's other attributes are stepped
+#    over whole, so "href=" inside another attribute's value (title="see
+#    href=x") or a longer name (data-href) is not an href,
 # 3. entity-unescape the value (&amp; in query strings),
 # 4. drop fragment-only ('#...'), javascript:, mailto:, data: targets,
 # 5. resolve relative targets against the page url (urljoin semantics),
@@ -79,10 +81,16 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
 #    is a SEPARATE, composable step (functions/urls.py::url_canonical_col),
 # 6. de-duplicate per page, preserving first-occurrence order.
 
-_HREF_RE = re.compile(
-    r"""<a\b[^>]*?\bhref\s*=\s*("([^"]*)"|'([^']*)'|([^\s>]+))""",
-    re.IGNORECASE | re.DOTALL,
+# One attribute: separator (whitespace or "/", or nothing right after a
+# quoted value), name, optional value. The attribute loops are possessive,
+# so a tag without an href fails in one left-to-right pass.
+_ATTR_SEP = r"""(?:[\s/]+|(?<=["']))"""
+_ATTR = r"""[^\s"'>/=]+(?:\s*=\s*(?:"[^"]*"|'[^']*'|[^\s"'>]+))?"""
+_A_HREF = (
+    r"<a(?:" + _ATTR_SEP + r"(?!href\s*=)" + _ATTR + r")*+" + _ATTR_SEP
+    + r"""href\s*=\s*("([^"]*)"|'([^']*)'|([^\s>]+))"""
 )
+_HREF_RE = re.compile(_A_HREF, re.IGNORECASE | re.DOTALL)
 _SKIP_SCHEME_RE = re.compile(r"^(javascript|mailto|data):", re.IGNORECASE)
 
 
@@ -121,7 +129,7 @@ def extract_links_udf(html: pd.Series, url: pd.Series) -> pd.Series:  # pragma: 
 
 
 _ANCHOR_RE = re.compile(
-    r"""<a\b[^>]*?\bhref\s*=\s*("([^"]*)"|'([^']*)'|([^\s>]+))[^>]*>(.*?)</a\s*>""",
+    _A_HREF + r"(?:" + _ATTR_SEP + _ATTR + r""")*+[^>]*>(.*?)</a\s*>""",
     re.IGNORECASE | re.DOTALL,
 )
 

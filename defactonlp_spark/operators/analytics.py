@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from defactonlp_spark.operators.bm25 import topk
 from defactonlp_spark.operators.dedup import tokens_col
 
 
@@ -121,11 +122,9 @@ def doc_keywords(
             6,
         ),
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("weight"), F.asc("term"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("doc_id", F.col("rn").alias("rank"), "term", "weight")
+    return topk(
+        scored, k, None, cols=("doc_id", "rank", "term", "weight"), key="weight",
+        part="doc_id", tie="term",
     )
 
 
@@ -232,16 +231,11 @@ def facet_top_hits(
     but its INPUT is the scored relation, which at web scale is already
     bounded by the caller (feed the top-k or a match-capped relation, not
     the raw corpus)."""
-    w = Window.partitionBy("claim_id", facet_col).orderBy(
-        F.desc("score"), F.asc("doc_id")
+    hits = scored.select("claim_id", "doc_id", "score").join(
+        doc_attrs.select("doc_id", facet_col), "doc_id"
     )
-    return (
-        scored.select("claim_id", "doc_id", "score")
-        .join(doc_attrs.select("doc_id", facet_col), "doc_id")
-        .withColumn("hit_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("hit_rank") <= n_hits)
-        .select("claim_id", facet_col, "hit_rank", "doc_id", "score")
-    )
+    cols = ("claim_id", facet_col, F.col("rank").alias("hit_rank"), "doc_id", "score")
+    return topk(hits, n_hits, None, cols=cols, part=["claim_id", facet_col])
 
 
 def rrf_fuse(
@@ -275,12 +269,7 @@ def rrf_fuse(
     fused = allp.groupBy("claim_id", "doc_id").agg(
         F.round(F.sum("c"), 9).alias("rrf")
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "rrf")
-    )
+    return topk(fused, k, None, cols=("claim_id", "rank", "doc_id", "rrf"), key="rrf")
 
 
 def significant_terms(
@@ -335,16 +324,12 @@ def significant_terms(
         .filter(F.col("fgp") > F.col("bgp"))
         .withColumn("jlh", (F.col("fgp") - F.col("bgp")) * (F.col("fgp") / F.col("bgp")))
     )
-    w = Window.partitionBy("claim_id").orderBy(F.round("jlh", 6).desc(), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "claim_id", "rank", "term", "fg_count",
-            F.col("df").cast("long").alias("bg_count"),
-            F.round("jlh", 6).alias("jlh"),
-        )
+    cols = (
+        "claim_id", "rank", "term", "fg_count",
+        F.col("df").cast("long").alias("bg_count"),
+        F.round("jlh", 6).alias("jlh"),
     )
+    return topk(scored, k, 6, cols=cols, key="jlh", tie="term")
 
 
 def value_histogram(
@@ -853,19 +838,8 @@ def bigram_completion(
         (F.col("w1") == F.col("first")) & F.col("w2").startswith(F.col("prefix")),
         "inner",
     )
-    w = Window.partitionBy("sugg_id").orderBy(
-        F.desc("n_occurrences"), F.asc("w2")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "sugg_id",
-            "rank",
-            F.concat_ws(" ", "w1", "w2").alias("completion"),
-            "n_occurrences",
-        )
-    )
+    cols = ("sugg_id", "rank", F.concat_ws(" ", "w1", "w2").alias("completion"), "n_occurrences")
+    return topk(cand, k, None, cols=cols, key="n_occurrences", part="sugg_id", tie="w2")
 
 
 # ---------------------------------------------------------------------------
@@ -1382,16 +1356,9 @@ def frequent_item_sets(
     """
     sup1 = items.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("s1"))
     l1 = sup1.filter(F.col("s1") >= min_support)
-    capped = (
-        items.join(F.broadcast(l1), "item", "inner")
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.desc("s1"), F.asc("item"))
-            ),
-        )
-        .filter(F.col("_rk") <= per_doc_cap)
-        .select("doc_id", "item")
+    capped = topk(
+        items.join(F.broadcast(l1), "item", "inner"), per_doc_cap, None,
+        cols=("doc_id", "item"), key="s1", part="doc_id", tie="item",
     )
     out_parts = [
         l1.select(

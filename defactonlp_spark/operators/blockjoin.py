@@ -25,8 +25,10 @@ fan-out happens AFTER the selective side is reduced.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from defactonlp_spark.operators.bm25 import topk
 
 _SCORE_MODES = {
     "max": F.max,
@@ -76,12 +78,9 @@ def score_has_child(
     )
     if max_children is not None:
         parents = parents.filter(F.col("n_children") <= max_children)
-    rank_key = F.col("score") if rank_dp is None else F.round("score", rank_dp)
-    w = Window.partitionBy(claim_col).orderBy(rank_key.desc(), F.asc("parent_id"))
-    return (
-        parents.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(claim_col, "rank", "parent_id", "score", "n_children")
+    return topk(
+        parents, k, rank_dp, cols=(claim_col, "rank", "parent_id", "score", "n_children"),
+        part=claim_col, tie="parent_id",
     )
 
 

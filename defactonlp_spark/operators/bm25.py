@@ -10,7 +10,13 @@ Pinned query semantics (must match WAND and the pytest numpy oracle):
 
 This path is pure DataFrame algebra (broadcast join + hash aggregate +
 window top-k) — Catalyst handles partial aggregation and the small query
-side is broadcast, so the only full pass is the postings scan.
+side is broadcast, so the only full pass is the postings scan. That plan
+is written once: :func:`score_terms` (scan + broadcast + aggregate) and
+:func:`topk` (the per-claim window). Every postings scorer in the engine
+(BM25 variants here, the Lucene similarity families in ``lm.py``, the
+weighted/RM3 pass in ``expansion.py``) is a ``contrib`` column expression
+over the joined (term, doc_id, tf, dl, <query-side stats>) row plus
+whatever it does between those two calls.
 
 Reference analog (public, file-level): DrQA
 ``drqa/retriever/tfidf_doc_ranker.py::closest_docs`` — sparse dot product
@@ -50,6 +56,54 @@ def bm25_score_expr(n_docs: int, avgdl: float, p: BM25Params):
     return idf * tf * F.lit(p.k1 + 1.0) / denom
 
 
+def score_terms(postings: DataFrame, q: DataFrame, contrib, *aggs) -> DataFrame:
+    """The scoring plan every postings scorer shares: broadcast the query
+    side ``q`` — (claim_id, term, per-term stats) — onto the postings scan,
+    evaluate ``contrib`` (a column expression over the joined row) per
+    posting, and hash-aggregate on (claim_id, doc_id) into
+    ``score = sum(contrib)`` plus any extra aggregate columns in ``aggs``
+    (which may read the ``contrib`` column).
+
+    Plan: the query side is tiny and broadcast, so the join prunes the
+    postings scan to the queried terms and the contribution runs inside
+    whole-stage codegen; the aggregate is partial+final. One wide scan, one
+    narrow shuffle.
+    """
+    return (
+        postings.join(F.broadcast(q), "term", "inner")
+        .withColumn("contrib", contrib)
+        .groupBy("claim_id", "doc_id")
+        .agg(F.sum("contrib").alias("score"), *aggs)
+    )
+
+
+def topk(
+    scored: DataFrame,
+    k: int,
+    dp: int | None,
+    cols=("claim_id", "rank", "doc_id", "score"),
+    key: str = "score",
+    part="claim_id",
+    tie: str = "doc_id",
+) -> DataFrame:
+    """Per-group top-k: ``rank`` = row_number over ``part`` (a column name
+    or a list of them) ordered by ``key`` desc then ``tie`` asc; keep
+    ``rank <= k`` and select ``cols``.
+
+    ``dp`` has no default on purpose: with ``dp`` set the window ranks on
+    ``round(key, dp)`` so mathematically tied rows order by ``tie`` instead
+    of last-ulp summation noise (the rule every rounded-twin scorer pins);
+    ``None`` ranks on the raw value. Each caller states which it uses.
+    """
+    rank_key = F.col(key) if dp is None else F.round(key, dp)
+    w = Window.partitionBy(part).orderBy(rank_key.desc(), F.asc(tie))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
 def score_all(
     postings: DataFrame,
     stats: DataFrame,
@@ -63,18 +117,9 @@ def score_all(
     over ALL matches instead of taking a top-k (block join's has_child
     aggregates child scores per parent; truncating first would change the
     parent score for score_mode in {sum, avg, min}).
-
-    Plan: broadcast the (tiny) query-term table and per-term df onto the
-    postings scan -> contribution expr (whole-stage codegen) -> hash agg on
-    (claim_id, doc_id). One wide scan, one narrow shuffle.
     """
     q = qterms.join(stats, "term", "inner")  # (claim_id, term, df)
-    return (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
+    return score_terms(postings, q, bm25_score_expr(n_docs, avgdl, params))
 
 
 def score_exhaustive(
@@ -91,17 +136,11 @@ def score_exhaustive(
 
     :func:`score_all` (one scan + one shuffle) followed by a window top-k.
     """
-    scored = score_all(postings, stats, qterms, n_docs, avgdl, params)
     # rank_dp: rank on round(score, rank_dp) so mathematically-tied docs
     # order by doc_id instead of engine summation noise (RM3's fb-doc
     # cutoff needs this; None preserves the raw contract everywhere else)
-    rank_key = F.col("score") if rank_dp is None else F.round("score", rank_dp)
-    w = Window.partitionBy("claim_id").orderBy(rank_key.desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_all(postings, stats, qterms, n_docs, avgdl, params), k, rank_dp)
+
 
 def score_dismax(
     postings: DataFrame,
@@ -125,28 +164,14 @@ def score_dismax(
     BM25 sum of :func:`score_exhaustive`. Returns
     (claim_id, rank, doc_id, score).
 
-    Plan: identical single postings scan + broadcast term join as
-    :func:`score_exhaustive`; max and sum ride the SAME hash aggregate, so
-    dis_max costs exactly one extra agg column over the plain scorer.
+    Plan: :func:`score_terms` with the max as one extra aggregate column.
     """
     tb = float(tie_breaker)
     q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            (
-                F.max("contrib") + F.lit(tb) * (F.sum("contrib") - F.max("contrib"))
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    scored = score_terms(
+        postings, q, bm25_score_expr(n_docs, avgdl, params), F.max("contrib").alias("_max")
+    ).withColumn("score", F.col("_max") + F.lit(tb) * (F.col("score") - F.col("_max")))
+    return topk(scored, k, None)
 
 
 def score_conjunctive(
@@ -164,36 +189,24 @@ def score_conjunctive(
     out-of-corpus term returns no rows (the AND over an empty postings list
     is empty).
 
-    Plan: the same single postings scan + broadcast query join as the
-    disjunctive path; the intersection is a group-count filter
-    ``n_matched == n_query_terms`` inside the one hash aggregate — the
-    Spark-first form of conjunctive evaluation (the classic rarest-term
-    driver merge becomes a hash semi-intersection; Catalyst still only
-    scans postings of queried terms because the broadcast join filters the
-    scan). Same cost envelope as the disjunctive query, strictly fewer
-    result rows.
+    Plan: :func:`score_terms` with a match count; the intersection is the
+    group-count filter ``n_matched == n_query_terms`` after the one hash
+    aggregate — the Spark-first form of conjunctive evaluation (the classic
+    rarest-term driver merge becomes a hash semi-intersection).
     """
     # n_q from the RAW query terms (before the stats join) so out-of-corpus
     # terms still count toward the required match total
     nq = qterms.groupBy("claim_id").agg(F.count(F.lit(1)).alias("n_q"))
     q = qterms.join(stats, "term", "inner")
     scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
+        score_terms(
+            postings, q, bm25_score_expr(n_docs, avgdl, params),
             F.count(F.lit(1)).alias("n_matched"),
         )
         .join(F.broadcast(nq), "claim_id", "inner")
         .filter(F.col("n_matched") == F.col("n_q"))
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, None)
 
 
 # -- boolean (must / should / must_not) retrieval ---------------------------
@@ -272,11 +285,11 @@ def score_boolean(
     clauses present and ``min_should_match=0`` the should clauses stay
     purely optional scorers (the default ES behavior).
 
-    Plan shape: identical single postings scan + broadcast clause join as
-    the other ad-hoc paths; must_not postings ride the same scan but their
-    contribution is zeroed in the codegen'd CASE, so exclusion costs one
-    extra term's postings, not a second pass. All clause logic lives in ONE
-    hash aggregate + a broadcast join against the per-claim must count.
+    Plan: :func:`score_terms`; must_not postings ride the same scan but
+    their contribution is zeroed in the codegen'd CASE, so exclusion costs
+    one extra term's postings, not a second pass. The clause counts are
+    extra aggregate columns, checked after a broadcast join against the
+    per-claim must count.
     """
     # must count from the RAW clause terms (before the stats join) so an
     # out-of-corpus must term still makes the claim unmatchable
@@ -286,14 +299,9 @@ def score_boolean(
     q = qterms.join(stats, "term", "inner")
     is_not = F.col("pri") == 0
     scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn(
-            "contrib",
+        score_terms(
+            postings, q,
             F.when(is_not, F.lit(0.0)).otherwise(bm25_score_expr(n_docs, avgdl, params)),
-        )
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
             F.sum((F.col("pri") == 1).cast("int")).alias("n_must_m"),
             F.sum((F.col("pri") == 0).cast("int")).alias("n_not_m"),
             F.sum((F.col("pri") == 2).cast("int")).alias("n_should_m"),
@@ -306,12 +314,7 @@ def score_boolean(
             & (F.col("n_should_m") >= F.lit(int(min_should_match)))
         )
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, None)
 
 
 def score_boosting(
@@ -337,39 +340,29 @@ def score_boosting(
     matches never enter the result (ES: the negative query is not a
     matching clause, only a demotion).
 
-    Plan: one postings scan, both clauses broadcast onto it; the demotion
-    flag and the positive sum ride the same hash aggregate, so boosting
-    costs the negative terms' postings and nothing else.
+    Plan: :func:`score_terms` over both clauses; the demotion flag rides
+    the aggregate as extra columns, so boosting costs the negative terms'
+    postings and nothing else.
     """
     q = qterms.join(stats, "term", "inner")
     is_neg = F.col("pri") == 0
     scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn(
-            "contrib",
+        score_terms(
+            postings, q,
             F.when(is_neg, F.lit(0.0)).otherwise(bm25_score_expr(n_docs, avgdl, params)),
-        )
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("pos_score"),
             F.sum((~is_neg).cast("int")).alias("n_pos_m"),
             F.sum(is_neg.cast("int")).alias("n_neg_m"),
         )
         .filter(F.col("n_pos_m") > 0)
         .withColumn(
             "score",
-            F.col("pos_score")
+            F.col("score")
             * F.when(F.col("n_neg_m") > 0, F.lit(float(negative_boost))).otherwise(
                 F.lit(1.0)
             ),
         )
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, None)
 
 
 def explain_topk(
@@ -462,10 +455,10 @@ def score_collapsed(
     (domain, source, site) per claim, then top-k ACROSS groups. Returns
     (claim_id, rank, doc_id, <group_col>, score).
 
-    ``groups`` is a (doc_id, <group_col>) relation. Plan: the exhaustive
-    scoring scan+agg (see :func:`score_exhaustive`), join doc->group (a dim
-    lookup: broadcast when small, shuffle hash join on doc_id at web scale
-    — both sides are already keyed by doc_id), then two windows: rank-1
+    ``groups`` is a (doc_id, <group_col>) relation. Plan: :func:`score_all`,
+    join doc->group (a dim lookup: broadcast when small, shuffle hash join
+    on doc_id at web scale — both sides are already keyed by doc_id), then
+    two windows: rank-1
     inside (claim, group), top-k over the survivors. The first window's
     partition count is |claims| x |groups| — strictly finer than the final
     top-k window, so collapse never concentrates skew.
@@ -476,26 +469,14 @@ def score_collapsed(
     (same rule as RM3's fb-doc cutoff; the DuckDB twin uses the identical
     key, which is what makes the collapse choice engine-portable).
     """
-    q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .join(groups, "doc_id", "inner")
+    scored = score_all(postings, stats, qterms, n_docs, avgdl, params).join(
+        groups, "doc_id", "inner"
     )
-    rank_key = F.round("score", 6)
     w_group = Window.partitionBy("claim_id", group_col).orderBy(
-        rank_key.desc(), F.asc("doc_id")
+        F.round("score", 6).desc(), F.asc("doc_id")
     )
-    w_top = Window.partitionBy("claim_id").orderBy(rank_key.desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("grn", F.row_number().over(w_group))
-        .filter(F.col("grn") == 1)
-        .withColumn("rank", F.row_number().over(w_top).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", group_col, "score")
-    )
+    best = scored.withColumn("grn", F.row_number().over(w_group)).filter(F.col("grn") == 1)
+    return topk(best, k, 6, cols=("claim_id", "rank", "doc_id", group_col, "score"))
 
 
 def score_boosted(
@@ -517,30 +498,20 @@ def score_boosted(
     uses the quality-model score (0.5 + quality, already 6-dp rounded); a
     web deployment joins its link-graph/quality table the same way.
 
-    Plan: the exhaustive-BM25 scan + hash aggregate, then ONE doc-keyed join
-    of the (claims x matched docs)-sized scored relation against the boost
-    table — boosts are |corpus|-sized so they are NOT broadcast; the join
+    Plan: :func:`score_all`, then ONE doc-keyed join of the (claims x
+    matched docs)-sized scored relation against the boost table — boosts
+    are |corpus|-sized so they are NOT broadcast; the join
     shuffles the small scored side onto the boost table's hash partitioning.
     Ranking pins ties on (round(final, 6), doc_id) so the boost multiply —
     one IEEE op over 6-dp-rounded inputs in both engines — stays portable.
     """
-    q = qterms.join(stats, "term", "inner")
     scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("bm25"))
+        score_all(postings, stats, qterms, n_docs, avgdl, params)
+        .withColumnRenamed("score", "bm25")
         .join(boosts.select("doc_id", boost_col), "doc_id", "inner")
         .withColumn("score", F.col("bm25") * F.col(boost_col))
     )
-    w = Window.partitionBy("claim_id").orderBy(
-        F.round("score", 6).desc(), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "bm25", "score")
-    )
+    return topk(scored, k, 6, cols=("claim_id", "rank", "doc_id", "bm25", "score"))
 
 
 def score_rank_feature(
@@ -569,9 +540,9 @@ def score_rank_feature(
     Docs missing the feature row get zero contribution (left join), same as
     ES docs without the rank_feature field.
 
-    Plan: identical to :func:`score_boosted` — one postings scan, one hash
-    aggregate, one doc-keyed join against the |corpus|-sized feature table
-    (never broadcast). Ties rank on (round(final, 6), doc_id) since the
+    Plan: identical to :func:`score_boosted` — :func:`score_all`, one
+    doc-keyed join against the |corpus|-sized feature table (never
+    broadcast). Ties rank on (round(final, 6), doc_id) since the
     saturation arithmetic is one IEEE divide over 6-dp inputs per row.
     """
     scored = (
@@ -588,14 +559,7 @@ def score_rank_feature(
             ),
         )
     )
-    w = Window.partitionBy("claim_id").orderBy(
-        F.round("score", 6).desc(), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "bm25", "score")
-    )
+    return topk(scored, k, 6, cols=("claim_id", "rank", "doc_id", "bm25", "score"))
 
 
 def score_page_after(
@@ -634,12 +598,8 @@ def score_page_after(
     slice [k+1, 2k] of a double-size page-1 run with the same rank key.
     """
     cursors = cursors.withColumn("after_score", F.round("after_score", 6))
-    q = qterms.join(stats, "term", "inner")
     scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
+        score_all(postings, stats, qterms, n_docs, avgdl, params)
         .withColumn("_key", F.round("score", 6))
         .join(F.broadcast(cursors), "claim_id", "inner")
         .filter(
@@ -647,12 +607,7 @@ def score_page_after(
             | ((F.col("_key") == F.col("after_score")) & (F.col("doc_id") > F.col("after_doc")))
         )
     )
-    w = Window.partitionBy("claim_id").orderBy(F.col("_key").desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, None, key="_key")
 
 
 def percolate(
@@ -869,32 +824,21 @@ def score_terms_set(
     the doc to surface at all). Matching docs score the standard BM25 sum
     over their matched terms — CoveringQuery sums its matched scorers.
 
-    Plan: the exhaustive-BM25 scan + hash aggregate (n_matched rides the
-    same agg as the score), then ONE doc-keyed join against the
-    |corpus|-sized thresholds relation — identical envelope to
-    :func:`score_boosted`'s prior join; never broadcast, the small scored
-    side shuffles onto it.
+    Plan: :func:`score_terms` with a match count, then ONE doc-keyed join
+    against the |corpus|-sized thresholds relation — the same join as
+    :func:`score_boosted`'s prior; never broadcast, the small scored side
+    shuffles onto it.
     """
     q = qterms.join(stats, "term", "inner")
     scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
+        score_terms(
+            postings, q, bm25_score_expr(n_docs, avgdl, params),
             F.count(F.lit(1)).alias("n_matched"),
         )
         .join(thresholds.select("doc_id", "required"), "doc_id", "inner")
         .filter(F.col("n_matched") >= F.greatest(F.col("required"), F.lit(1)))
     )
-    w = Window.partitionBy("claim_id").orderBy(
-        F.round("score", 6).desc(), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, 6)
 
 
 def apply_pinned(

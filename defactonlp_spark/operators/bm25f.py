@@ -29,10 +29,11 @@ passes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defactonlp_spark.functions.tokenize import tokenize_tokens
+from defactonlp_spark.operators.bm25 import topk
 
 #: default field weights / length-norm b (lead boosted like a title)
 BM25F_WEIGHTS = {"lead": 2.0, "body": 1.0}
@@ -124,12 +125,7 @@ def score_bm25f(
         .groupBy("claim_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
-    win = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, 6)
 
 
 def score_combined_fields(
@@ -202,12 +198,7 @@ def score_combined_fields(
         .groupBy("claim_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
-    win = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, 6)
 
 
 def score_multi_match_best_fields(
@@ -275,9 +266,4 @@ def score_multi_match_best_fields(
             F.max("fscore") + F.lit(tb) * (F.sum("fscore") - F.max("fscore"))
         ).alias("score")
     )
-    win = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, 6)

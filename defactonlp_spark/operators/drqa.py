@@ -34,9 +34,11 @@ import unicodedata
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from defactonlp_spark.operators.bm25 import topk
 
 # public-domain English stopword list matching DrQA/sklearn's set closely
 # enough for parity tests on the fixture vocabulary (the exact sklearn
@@ -192,9 +194,4 @@ def drqa_closest_docs(
         .agg(F.sum(F.col("w") * F.col("qw")).alias("score"))
         .filter(F.col("score") > 0)
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(scored, k, None)

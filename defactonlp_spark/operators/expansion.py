@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from defactonlp_spark.config import BM25Params
-from defactonlp_spark.operators.bm25 import bm25_score_expr, score_exhaustive
+from defactonlp_spark.operators.bm25 import (
+    bm25_score_expr,
+    score_exhaustive,
+    score_terms,
+    topk,
+)
 
 
 def rm3_weights(
@@ -59,8 +64,7 @@ def rm3_weights(
             ).alias("rm_w")
         )
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("rm_w"), F.asc("term"))
-    kept = rm.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= fb_terms)
+    kept = topk(rm, fb_terms, None, cols=("claim_id", "term", "rm_w"), key="rm_w", tie="term")
     knorm = kept.groupBy("claim_id").agg(F.sum("rm_w").alias("ksum"))
     rm_p = kept.join(knorm, "claim_id").select(
         "claim_id", "term", F.round(F.col("rm_w") / F.col("ksum"), 9).alias("rm_p")
@@ -93,9 +97,8 @@ def score_weighted(
     params: BM25Params = BM25Params(),
     rank_dp: int | None = None,
 ) -> DataFrame:
-    """Weighted-query BM25 top-k: score = sum_w weight * bm25_w. The same
-    single-scan broadcast-join plan as score_exhaustive with one extra
-    multiply in the codegen'd contribution.
+    """Weighted-query BM25 top-k: score = sum_w weight * bm25_w — the
+    BM25 contribution with one extra multiply, over ``score_terms``.
 
     ``rank_dp``: rank on round(score, rank_dp) instead of the raw float.
     Weighted sums produce EXACT mathematical ties between docs with equal
@@ -104,21 +107,8 @@ def score_weighted(
     tie and lets doc_id break it deterministically (the same device as
     the _bm25_sql oracle's rank-on-round option)."""
     q = wterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn(
-            "contrib", F.col("weight") * bm25_score_expr(n_docs, avgdl, params)
-        )
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    rank_key = F.col("score") if rank_dp is None else F.round("score", rank_dp)
-    w = Window.partitionBy("claim_id").orderBy(rank_key.desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    contrib = F.col("weight") * bm25_score_expr(n_docs, avgdl, params)
+    return topk(score_terms(postings, q, contrib), k, rank_dp)
 
 
 def rm3_expand(
@@ -417,11 +407,9 @@ def expand_wildcards(
     cand = stats.select("term", "df").join(
         F.broadcast(pats), F.expr("term LIKE _like"), "inner"
     )
-    w = Window.partitionBy("claim_id", "tok").orderBy(F.desc("df"), F.asc("term"))
-    expanded = (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_expansions)
-        .select("claim_id", "term")
+    expanded = topk(
+        cand, max_expansions, None, cols=("claim_id", "term"), key="df",
+        part=["claim_id", "tok"], tie="term",
     )
     literals = qtoks.filter(~F.col("is_pattern")).select(
         "claim_id", F.col("tok").alias("term")
@@ -462,13 +450,10 @@ def expand_regex(
     cand = stats.select("term", "df").join(
         F.broadcast(pats), F.expr("term RLIKE _re"), "inner"
     )
-    w = Window.partitionBy("claim_id", "_re").orderBy(F.desc("df"), F.asc("term"))
-    return (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_expansions)
-        .select("claim_id", "term")
-        .distinct()
-    )
+    return topk(
+        cand, max_expansions, None, cols=("claim_id", "term"), key="df",
+        part=["claim_id", "_re"], tie="term",
+    ).distinct()
 
 
 def phrase_suggest(
@@ -614,12 +599,6 @@ def phrase_suggest(
     allseq = parts[0]
     for p in parts[1:]:
         allseq = allseq.unionByName(p)
-    w = Window.partitionBy("claim_id").orderBy(
-        F.round("score", 6).desc(), F.asc("suggestion")
+    return topk(
+        allseq, topn, 6, cols=("claim_id", "rank", "suggestion", "score"), tie="suggestion"
     )
-    out = (
-        allseq.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= topn)
-        .select("claim_id", "rank", "suggestion", "score")
-    )
-    return out

@@ -45,12 +45,13 @@ from __future__ import annotations
 import heapq
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defactonlp_spark.operators.similarity import (
     cosine_expr,
     ivf_train,
+    vec_topk,
 )
 
 GRAPH_M = 8  # max out-degree per node (HNSW M)
@@ -244,9 +245,4 @@ def graph_ann_topk(
         )
         .withColumn("cos", F.round(cosine_expr(F.col("qvec"), F.col("_v")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos")
-    )
+    return vec_topk(rescored, k, "vec_id")

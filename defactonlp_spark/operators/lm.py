@@ -36,16 +36,22 @@ Perplexity, for doc d:
   so H is total. ppl is computed from the ROUNDED cross-entropy in both
   engines so the exp sees bit-identical input.
 
-Scale shape: both operators are one postings scan + one broadcast (query
-terms) or term-keyed (ctf) join + one hash aggregate — the same envelope as
-exhaustive BM25. ctf_stats is a term-keyed aggregate the build already
+Scale shape: every scorer here is a ``contrib`` expression over
+``bm25.score_terms`` (one postings scan, the query side broadcast, one hash
+aggregate) followed by ``bm25.topk``; perplexity is a term-keyed (ctf) join
++ one hash aggregate. ctf_stats is a term-keyed aggregate the build already
 shuffles for; at 10^12 docs it rides the existing term range partitioning.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from defactonlp_spark.operators.bm25 import score_terms, topk
+
+
+_INV_LN2 = 1.4426950408889634  # log2(x) pinned as ln(x) * _INV_LN2 everywhere
 
 
 def ctf_stats(postings: DataFrame) -> DataFrame:
@@ -68,40 +74,38 @@ def score_lm_dirichlet(
     :func:`ctf_stats`; ``qterms``: (claim_id, term) distinct; ``total_tokens``
     from the build manifest / ``corpus_stats`` (NOT recomputed per query —
     same consistency contract as BM25's N/avgdl).
-
-    Plan: broadcast the query terms (+ their ctf) onto the postings scan —
-    Catalyst prunes the scan to queried terms — then one hash aggregate on
-    (claim_id, doc_id) carrying the matched-term sum, dl, and the match
-    count; the dl normalizer is applied per GROUP (not per posting), and
-    n_q_in arrives by a second tiny broadcast. One wide scan, one narrow
-    shuffle — identical envelope to ``score_exhaustive``.
     """
+    return topk(lm_dirichlet_all(postings, cstats, qterms, total_tokens, mu), k, 6)
+
+
+def lm_dirichlet_all(
+    postings: DataFrame,
+    cstats: DataFrame,
+    qterms: DataFrame,
+    total_tokens: int,
+    mu: float = 2000.0,
+) -> DataFrame:
+    """Every matching (claim_id, doc_id, score) Dirichlet pair — the
+    un-truncated half of :func:`score_lm_dirichlet` (the LTR feature logger
+    scores its BM25 candidates with it). ``dl`` rides the
+    :func:`~defactonlp_spark.operators.bm25.score_terms` aggregate; the
+    per-doc normalizer is added per GROUP, and n_q_in arrives by a second
+    tiny broadcast."""
     T = float(total_tokens)
     q = qterms.join(cstats, "term", "inner")  # in-collection terms only
     nq = q.groupBy("claim_id").agg(F.count(F.lit(1)).cast("double").alias("n_q_in"))
     tf = F.col("tf").cast("double")
     p_c = F.col("ctf").cast("double") / F.lit(T)
     contrib = F.log1p(tf / (F.lit(float(mu)) * p_c))
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("tsum"),
-            F.first("dl").cast("double").alias("dl"),
-        )
+    return (
+        score_terms(postings, q, contrib, F.first("dl").cast("double").alias("dl"))
         .join(F.broadcast(nq), "claim_id", "inner")
         .withColumn(
             "score",
-            F.col("tsum")
+            F.col("score")
             + F.col("n_q_in") * F.log(F.lit(float(mu)) / (F.col("dl") + F.lit(float(mu)))),
         )
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
+        .select("claim_id", "doc_id", "score")
     )
 
 
@@ -120,9 +124,8 @@ def score_lm_jelinek_mercer(
     Rank-equivalent scoring form (per matched in-collection term):
       score = sum ln(1 + ((1-lambda)/lambda) * (tf/dl) / p_c(t))
     Unlike Dirichlet there is NO per-doc length normalizer outside the
-    sum — unmatched terms contribute exactly 0 — so the plan is one
-    broadcast of (query terms x ctf) onto the postings scan + one hash
-    aggregate: strictly simpler than :func:`score_lm_dirichlet`.
+    sum — unmatched terms contribute exactly 0 — so it is a bare
+    contribution over ``score_terms``.
     Ranking pinned: round(score, 6) desc, doc_id asc.
     """
     T = float(total_tokens)
@@ -132,18 +135,7 @@ def score_lm_jelinek_mercer(
     dl = F.col("dl").cast("double")
     p_c = F.col("ctf").cast("double") / F.lit(T)
     contrib = F.log1p(F.lit(ratio) * (tf / dl) / p_c)
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_terms(postings, q, contrib), k, 6)
 
 
 def score_dfr_inl2(
@@ -165,29 +157,16 @@ def score_dfr_inl2(
     log2 is pinned as ln(x) * INV_LN2 with a shared Python literal so
     both engines build the identical expression tree (their native
     log2() builtins are separate libm entry points).  ``dstats`` is the
-    dictionary relation (term, df).  Same one-broadcast one-aggregate
-    envelope as the other similarities; ranking pinned round(score,6)
-    desc, doc_id asc.
+    dictionary relation (term, df). Ranking pinned round(score,6) desc,
+    doc_id asc.
     """
-    INV_LN2 = 1.4426950408889634
     q = qterms.join(dstats.select("term", "df"), "term", "inner")
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
-    tfn = tf * (F.log(F.lit(1.0) + F.lit(float(c) * float(avgdl)) / dl) * F.lit(INV_LN2))
-    inf = F.log(F.lit(float(n_docs) + 1.0) / (F.col("df").cast("double") + F.lit(0.5))) * F.lit(INV_LN2)
+    tfn = tf * (F.log(F.lit(1.0) + F.lit(float(c) * float(avgdl)) / dl) * F.lit(_INV_LN2))
+    inf = F.log(F.lit(float(n_docs) + 1.0) / (F.col("df").cast("double") + F.lit(0.5))) * F.lit(_INV_LN2)
     contrib = (F.lit(1.0) / (tfn + F.lit(1.0))) * tfn * inf
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_terms(postings, q, contrib), k, 6)
 
 
 def doc_perplexity(postings: DataFrame, cstats: DataFrame, total_tokens: int) -> DataFrame:
@@ -227,10 +206,8 @@ def doc_perplexity(postings: DataFrame, cstats: DataFrame, total_tokens: int) ->
 # after BM25 / TF-IDF / LMDirichlet / LMJelinekMercer / DFR(InL2) — DFI,
 # IB (SPL-D-H2), and Axiomatic F2EXP. With these, every scoring family
 # Lucene ships as a named Similarity class has a DataFrame-native analog
-# with the same one-broadcast one-aggregate plan envelope.
+# over the same score_terms core.
 # ---------------------------------------------------------------------------
-
-_INV_LN2 = 1.4426950408889634  # log2(x) pinned as ln(x) * _INV_LN2 everywhere
 
 
 def score_dfi_chisq(
@@ -250,9 +227,8 @@ def score_dfi_chisq(
 
     Lucene zeroes terms at-or-below their expected frequency (a doc can
     match yet score 0 — kept, ranked by the doc_id tiebreak). Candidates
-    are docs matching >= 1 in-collection query term; plan is the standard
-    envelope: query terms (+ctf) broadcast onto the postings scan, one
-    hash aggregate. Ranking pinned round(score, 6) desc, doc_id asc.
+    are docs matching >= 1 in-collection query term. Ranking pinned
+    round(score, 6) desc, doc_id asc.
     """
     T = float(total_tokens)
     q = qterms.join(cstats, "term", "inner")  # in-collection terms only
@@ -260,18 +236,7 @@ def score_dfi_chisq(
     expected = F.col("dl").cast("double") * F.col("ctf").cast("double") / F.lit(T)
     chi2 = (tf - expected) * (tf - expected) / expected
     contrib = F.when(tf > expected, F.log1p(chi2) * F.lit(_INV_LN2)).otherwise(F.lit(0.0))
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_terms(postings, q, contrib), k, 6)
 
 
 def score_ib_spl(
@@ -297,8 +262,7 @@ def score_ib_spl(
     DROPPED from scoring (pinned spec — Lucene silently produces
     NaN/Infinity here; under Spark ANSI mode that is a hard error, and
     dropping is the principled behavior a stopword filter would give).
-    Same broadcast+aggregate envelope; ranking pinned
-    round(score, 6) desc, doc_id asc.
+    Ranking pinned round(score, 6) desc, doc_id asc.
     """
     q = (
         qterms.join(dstats.select("term", "df"), "term", "inner")
@@ -312,18 +276,7 @@ def score_ib_spl(
         F.log((F.pow(lam, tfn / (tfn + F.lit(1.0))) - lam) / (F.lit(1.0) - lam))
         * F.lit(_INV_LN2)
     )
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_terms(postings, q, contrib), k, 6)
 
 
 def score_axiomatic_f2exp(
@@ -343,26 +296,15 @@ def score_axiomatic_f2exp(
 
       contrib = (N / df)^k * tf / (tf + s + s * dl / avgdl)
 
-    Purely algebraic (one pow per term), no logs; same envelope; ranking
-    pinned round(score, 6) desc, doc_id asc.
+    Purely algebraic (one pow per term), no logs; ranking pinned
+    round(score, 6) desc, doc_id asc.
     """
     q = qterms.join(dstats.select("term", "df"), "term", "inner")
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
     idf = F.pow(F.lit(float(n_docs)) / F.col("df").cast("double"), F.lit(float(k_exp)))
     contrib = idf * tf / (tf + F.lit(float(s)) + F.lit(float(s)) * dl / F.lit(float(avgdl)))
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_terms(postings, q, contrib), k, 6)
 
 
 def score_bm25_plus(
@@ -385,8 +327,8 @@ def score_bm25_plus(
       contrib = idf * (tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) + delta)
 
     idf is the same Robertson-Sparck-Jones log the BM25 path uses
-    (ln(1 + (N - df + 0.5)/(df + 0.5))); same envelope and pinned
-    ranking (round 6 desc, doc_id asc) as every ad-hoc scorer here.
+    (ln(1 + (N - df + 0.5)/(df + 0.5))); pinned ranking (round 6 desc,
+    doc_id asc) as every ad-hoc scorer here.
     """
     q = qterms.join(dstats.select("term", "df"), "term", "inner")
     tf = F.col("tf").cast("double")
@@ -400,15 +342,4 @@ def score_bm25_plus(
         F.lit(1.0 - b) + F.lit(float(b)) * dl / F.lit(float(avgdl))
     )
     contrib = idf * (tf * F.lit(float(k1) + 1.0) / norm + F.lit(float(delta)))
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(score_terms(postings, q, contrib), k, 6)

@@ -13,21 +13,22 @@ Pinned feature set (the DuckDB twin computes identical values):
   dl          : document length in tokens
   quality     : the quality-model score (functions/textstats.py, 6 dp)
 
-Scale shape: the BM25 and LM scored relations share the one term-pruned
-postings scan pattern (each is a broadcast-join + hash aggregate); the
-candidate top-k window gates everything downstream to claims x k rows, and
-quality joins doc-keyed onto that small relation. Feature logging at
-serving time reuses the index paths (query_exhaustive/_pruned_postings)
-with the same algebra.
+Scale shape: the BM25 and LM scored relations are each one
+``bm25.score_terms`` call (term-pruned postings scan, broadcast query side,
+one hash aggregate); the candidate top-k window gates everything
+downstream to claims x k rows, and quality joins doc-keyed onto that small
+relation. Feature logging at serving time reuses the index paths
+(query_exhaustive/_pruned_postings) with the same algebra.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defactonlp_spark.config import BM25Params
-from defactonlp_spark.operators.bm25 import bm25_score_expr
+from defactonlp_spark.operators.bm25 import bm25_score_expr, score_terms, topk
+from defactonlp_spark.operators.lm import lm_dirichlet_all
 
 
 def ltr_features(
@@ -50,42 +51,16 @@ def ltr_features(
     same doc-keyed way).
     """
     q = qterms.join(stats.select("term", "df"), "term", "inner")
-    base = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("_bm", bm25_score_expr(n_docs, avgdl, params))
-        .groupBy("claim_id", "doc_id")
-        .agg(
-            F.sum("_bm").alias("bm25"),
-            F.count(F.lit(1)).cast("long").alias("n_matched"),
-            F.first("dl").cast("long").alias("dl"),
-        )
+    base = score_terms(
+        postings, q, bm25_score_expr(n_docs, avgdl, params),
+        F.count(F.lit(1)).cast("long").alias("n_matched"),
+        F.first("dl").cast("long").alias("dl"),
+    ).withColumnRenamed("score", "bm25")
+    cands = topk(
+        base, k, 6, cols=("claim_id", "rank", "doc_id", "bm25", "n_matched", "dl"), key="bm25"
     )
-    w = Window.partitionBy("claim_id").orderBy(F.round("bm25", 6).desc(), F.asc("doc_id"))
-    cands = base.withColumn("rank", F.row_number().over(w).cast("int")).filter(
-        F.col("rank") <= k
-    )
-
-    qc = qterms.join(cstats.select("term", "ctf"), "term", "inner")
-    nq = qc.groupBy("claim_id").agg(F.count(F.lit(1)).cast("double").alias("_nqin"))
-    T = float(total_tokens)
-    lm_contrib = F.log1p(
-        F.col("tf").cast("double")
-        / (F.lit(float(mu)) * (F.col("ctf").cast("double") / F.lit(T)))
-    )
-    lm = (
-        postings.join(F.broadcast(qc), "term", "inner")
-        .withColumn("_c", lm_contrib)
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("_c").alias("_tsum"), F.first("dl").cast("double").alias("_dl"))
-        .join(F.broadcast(nq), "claim_id", "inner")
-        .select(
-            "claim_id",
-            "doc_id",
-            (
-                F.col("_tsum")
-                + F.col("_nqin") * F.log(F.lit(float(mu)) / (F.col("_dl") + F.lit(float(mu))))
-            ).alias("lm_qlh"),
-        )
+    lm = lm_dirichlet_all(postings, cstats, qterms, total_tokens, mu).withColumnRenamed(
+        "score", "lm_qlh"
     )
     return (
         cands.join(lm, ["claim_id", "doc_id"], "left")
@@ -123,14 +98,7 @@ def rescore_topk(
     combined = features.withColumn(
         "score", F.lit(float(query_weight)) * b + F.lit(float(rescore_weight)) * l
     )
-    w = Window.partitionBy("claim_id").orderBy(
-        F.round("score", 6).desc(), F.asc("doc_id")
-    )
-    return (
-        combined.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(combined, k, 6)
 
 
 #: Deterministic stand-in LTR model: a linear scorer over the pinned
@@ -166,13 +134,8 @@ def ltr_rerank(
     for fname, wt in sorted(w.items()):
         term = F.col(fname).cast("double") * F.lit(float(wt))
         score = term if score is None else score + term
-    win = Window.partitionBy("claim_id").orderBy(
-        F.round("model_score", 6).desc(), F.asc("doc_id")
+    scored = features.withColumn("model_score", score).withColumn(
+        "bm25_rank", F.col("rank").cast("long")
     )
-    return (
-        features.withColumn("model_score", score)
-        .withColumn("bm25_rank", F.col("rank").cast("long"))
-        .withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "model_score", "bm25_rank")
-    )
+    cols = ("claim_id", "rank", "doc_id", "model_score", "bm25_rank")
+    return topk(scored, k, 6, cols=cols, key="model_score")

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from defactonlp_spark.config import BM25Params
-from defactonlp_spark.operators.bm25 import bm25_score_expr
+from defactonlp_spark.operators.bm25 import bm25_score_expr, topk
 
 
 def phrase_positions(phrases: DataFrame, id_col: str = "claim_id", text_col: str = "phrase") -> DataFrame:
@@ -174,6 +174,29 @@ def proximity_matches(tokens: DataFrame, qterms: DataFrame, window: int) -> Data
     )
 
 
+def _score_matched(
+    postings: DataFrame,
+    stats: DataFrame,
+    qterms: DataFrame,
+    matches: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    params: BM25Params,
+) -> DataFrame:
+    """BM25 sum over a claim's distinct terms, restricted to the (claim_id,
+    doc_id) pairs in ``matches`` (stored df/N/avgdl — scores comparable with
+    every other query path). The match semi-join sits between the
+    contribution and the aggregate, so this is not ``bm25.score_terms``."""
+    q = qterms.join(stats, "term", "inner")
+    return (
+        postings.join(F.broadcast(q), "term", "inner")
+        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
+        .join(matches, ["claim_id", "doc_id"], "left_semi")
+        .groupBy("claim_id", "doc_id")
+        .agg(F.sum("contrib").alias("score"))
+    )
+
+
 def score_proximity(
     postings: DataFrame,
     stats: DataFrame,
@@ -194,20 +217,8 @@ def score_proximity(
 
     qterms = claim_terms(claims)
     matches = proximity_matches(tokens, qterms, window)
-    q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .join(matches, ["claim_id", "doc_id"], "left_semi")
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    scored = _score_matched(postings, stats, qterms, matches, n_docs, avgdl, params)
+    return topk(scored, k, None)
 
 
 def score_phrase(
@@ -228,20 +239,8 @@ def score_phrase(
     qpos = phrase_positions(phrases)
     matches = phrase_matches(tokens, qpos)
     qterms = qpos.select("claim_id", "term").distinct()
-    q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .join(matches, ["claim_id", "doc_id"], "left_semi")
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    scored = _score_matched(postings, stats, qterms, matches, n_docs, avgdl, params)
+    return topk(scored, k, None)
 
 
 def span_near_matches(tokens: DataFrame, qpos: DataFrame, slop: int) -> DataFrame:
@@ -336,20 +335,8 @@ def score_span_near(
     qpos = phrase_positions(phrases)
     matches = span_near_matches(tokens, qpos, slop)
     qterms = qpos.select("claim_id", "term").distinct()
-    q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .join(matches, ["claim_id", "doc_id"], "left_semi")
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    scored = _score_matched(postings, stats, qterms, matches, n_docs, avgdl, params)
+    return topk(scored, k, None)
 
 
 def best_passage(
@@ -445,11 +432,8 @@ def prefix_expanded_positions(
     cand = stats.select("term", "df").join(
         F.broadcast(last), F.expr("term LIKE prefix || '%'"), "inner"
     )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("df"), F.asc("term"))
-    expanded = (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_expansions)
-        .select("claim_id", "idx", "term")
+    expanded = topk(
+        cand, max_expansions, None, cols=("claim_id", "idx", "term"), key="df", tie="term"
     )
     return fixed.unionByName(expanded)
 
@@ -505,22 +489,8 @@ def score_phrase_prefix(
         .distinct()
     )
     qterms = qpos.select("claim_id", "term").distinct()
-    q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .join(matches, ["claim_id", "doc_id"], "left_semi")
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(
-        F.round("score", 6).desc(), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    scored = _score_matched(postings, stats, qterms, matches, n_docs, avgdl, params)
+    return topk(scored, k, 6)
 
 
 def top_fragments(
@@ -658,17 +628,5 @@ def score_span_first(
     qpos = phrase_positions(phrases)
     matches = span_first_matches(tokens, qpos, end)
     qterms = qpos.select("claim_id", "term").distinct()
-    q = qterms.join(stats, "term", "inner")
-    scored = (
-        postings.join(F.broadcast(q), "term", "inner")
-        .withColumn("contrib", bm25_score_expr(n_docs, avgdl, params))
-        .join(matches, ["claim_id", "doc_id"], "left_semi")
-        .groupBy("claim_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    scored = _score_matched(postings, stats, qterms, matches, n_docs, avgdl, params)
+    return topk(scored, k, None)

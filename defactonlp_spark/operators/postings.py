@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.functions.tokenize import tokenize_postings
+from defactonlp_spark.operators.bm25 import bm25_score_expr, topk
 
 
 def latest_per_url(pages: DataFrame) -> DataFrame:
@@ -171,12 +172,8 @@ def suggest_terms(stats: DataFrame, prefixes: DataFrame, k: int = 5) -> DataFram
         F.col("term").startswith(F.col("prefix")),
         "inner",
     )
-    w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("term"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("prefix", "rank", "term", "df")
-    )
+    cols = ("prefix", "rank", "term", "df")
+    return topk(joined, k, None, cols=cols, key="df", part="prefix", tie="term")
 
 
 def suggest_corrections(
@@ -280,7 +277,6 @@ def prune_postings(
     single window (tested) while the largest partition shrinks by n_salts.
     """
     from defactonlp_spark.config import BM25Params
-    from defactonlp_spark.operators.bm25 import bm25_score_expr
 
     p = params or BM25Params()
     n_salts = 16
@@ -290,16 +286,6 @@ def prune_postings(
         .withColumn("impact", impact)
         .withColumn("_salt", (F.col("doc_id") % n_salts).cast("int"))
     )
-    w_local = Window.partitionBy("term", "_salt").orderBy(
-        F.desc("impact"), F.asc("doc_id")
-    )
-    survivors = (
-        scored.withColumn("_lrn", F.row_number().over(w_local))
-        .filter(F.col("_lrn") <= keep_n)
-    )
-    w_final = Window.partitionBy("term").orderBy(F.desc("impact"), F.asc("doc_id"))
-    return (
-        survivors.withColumn("_prn", F.row_number().over(w_final))
-        .filter(F.col("_prn") <= keep_n)
-        .select("term", "doc_id", "tf", "dl")
-    )
+    cols = ("term", "doc_id", "tf", "dl", "impact")
+    survivors = topk(scored, keep_n, None, cols=cols, key="impact", part=["term", "_salt"])
+    return topk(survivors, keep_n, None, cols=cols[:4], key="impact", part="term")

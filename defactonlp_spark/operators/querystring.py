@@ -48,11 +48,11 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defactonlp_spark.functions.tokenize import tokenize_one
-from defactonlp_spark.operators.bm25 import BM25Params, bm25_score_expr
+from defactonlp_spark.operators.bm25 import BM25Params, bm25_score_expr, topk
 
 
 @dataclass(frozen=True)
@@ -219,9 +219,4 @@ def score_query_string(
             & ((F.col("n_must") > 0) | (F.col("n_should_m") >= 1))
         )
     )
-    w = Window.partitionBy("claim_id").orderBy(F.round("score", 6).desc(), F.asc("doc_id"))
-    return (
-        agg.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("claim_id", "rank", "doc_id", "score")
-    )
+    return topk(agg, k, 6)

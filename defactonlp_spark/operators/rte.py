@@ -29,8 +29,10 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from defactonlp_spark.operators.bm25 import topk
 
 #: class order pins the logit-slice assignment AND the tie-break preference
 RTE_LABELS = ("SUPPORTS", "REFUTES", "NOT ENOUGH INFO")
@@ -106,10 +108,6 @@ def label_aggregate(
         F.count(F.lit(1)).cast("long").alias("n_votes")
     )
     totals = scored.groupBy(claim_col).agg(F.count(F.lit(1)).cast("long").alias("n_sents"))
-    w = Window.partitionBy(claim_col).orderBy(F.desc("n_votes"), F.asc(label_col))
-    best = (
-        counts.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(claim_col, F.col(label_col).alias("predicted_label"), "n_votes")
-    )
+    cols = (claim_col, F.col(label_col).alias("predicted_label"), "n_votes")
+    best = topk(counts, 1, None, cols=cols, key="n_votes", part=claim_col, tie=label_col)
     return best.join(totals, claim_col)

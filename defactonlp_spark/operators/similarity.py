@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from defactonlp_spark.operators.bm25 import topk
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -45,6 +47,14 @@ def _norm(a):
 def cosine_expr(a, b):
     a, b = _as_double(a), _as_double(b)
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def vec_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Per-query top-k neighbours by (cos desc, id asc) ->
+    (query_id, rank, vec_id, cos); cos is already 6-dp rounded by the
+    caller, so the window ranks on it raw."""
+    cols = ("query_id", "rank", F.col(id_col).alias("vec_id"), "cos")
+    return topk(scored, k, None, cols=cols, key="cos", part="query_id", tie=id_col)
 
 
 def cosine_topk(
@@ -66,12 +76,7 @@ def cosine_topk(
         embeddings.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
         .withColumn("cos", F.round(cosine_expr(F.col("qvec"), F.col(vec_col)), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        joined.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col).alias("vec_id"), "cos")
-    )
+    return vec_topk(joined, k, id_col)
 
 
 #: above this row count the all-pairs broadcast kernel refuses and the
@@ -262,12 +267,7 @@ def lsh_ann_topk(
         (F.col("bucket") == F.col("probe")) & (F.col(id_col) != F.col("query_id")),
     )
     scored = cand.withColumn("cos", F.round(cosine_expr(F.col("qvec"), F.col(vec_col)), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col).alias("vec_id"), "cos")
-    )
+    return vec_topk(scored, k, id_col)
 
 
 def lsh_dup_pairs(
@@ -486,12 +486,7 @@ def ivf_ann_topk(
         (F.col("cell") == F.col("probe")) & (F.col(id_col) != F.col("query_id")),
     )
     scored = cand.withColumn("cos", F.round(cosine_expr(F.col("qvec"), F.col(vec_col)), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col).alias("vec_id"), "cos")
-    )
+    return vec_topk(scored, k, id_col)
 
 
 def ann_recall_eval(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
@@ -784,12 +779,7 @@ def sq8_cosine_topk(
     scored = enc.select(id_col, "codes").mapInPandas(kern, out_schema).withColumn(
         "cos", F.round("cos", 6)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos")
-    )
+    return vec_topk(scored, k, "vec_id")
 
 
 def cosine_topk_filtered(
@@ -832,12 +822,7 @@ def cosine_topk_filtered(
         cand.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
         .withColumn("cos", F.round(cosine_expr(F.col("qvec"), F.col(vec_col)), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        joined.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col).alias("vec_id"), "cos")
-    )
+    return vec_topk(joined, k, id_col)
 
 
 def bq_encode(
@@ -927,9 +912,5 @@ def bq_ann_topk(
     rescored = cand.join(
         embeddings.select(F.col(id_col), F.col(vec_col).alias("_v")), id_col, "inner"
     ).withColumn("cos", F.round(cosine_expr(F.col("qvec"), F.col("_v")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col).alias("vec_id"), "hamming", "cos")
-    )
+    cols = ("query_id", "rank", F.col(id_col).alias("vec_id"), "hamming", "cos")
+    return topk(rescored, k, None, cols=cols, key="cos", part="query_id", tie=id_col)

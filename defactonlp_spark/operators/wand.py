@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 
 from defactonlp_spark.config import BM25Params, EngineConfig
 from defactonlp_spark.functions.varbyte import vb_decode
+from defactonlp_spark.operators.bm25 import topk
 from defactonlp_spark.operators.segments import bm25_contrib, idf
 
 RESULTS_SCHEMA = T.StructType(
@@ -472,7 +473,7 @@ def wand_topk(
        by candidate volume; both are bit-identical
        (tests/test_topk_parity.py).
     """
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Observation
 
     spark = segments.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -566,8 +567,4 @@ def wand_topk(
     )
     if n_shards is None:
         return local
-    wm = Window.partitionBy("claim_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(wm).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(local, k, None)

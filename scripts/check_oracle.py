@@ -3,19 +3,29 @@ __spark_entry__.queries() entry at sf0.01 and compare against its
 oracle_sql() in DuckDB — row count, column names, and order-insensitive
 values (floats rounded). Usage:
 
-    PYTHONPATH=/root/repo python scripts/check_oracle.py [sf_dir] [name ...]
+    python scripts/check_oracle.py [sf_dir] [name ...]
+
+It imports the engine and the harness from the checkout it sits in.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# Audit the checkout this script sits in (a worktree or copy included), in
+# the driver and in the Python workers Spark starts.
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from defactonlp_spark.session import get_spark  # noqa: E402
@@ -41,7 +51,6 @@ def main():
     # Data-dependent twins (ivf centroids, drqa hashed vocab probe) learn
     # their inlined constants from this dir — set BEFORE oracle_sql() runs
     # so tri-scale sweeps regenerate per-sf models (round-5 task #4).
-    import os
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     spark = get_spark("oracle-check", cores=16, shuffle_partitions=16,
                       extra={"spark.ui.showConsoleProgress": "false"})

@@ -3,16 +3,25 @@ grep for the properties that matter at scale — parquet filter pushdown,
 column pruning (ReadSchema), broadcast joins on small sides, whole-stage
 codegen spans, and the single range shuffle in the build.
 
-Usage: PYTHONPATH=/root/repo python scripts/explain_plans.py
+Usage: python scripts/explain_plans.py (audits the checkout it sits in)
 """
 
 from __future__ import annotations
 
 import io
+import os
+import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# Audit the checkout this script sits in (a worktree or copy included), in
+# the driver and in the Python workers Spark starts.
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import functions as F
 
@@ -44,6 +53,29 @@ def check(name: str, plan: str, must: list[str], must_not: list[str] = ()):  # n
         print(f"  [{'x' if not hit else '!'}] absent   {m!r}")
     if not ok:
         print(plan[:4000])
+    return ok
+
+
+def check_score_terms(name: str, plan: str) -> bool:
+    """The shared scorer shape (operators/bm25.py::score_terms + topk): ONE
+    broadcast hash join streamed straight off the postings scan, a hash
+    aggregate keyed on (claim_id, doc_id), ONE Window, and neither a
+    nested-loop join nor a row-at-a-time Python UDF anywhere."""
+    tree = plan.split("\n\n", 1)[0]
+    n_scan_bhj = len(re.findall(
+        r"BroadcastHashJoin \w+ Build\w+ \(\d+\)\n[ :]*:- MapInPandas \(\d+\)\n"
+        r"[ :]*:  \+- Scan parquet", tree))
+    n_window = len(re.findall(r"\bWindow \(\d+\)", tree))
+    keyed = re.search(r"Keys \[2\]: \[claim_id#\d+L?, doc_id#\d+L?\]", plan) is not None
+    ok = check(name, plan, must=["HashAggregate"],
+               must_not=["BroadcastNestedLoopJoin", "BatchEvalPython"])
+    for good, what in (
+        (n_scan_bhj == 1, f"broadcast joins onto the postings scan: {n_scan_bhj} (want 1)"),
+        (keyed, "hash aggregate keyed on (claim_id, doc_id)"),
+        (n_window == 1, f"Window nodes: {n_window} (want 1)"),
+    ):
+        print(f"  [{'x' if good else '!'}] {what}")
+        ok &= good
     return ok
 
 
@@ -1027,6 +1059,25 @@ def main():
         must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython",
                   "BroadcastNestedLoopJoin"],
     )
+
+    # 64-68. the scorers not audited above, all on the shared score_terms +
+    # topk core: LM/DFR-family and BM25+ contributions, the conjunctive
+    # count filter, the boosting demotion, and the search_after cursor
+    from defactonlp_spark.operators.bm25 import score_boosting, score_conjunctive, score_page_after
+    from defactonlp_spark.operators.lm import score_bm25_plus, score_dfr_inl2
+
+    cursors = spark.createDataFrame(
+        [(1, 1.5, 3)], "claim_id long, after_score double, after_doc long"
+    )
+    bool_qt = qt.withColumn("pri", F.lit(1))
+    for name, scored in (
+        ("dfr_inl2", score_dfr_inl2(pz, st, qt, 100, 10.0, k=5)),
+        ("bm25_plus", score_bm25_plus(pz, st, qt, 100, 10.0, k=5)),
+        ("conjunctive", score_conjunctive(pz, st, qt, 100, 10.0, k=5)),
+        ("boosting", score_boosting(pz, st, bool_qt, 100, 10.0, k=5)),
+        ("page_after", score_page_after(pz, st, qt, 100, 10.0, cursors, k=5)),
+    ):
+        ok &= check_score_terms(f"{name} (score_terms + topk)", plan_of(scored))
 
     print("\nPLANS " + ("OK" if ok else "NOT OK"))
     spark.stop()

@@ -7,7 +7,7 @@ the current window, and — the actionable part — which never-driver-checked
 entries are OUTSIDE the window (i.e. what the next round's reorder must
 promote).
 
-Usage: PYTHONPATH=/root/repo python scripts/window_audit.py
+Usage: python scripts/window_audit.py (reads the checkout it sits in)
 Exit 0 always (it's a report, not a gate); the summary line is the point.
 """
 
@@ -16,8 +16,10 @@ from __future__ import annotations
 import glob
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 WINDOW = 50
 
@@ -29,7 +31,7 @@ def main():
     oracles = set(entrymod.oracle_sql().keys())
 
     green: dict[str, list[str]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json"))):
         rnd = path.rsplit("CORRECTNESS_", 1)[1].split(".")[0]
         try:
             rec = json.load(open(path))

@@ -87,6 +87,21 @@ def test_extract_links_scalar_spec():
     ]
 
 
+def test_extract_href_only_as_a_real_attribute():
+    """"href=" inside another attribute's quoted value, or inside a longer
+    attribute name, is not an href: attributes are stepped over whole."""
+    from defactonlp_spark.functions.extract import extract_anchors_one, extract_links_one
+
+    html = b'<a title="see href=x" href="/real">t</a>'
+    assert extract_links_one(html, None) == ["/real"]
+    assert extract_anchors_one(html, None) == [("/real", "t")]
+    assert extract_links_one(b"<a data-href='/no' href='/yes'>y</a>", None) == ["/yes"]
+    assert extract_links_one(b"<a title='x'href='/glued'>g</a>", None) == ["/glued"]
+    assert extract_links_one(b"<abbr href='/no'>n</abbr>", None) == []
+    # a quoted value after the href may hold '>' without cutting the tag
+    assert extract_anchors_one(b'<a href="/x" title="a>b">text</a>', None) == [("/x", "text")]
+
+
 def test_extract_links_degenerate():
     from defactonlp_spark.functions.extract import extract_links_one
 
