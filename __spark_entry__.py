@@ -3105,30 +3105,6 @@ def q_ivf_ann_topk(spark, sf_dir):
     )
 
 
-def q_graph_ann_topk(spark, sf_dir):
-    """Graph-based ANN: per-cell Navigable-Small-World graphs over the IVF
-    coarse partition (Malkov 2014 / HNSW layer-0), beam-searched per probe
-    cell inside one applyInPandas pass, exact cosine rescore tail — the
-    README ANN design note implemented (closes VERDICT r4 missing #4).
-    FULLY twinned: candidate generation is a pure function of the
-    id-sorted cell matrix (operators/graphann.py::nsw_candidates_np, ties
-    by id, float64 throughout), so the twin generator replays the same
-    kernel single-node at gate scale and inlines the (query_id, vec_id)
-    candidates; the SQL then rescores independently from raw vectors.
-    Emitted only when cell/probe margins clear 1e-9 (the ivf convention);
-    tests/test_graphann.py pins kernel exactness, replay parity, recall
-    vs brute force, and rescore exactness."""
-    from defactonlp_spark.operators.graphann import graph_ann_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return graph_ann_topk(emb, [0, 1, 2, 3, 4], k=10, n_centroids=16, n_probe=4).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "cos",
-    )
-
-
 def q_link_pagerank(spark, sf_dir):
     """Link-graph PageRank over the web corpus (Brin & Page 1998): damped
     power iteration with dangling-mass redistribution, 10 iterations, over
@@ -4630,12 +4606,13 @@ _WINDOW_R5 = [
     "filters_agg", "bm25_plus_topk", "domain_mix_kl", "significant_text",
     "url_canonical_dups", "url_blocklist_stats", "stratified_sample_stats",
     "span_first_topk",
-    # -- round-5 session additions (need their first driver row; they take
-    # the slots of the four canaries — bm25_topk / bm25_topk_wand (r03) /
-    # term_tf_totals (r03) / fever_submission (r04) are all already
-    # driver-green, so union coverage stays complete and every window slot
-    # holds a never-driver-checked entry) --
-    "graph_ann_topk", "link_pagerank", "link_hits", "textrank_keywords",
+    # -- round-5 additions (need their first correctness row; they took
+    # three of the four canary slots — bm25_topk_wand (r03) / term_tf_totals
+    # (r03) / fever_submission (r04) keep their green rows from older rounds) --
+    "link_pagerank", "link_hits", "textrank_keywords",
+    # -- canary: an already-green spine entry re-checked every round
+    # (scripts/window_audit.py lists the window's canaries) --
+    "bm25_topk",
 ]
 
 
@@ -4767,7 +4744,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_counts": q_token_counts,
         # -- rows-only by design (learned k-means / murmur3 — no twin) ----
         "ivf_ann_topk": q_ivf_ann_topk,
-        "graph_ann_topk": q_graph_ann_topk,
         "link_pagerank": q_link_pagerank,
         "link_hits": q_link_hits,
         "textrank_keywords": q_textrank_keywords,
@@ -8447,19 +8423,24 @@ WHERE rank <= {SAYT_K}
     # sweep overrides via SPARK_GRAFT_ORACLE_SF_DIR so each sweep scale
     # gets ITS corpus's quantizer — the same model ivf_ann_topk trains
     # engine-side at that sf, since ivf_train_np is deterministic on the
-    # id-sorted matrix regardless of which engine loaded it).
+    # id-sorted matrix regardless of which engine loaded it). Training reads
+    # the engine's sample (the first IVF_SAMPLE_ROWS ids, ivf_train's
+    # ORDER BY vec_id LIMIT); the margin checks cover every row.
     try:
         import duckdb as _dd
         import numpy as _np
 
-        from defactonlp_spark.operators.similarity import ivf_train_np as _ivt
+        from defactonlp_spark.operators.similarity import (
+            IVF_SAMPLE_ROWS as _ivn,
+            ivf_train_np as _ivt,
+        )
 
         _emb = _dd.sql(
             f"SELECT embedding FROM '{_osf}/embeddings.parquet' "
             "ORDER BY vec_id"
         ).fetchall()
         _mat = _np.array([r[0] for r in _emb], dtype=_np.float64)
-        _cents = _ivt(_mat, 16, 5)
+        _cents = _ivt(_mat[:_ivn], 16, 5)
         _nrm = _np.linalg.norm(_mat, axis=1, keepdims=True)
         _nrm[_nrm == 0.0] = 1.0
         _dots = (_mat / _nrm) @ _cents.T
@@ -8501,79 +8482,6 @@ scored AS (
          round(list_dot_product(qv, v)
                / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))), 6) AS cos
   FROM cand
-)
-SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank,
-       vec_id::BIGINT AS vec_id, cos
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cos DESC, vec_id) AS rank FROM scored)
-WHERE rank <= 10
-"""
-    except Exception:
-        pass
-    # graph_ann_topk: the NSW traversal is not SQL-expressible, but
-    # candidate generation is a PURE FUNCTION of the id-sorted cell matrix
-    # and query vector (graphann.nsw_candidates_np — ties by id, float64
-    # throughout), so the twin replays the same kernel single-node at the
-    # gate scale and inlines the (query_id, vec_id) candidate pairs;
-    # rescoring (exact cosine over raw vectors, round 6) then runs
-    # independently in SQL — the ivf_train_np inlined-learned-constants
-    # convention applied to a graph. Emitted only when every cell/probe
-    # decision clears a 1e-9 float margin (cells are assigned engine-side
-    # in Arrow batches vs full-matrix here; the margin makes BLAS blocking
-    # drift irrelevant); otherwise rows-only.
-    try:
-        import duckdb as _dd
-        import numpy as _np
-
-        from defactonlp_spark.operators.graphann import (
-            nsw_candidates_np as _nswc,
-            probe_cells_np as _pcells,
-        )
-        from defactonlp_spark.operators.similarity import ivf_train_np as _ivt
-
-        _rows = _dd.sql(
-            f"SELECT vec_id, embedding FROM '{_osf}/embeddings.parquet' "
-            "ORDER BY vec_id"
-        ).fetchall()
-        _ids = _np.array([r[0] for r in _rows], dtype=_np.int64)
-        _mat = _np.array([r[1] for r in _rows], dtype=_np.float64)
-        _cents = _ivt(_mat, 16, 5)
-        _nrm = _np.linalg.norm(_mat, axis=1, keepdims=True)
-        _nrm[_nrm == 0.0] = 1.0
-        _dots = (_mat / _nrm) @ _cents.T
-        _srt = -_np.sort(-_dots, axis=1)
-        _qmask = _np.isin(_ids, [0, 1, 2, 3, 4])
-        _cellm = float(_np.min(_srt[:, 0] - _srt[:, 1]))
-        _probem = float(_np.min(_srt[_qmask][:, 3] - _srt[_qmask][:, 4]))
-        if _cellm > 1e-9 and _probem > 1e-9:
-            _cells = _np.argmax(_dots, axis=1)
-            _probes = _pcells(_mat[_qmask], _cents, 4)
-            _qids = _ids[_qmask]
-            _pairs: set = set()
-            for _qi in range(len(_qids)):
-                for _c in _probes[_qi]:
-                    _m = _cells == _c
-                    _pairs.update(
-                        _nswc(
-                            _ids[_m],
-                            _mat[_m],
-                            [(int(_qids[_qi]), _mat[_ids == _qids[_qi]][0])],
-                        )
-                    )
-            _vals = ", ".join(
-                f"({q}, {v})" for q, v in sorted(_pairs) if q != v
-            )
-            d["graph_ann_topk"] = f"""
-WITH cand(query_id, vec_id) AS (VALUES {_vals}),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-scored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(q.v, t.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(t.v, t.v))), 6) AS cos
-  FROM cand c
-  JOIN e q ON q.vec_id = c.query_id
-  JOIN e t ON t.vec_id = c.vec_id
 )
 SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank,
        vec_id::BIGINT AS vec_id, cos

@@ -68,7 +68,7 @@ DO_S5OPS = os.environ.get("BENCH_S5OPS", "1") == "1"
 DO_R4C = os.environ.get("BENCH_R4C", "1") == "1"
 #: round-5 URL-curation + stratified-sampling ops at 320k synthetic URLs
 DO_R5OPS = os.environ.get("BENCH_R5OPS", "1") == "1"
-#: round-5 graph family (pagerank/HITS/textrank at 320k, NSW ANN at 100k)
+#: round-5 graph family (pagerank/HITS/textrank at 320k) + the IVF ANN curve at 100k
 DO_GRAPH = os.environ.get("BENCH_GRAPH", "1") == "1"
 MERGE_PAGES = int(os.environ.get("BENCH_MERGE_PAGES", "1000000"))
 # end-to-end near-dup dedup pipeline throughput over the webpages corpus:
@@ -817,23 +817,22 @@ def bench_graph_ops(cores: int, n_vectors: int = 100_000) -> dict:
     - textrank_keywords over the corpus (one positional-tokenize kernel
       pass feeds the co-occurrence graph; the iteration runs on the
       dictionary-scale term graph): docs/sec.
-    - graph_ann: per-cell NSW build + serve over ``n_vectors`` synthetic
+    - ivf_ann: the IVF recall/throughput curve over ``n_vectors`` synthetic
       CLUSTERED 64-d vectors (clustered is the honest ANN case — isotropic
-      random has no neighbor structure): end-to-end wall for 50 queries,
-      plus recall@10 vs the exact brute-force cosine_topk on the same
-      queries — the quality number that makes the throughput meaningful.
+      random has no neighbor structure). The quantizer is trained once and
+      shared; for each n_probe in (2, 4, 8), 50 queries report recall@10
+      against the exact cosine_topk and queries/sec.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from defactonlp_spark.operators.graphann import graph_ann_topk
     from defactonlp_spark.operators.linkgraph import (
         link_hits_topn,
         link_pagerank_topn,
         textrank_keywords,
     )
-    from defactonlp_spark.operators.similarity import cosine_topk
+    from defactonlp_spark.operators.similarity import cosine_topk, ivf_ann_topk, ivf_train
     from defactonlp_spark.plans.build import prepare_webpages
 
     spark = _spark(cores)
@@ -884,35 +883,26 @@ def bench_graph_ops(cores: int, n_vectors: int = 100_000) -> dict:
         ).persist()
         emb.count()
         qids = list(range(0, 5000, 100))  # 50 queries
-        t0, s0 = time.time(), _steal_jiffies()
-        # search params scaled up from the harness defaults (M=8/ef=24,
-        # pinned there by the twin) to fit the ~3k-member cells at this
-        # volume: beam quality must grow with cell size or recall decays
-        # (measured: ef=24 -> sim_ratio 0.901 at 100k; ef=64/M=12 below)
-        approx = graph_ann_topk(emb, qids, k=10, n_centroids=32, n_probe=4,
-                                M=12, ef=64)
-        apdf = approx.toPandas()
-        w = time.time() - t0
+        t0 = time.time()
+        cents = ivf_train(emb, 32)
+        train = time.time() - t0
         exact = cosine_topk(emb, qids, k=10).toPandas()
-        hits = sum(
-            len(set(apdf[apdf.query_id == q].vec_id)
-                & set(exact[exact.query_id == q].vec_id))
-            for q in qids
-        )
-        # recall@10 under-counts on clustered data where the top-10
-        # boundary is a sea of near-ties (the diagnostic showed approx
-        # mean-cos within 0.004 of exact while overlap dipped to 5/10);
-        # the similarity ratio (mean approx cos / mean exact cos, the ANN
-        # literature's relative-error metric) is the honest quality
-        # number alongside it.
-        out["graph_ann_100k"] = {
-            "vectors": n_vectors, "queries": len(qids),
-            "wall_sec": round(w, 2),
-            "queries_per_sec": round(len(qids) / w, 2),
-            "recall_at_10": round(hits / (10 * len(qids)), 3),
-            "sim_ratio": round(
-                float(apdf.cos.mean()) / float(exact.cos.mean()), 4
-            ),
+        truth = set(zip(exact.query_id, exact.vec_id))
+        curve, s0 = {}, _steal_jiffies()
+        for n_probe in (2, 4, 8):
+            t0 = time.time()
+            got = ivf_ann_topk(emb, qids, k=10, n_probe=n_probe, centroids=cents).toPandas()
+            w = time.time() - t0
+            curve[n_probe] = {
+                "recall_at_10": round(
+                    len(truth & set(zip(got.query_id, got.vec_id))) / (10 * len(qids)), 3
+                ),
+                "wall_sec": round(w, 2),
+                "queries_per_sec": round(len(qids) / w, 2),
+            }
+        out["ivf_ann_100k"] = {
+            "vectors": n_vectors, "queries": len(qids), "n_centroids": len(cents),
+            "train_sec": round(train, 2), "curve": curve,
             "steal_jiffies": _steal_jiffies() - s0,
         }
         return out
@@ -1368,7 +1358,7 @@ def main():
     if DO_R5OPS:
         results["r5_ops"] = bench_r5_ops(CPUS)
 
-    # -- round-5 graph family: pagerank/HITS/textrank at 320k, NSW ANN at 100k
+    # -- round-5 graph family: pagerank/HITS/textrank at 320k, IVF ANN at 100k
     if DO_GRAPH:
         results["graph_ops"] = bench_graph_ops(CPUS)
 
@@ -1482,8 +1472,8 @@ def _emit(results: dict) -> None:
     g = results.get("graph_ops") or {}
     if g:
         compact["pagerank_nodes_per_sec"] = (g.get("link_pagerank_320k") or {}).get("nodes_per_sec")
-        compact["graph_ann_recall_at_10"] = (g.get("graph_ann_100k") or {}).get("recall_at_10")
-        compact["graph_ann_sim_ratio"] = (g.get("graph_ann_100k") or {}).get("sim_ratio")
+        curve = (g.get("ivf_ann_100k") or {}).get("curve") or {}
+        compact["ivf_recall_at_10_by_probe"] = {p: c["recall_at_10"] for p, c in curve.items()}
     if "fixtures_warmup_sec" in results:
         compact["fixtures_warmup_sec"] = results["fixtures_warmup_sec"]
     print(json.dumps(_fit_line(compact)))

@@ -9,13 +9,14 @@
                         (signs of h deterministic pseudo-projections), then
                         brute-force only WITHIN candidate buckets (multi-probe
                         by Hamming-adjacent buckets). Approximate by design.
+- ``ivf_ann_topk``    : the one partitioned ANN path — a learned k-means
+                        coarse quantizer, exact cosine over the probed cells.
 
 Scale notes: brute-force is O(|Q| x |corpus|) — fine for reranking, wrong as
 the primary path at 10^9 vectors. LSH bucketing turns it into one shuffle on
 (bucket) with per-bucket brute force; bucket count 2^NBITS is tuned so the
-mean bucket fits an executor. An IVF variant (k-means coarse quantizer) is
-the next refinement; the plumbing (bucket column -> co-partitioned join) is
-identical.
+mean bucket fits an executor. IVF keeps the same plumbing (cell column ->
+co-partitioned join) with cells learned from the data.
 
 No reference analog: DeFactoNLP has no dense retrieval; this is part of the
 training-data-pipeline surface (task spec) built on the driver's
@@ -222,7 +223,14 @@ def with_lsh_bucket(
     the buckets — are bit-identical to the expression; pinned by
     tests/test_pipeline_ops.py::test_lsh_bucket_kernel_matches_expr).
     NULL embeddings get a NULL bucket (never join; same as the expression
-    path's null propagation)."""
+    path's null propagation).
+
+    The kernel is marked nondeterministic so it runs once per input row: a
+    join on ``out_col`` implies ``isnotnull(out_col)``, and Catalyst would
+    push that filter below the projection by inlining the kernel a second
+    time. No filter crosses a nondeterministic projection, so filter ``df``
+    down BEFORE calling this (a query-id filter after it would send the
+    whole corpus through the kernel). Same for :func:`with_ivf_cell`."""
     from pyspark.sql import types as T
 
     planes = np.stack([_hyperplane(dim, b) for b in range(n_bits)])  # (bits, dim)
@@ -240,7 +248,7 @@ def with_lsh_bucket(
             out[mask] = bucket.astype("int32")
         return pd.Series(out)
 
-    return df.withColumn(out_col, bucket_udf(F.col(vec_col)))
+    return df.withColumn(out_col, bucket_udf.asNondeterministic()(F.col(vec_col)))
 
 
 def lsh_ann_topk(
@@ -255,9 +263,9 @@ def lsh_ann_topk(
     """Approximate top-k: candidates share the query's LSH bucket (plus all
     Hamming-1 probes), then exact cosine within candidates."""
     emb = with_lsh_bucket(embeddings, vec_col, dim, n_bits)
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), F.col("bucket").alias("qbucket")
-    )
+    q = with_lsh_bucket(
+        embeddings.filter(F.col(id_col).isin(query_ids)), vec_col, dim, n_bits, "qbucket"
+    ).select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "qbucket")
     probes = F.array(
         F.col("qbucket"), *[F.col("qbucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)]
     )
@@ -348,13 +356,17 @@ def lsh_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
+#: rows ``ivf_train`` learns the quantizer from (the smallest ids)
+IVF_SAMPLE_ROWS = 100_000
+
+
 def ivf_train(
     embeddings: DataFrame,
     n_centroids: int = 16,
     n_iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_rows: int = 100_000,
+    sample_rows: int = IVF_SAMPLE_ROWS,
 ) -> np.ndarray:
     """Train the coarse quantizer: Lloyd's k-means on a deterministic sample,
     spherical (centroids L2-normalized; assignment by max dot = cosine).
@@ -368,9 +380,10 @@ def ivf_train(
 
     Pure numpy on the sample (n_centroids and dim are small); empty cells
     are re-seeded deterministically from the farthest points so exactly
-    n_centroids cells survive."""
+    n_centroids cells survive. NULL vectors are not part of the sample."""
     pdf = (
         embeddings.select(id_col, vec_col)
+        .filter(F.col(vec_col).isNotNull())
         .orderBy(id_col)
         .limit(sample_rows)
         .toPandas()
@@ -410,7 +423,8 @@ def with_ivf_cell(
     out_col: str = "cell",
 ) -> DataFrame:
     """Add the IVF cell id: argmax_c dot(v_hat, centroid_c). Vectorized
-    pandas_udf (one matmul per Arrow batch against the broadcast quantizer)."""
+    pandas_udf (one matmul per Arrow batch against the broadcast quantizer),
+    nondeterministic to run once per row (see :func:`with_lsh_bucket`)."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -428,7 +442,7 @@ def with_ivf_cell(
             out[mask] = np.argmax((mat / norms) @ cents.T, axis=1).astype("int32")
         return pd.Series(out)
 
-    return embeddings.withColumn(out_col, cell_udf(F.col(vec_col)))
+    return embeddings.withColumn(out_col, cell_udf.asNondeterministic()(F.col(vec_col)))
 
 
 def ivf_ann_topk(
@@ -455,7 +469,7 @@ def ivf_ann_topk(
         if centroids is None else centroids
     emb = with_ivf_cell(embeddings, cents, vec_col=vec_col)
 
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
+    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     # per-query probe cells: n_probe highest-dot centroids (tiny — computed

@@ -79,6 +79,35 @@ def check_score_terms(name: str, plan: str) -> bool:
     return ok
 
 
+def check_one_kernel(name: str, plan: str, udf: str, n_query: int) -> bool:
+    """ONE ArrowEvalPython node evaluates ``udf`` on the streamed (corpus)
+    side of the broadcast join and ``n_query`` on the broadcast (query)
+    side, each of those directly above the query-id IN filter."""
+    tree = plan.split("\n\n", 1)[0]
+    corpus, query = tree.split("BroadcastHashJoin", 1)[1].split("BroadcastExchange", 1)
+
+    def kernels(side):
+        return [i for i in re.findall(r"ArrowEvalPython \((\d+)\)", side)
+                if re.search(rf"\n\({i}\) ArrowEvalPython\n.*\nArguments: \[{udf}\(", plan)]
+
+    on_corpus, on_query = kernels(corpus), kernels(query)
+    filtered = [i for i in on_query
+                if (m := re.search(rf"ArrowEvalPython \({i}\)\n[ :]*\+- Filter \((\d+)\)", query))
+                and re.search(rf"\n\({m[1]}\) Filter\n.*\nCondition : [^\n]* IN \(", plan)]
+    print(f"== {name} ==")
+    ok = True
+    for good, what in (
+        (len(on_corpus) == 1, f"corpus-side {udf} nodes: {len(on_corpus)} (want 1)"),
+        (len(on_query) == n_query, f"query-side {udf} nodes: {len(on_query)} (want {n_query})"),
+        (filtered == on_query, f"query-side {udf} nodes above the query-id filter: {len(filtered)}"),
+    ):
+        print(f"  [{'x' if good else '!'}] {what}")
+        ok &= good
+    if not ok:
+        print(plan[:4000])
+    return ok
+
+
 def main():
     spark = get_spark("plans", cores=8, shuffle_partitions=8,
                       extra={"spark.ui.showConsoleProgress": "false"})
@@ -959,21 +988,17 @@ def main():
         must_not=["SortMergeJoin", "CartesianProduct"],
     )
 
-    # 60. graph ANN: the only data-scale exchange is the groupBy(cell)
-    # hashpartitioning feeding the per-cell applyInPandas graph pass
-    # (FlatMapGroupsInPandas); unprobed cells are pruned BEFORE it (isin on
-    # the probed-cell set); the rescore tail is broadcast-only. No
-    # cartesian, no SortMergeJoin anywhere.
-    from defactonlp_spark.operators.graphann import graph_ann_topk
+    # 60. vector kernels run once per row (similarity.py::with_lsh_bucket): the
+    # join's inferred isnotnull(cell/bucket) must not inline a second copy
+    # of the Python kernel below the projection. IVF's query side needs no
+    # cell; LSH's query side buckets only the query-id rows.
+    from defactonlp_spark.operators.similarity import ivf_ann_topk, lsh_ann_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    ok &= check(
-        "graph_ann_topk (one cell exchange + pandas graph pass + broadcast rescore)",
-        plan_of(graph_ann_topk(emb, [0, 1, 2], k=5)),
-        must=["FlatMapGroupsInPandas", "hashpartitioning(cell",
-              "BroadcastHashJoin", "cell#"],
-        must_not=["CartesianProduct", "SortMergeJoin"],
-    )
+    ok &= check_one_kernel("ivf_ann_topk (one corpus-side cell kernel)",
+                           plan_of(ivf_ann_topk(emb, [0, 1, 2], k=5)), "cell_udf", n_query=0)
+    ok &= check_one_kernel("lsh_ann_topk (one corpus-side bucket kernel)",
+                           plan_of(lsh_ann_topk(emb, [0, 1, 2], k=5)), "bucket_udf", n_query=1)
 
     # 61. link PageRank: per-iteration contribution aggregate is partial ->
     # final (map-side combine); the ONLY nested-loop join is the deliberate

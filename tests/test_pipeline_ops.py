@@ -2,6 +2,7 @@
 vs brute force, multimodal plumbing, incremental streaming build."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -241,6 +242,35 @@ def test_ivf_ann_vs_bruteforce(spark):
     merged = brute.merge(approx, on=["query_id", "vec_id"], suffixes=("_b", "_a"))
     if len(merged):
         assert (merged.cos_b == merged.cos_a).all()
+
+
+@pytest.mark.parametrize("arrow", ["false", "true"])
+def test_ivf_ann_null_query_vector(spark, arrow):
+    """A query id whose vector is NULL returns no rows; the other queries
+    return exactly the rows of a run without it. Checked with Arrow off
+    too, as a bare SparkSession runs."""
+    from defactonlp_spark.operators.similarity import ivf_ann_topk
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        mat = np.random.default_rng(3).standard_normal((200, 16))
+        dirty = spark.createDataFrame(
+            [(i, None if i == 1 else v.tolist()) for i, v in enumerate(mat)],
+            "vec_id long, embedding array<float>",
+        )
+
+        def rows(qids):
+            df = ivf_ann_topk(dirty, qids, k=5, n_centroids=8, n_probe=4).toPandas()
+            return df.sort_values(["query_id", "rank"]).reset_index(drop=True)
+
+        got, ref = rows([0, 1, 2]), rows([0, 2])
+        assert set(got.query_id) == {0, 2}
+        assert 1 not in set(got.vec_id)
+        pd.testing.assert_frame_equal(got, ref)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_ivf_train_deterministic(spark):

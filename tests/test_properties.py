@@ -540,56 +540,6 @@ def test_auto_dh_ladder_selection_is_monotone(epochs):
     assert hi // r1 - lo // r1 + 1 <= target or r1 == AUTO_DH_LADDER[-1]
 
 
-# --- NSW kernel (operators/graphann.py) ------------------------------------
-
-@given(st.integers(min_value=0, max_value=10_000), st.integers(min_value=2, max_value=40))
-@settings(deadline=None, max_examples=40)
-def test_nsw_beam_output_contract(seed, n):
-    """The properties the twin's correctness argument actually leans on:
-    returned candidates are distinct cell members, ordered exactly
-    (true sim desc, id asc) AMONG THEMSELVES, and the best-similarity
-    member reachable from the entry is always found when ef >= n.
-
-    Deliberately NOT asserted: full exhaustiveness at ef >= n — backlink
-    pruning to M can make a node unreachable from the entry (hypothesis
-    found seed=6336/n=15), which is inherent to NSW, affects only
-    RECALL, and is why the engine rescores exactly and reports recall +
-    sim_ratio against brute force instead of assuming the beam is
-    exhaustive."""
-    from defactonlp_spark.operators.graphann import nsw_candidates_np
-
-    rng = np.random.RandomState(seed)
-    mat = rng.randn(n, 8)
-    ids = rng.permutation(np.arange(1000, 1000 + n)).astype(np.int64)
-    q = rng.randn(8)
-    got = [v for _, v in nsw_candidates_np(ids, mat, [(7, q)], M=6, ef=n)]
-    assert len(got) == len(set(got)) > 0
-    assert set(got) <= set(ids.tolist())
-    order = np.argsort(ids, kind="stable")
-    sids, smat = ids[order], mat[order]
-    h = smat / np.linalg.norm(smat, axis=1, keepdims=True)
-    sims = {int(sids[i]): float(h[i] @ (q / np.linalg.norm(q))) for i in range(n)}
-    assert got == sorted(got, key=lambda v: (-sims[v], v))
-    # the entry node (lowest id) seeds the result heap and with ef >= n
-    # nothing is ever evicted, so it must always be returned
-    assert int(sids[0]) in set(got)
-
-
-@given(st.integers(min_value=0, max_value=10_000), st.integers(min_value=5, max_value=60))
-@settings(deadline=None, max_examples=30)
-def test_nsw_row_order_invariance(seed, n):
-    from defactonlp_spark.operators.graphann import nsw_candidates_np
-
-    rng = np.random.RandomState(seed)
-    mat = rng.randn(n, 6)
-    ids = np.arange(n, dtype=np.int64)
-    q = rng.randn(6)
-    a = nsw_candidates_np(ids, mat, [(0, q)], M=4, ef=10)
-    perm = rng.permutation(n)
-    b = nsw_candidates_np(ids[perm], mat[perm], [(0, q)], M=4, ef=10)
-    assert a == b
-
-
 # --- link extraction (functions/extract.py) --------------------------------
 
 @given(st.binary(max_size=2000))
