@@ -110,6 +110,44 @@ _TOKS_SQL = (
     "'[^a-z0-9]+'), t -> t <> '')) AS term FROM documents"
 )
 
+
+def _non_ascii_word_chars(sf_dir: str) -> list[str]:
+    """Non-ASCII characters of the corpus that the engine tokenizer keeps
+    inside tokens (letters and digits after NFD + casefold); [] when the
+    documents file is absent."""
+    import re
+    import unicodedata
+
+    import pyarrow.parquet as pq
+
+    from defactonlp_spark.functions.tokenize import TOKEN_RE
+
+    path = f"{sf_dir}/documents.parquet"
+    if not os.path.exists(path):
+        return []
+    chars = set()
+    for text in pq.read_table(path, columns=["text"]).column("text").to_pylist():
+        if text and not text.isascii():
+            chars.update(re.findall(r"[^\x00-\x7f]", text))
+    return sorted(
+        c for c in chars if TOKEN_RE.search(unicodedata.normalize("NFD", c).casefold())
+    )
+
+
+def _require_ascii_corpus(twin: str, sf_dir: str) -> None:
+    """Refuse to emit a twin whose SQL tokenizes with
+    ``split(lower(text), '[^a-z0-9]+')`` for the corpus in ``sf_dir``. That
+    split equals the engine tokenizer (NFD, casefold, runs of Unicode
+    letters and digits) only on ASCII text: on 'café' the engine emits
+    'cafe' and the split 'caf'."""
+    bad = _non_ascii_word_chars(sf_dir)
+    if bad:
+        raise ValueError(
+            f"{twin}: {sf_dir}/documents.parquet holds non-ASCII letters or digits "
+            f"({''.join(bad[:10])}); its lower(text) split on [^a-z0-9]+ matches the "
+            "engine tokenizer only on ASCII text, so no twin is emitted for this corpus"
+        )
+
 _CLAIMS_SQL = "(VALUES " + ", ".join(f"({i}, '{c}')" for i, c in BM25_CLAIMS) + ")"
 
 
@@ -3259,17 +3297,19 @@ SELECT rank, doc_id, auth_scaled, hub_scaled FROM (
     return "".join(parts)
 
 
-def _sql_textrank_keywords() -> str:
+def _sql_textrank_keywords(sf_dir: str) -> str:
     """Unrolled weighted-PageRank twin over the SQL-rebuilt co-occurrence
-    graph. No dangling-mass CTEs: the undirected edge relation gives every
-    node out-edges, so the engine's dangling term is exactly 0.0 and
-    base + d*(c + 0.0) == base + d*c bit-for-bit."""
+    graph of the corpus in ``sf_dir`` (ASCII only, see
+    :func:`_require_ascii_corpus`). No dangling-mass CTEs: the undirected
+    edge relation gives every node out-edges, so the engine's dangling term
+    is exactly 0.0 and base + d*(c + 0.0) == base + d*c bit-for-bit."""
     from defactonlp_spark.operators.linkgraph import (
         PR_DAMPING,
         TEXTRANK_ITERS,
         TEXTRANK_MIN_COUNT,
     )
 
+    _require_ascii_corpus("textrank_keywords", sf_dir)
     dmp = repr(PR_DAMPING)
     parts = [
         f"""
@@ -8382,6 +8422,7 @@ WHERE rank <= {SAYT_K}
     # documented exception (round-5 task #4).  The driver never sets it,
     # so its gate sees exactly the sf0.01 constants as before.
     _osf = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    _require_ascii_corpus("_TOKS_SQL", _osf)
     # drqa_tfidf_topk_hashed: DuckDB has no murmur3, but the hashed mode
     # differs from the unhashed pipeline ONLY through hash-id collisions
     # (colliding terms merge tf, sklearn semantics). When the corpus
@@ -8493,7 +8534,7 @@ WHERE rank <= 10
         pass
     d["link_pagerank"] = _sql_link_pagerank()
     d["link_hits"] = _sql_link_hits()
-    d["textrank_keywords"] = _sql_textrank_keywords()
+    d["textrank_keywords"] = _sql_textrank_keywords(_osf)
     d["frequent_item_sets"] = f"""
 WITH toks AS ({_TOKS_SQL}),
 items AS (SELECT DISTINCT doc_id, term AS item FROM toks),

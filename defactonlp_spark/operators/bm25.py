@@ -27,13 +27,44 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from defactonlp_spark.config import BM25Params
-from defactonlp_spark.functions.tokenize import tokenize_postings
+from defactonlp_spark.functions.tokenize import _batch_postings, tokenize_postings
 
 
 def claim_terms(claims: DataFrame, id_col: str = "claim_id", text_col: str = "claim") -> DataFrame:
-    """claims -> distinct (claim_id, term)."""
+    """claims -> distinct (claim_id, term): ``id_col`` long and ``term``
+    string, both non-null.
+
+    A batch already in driver memory — ``claims.isLocal()``, which is what
+    ``spark.createDataFrame(pandas_df)`` returns with Arrow on — is
+    tokenized on the driver: ``collect()`` over a local relation starts no
+    Spark job, the rows go through the same ``_batch_postings`` kernel the
+    ``mapInPandas`` stage runs, and the deduplicated pairs come back as a
+    local relation (built from an Arrow table, so it is local whatever the
+    session's Arrow setting). Nothing else is collected: any other input
+    (parquet or JSON claim sets, tuple-built frames, a projection over a
+    local relation, pandas frames in a session without Arrow) keeps the
+    distributed ``mapInPandas`` + ``distinct`` plan."""
+    if claims.isLocal():
+        import pandas as pd
+        import pyarrow as pa
+
+        rows = claims.collect()
+        pdf = pd.DataFrame(
+            {id_col: [r[id_col] for r in rows], text_col: [r[text_col] for r in rows]}
+        )
+        pairs = _batch_postings(pdf, id_col, text_col)[["doc_id", "term"]].drop_duplicates()
+        schema = T.StructType([
+            T.StructField(id_col, T.LongType(), False),
+            T.StructField("term", T.StringType(), False),
+        ])
+        return claims.sparkSession.createDataFrame(
+            pa.table({id_col: pa.array(pairs["doc_id"], pa.int64()),
+                      "term": pa.array(pairs["term"], pa.string())}),
+            schema,
+        )
     return (
         tokenize_postings(claims, id_col=id_col, text_col=text_col)
         .select(F.col("doc_id").alias(id_col), "term")

@@ -27,7 +27,7 @@ from defactonlp_spark.operators.bm25 import (
     score_exhaustive,
 )
 from defactonlp_spark.operators.segments import decode_slice
-from defactonlp_spark.operators.wand import term_in, wand_topk
+from defactonlp_spark.operators.wand import col_in, term_in, wand_topk
 from defactonlp_spark.plans.build import IndexReader
 
 DECODED_SCHEMA = T.StructType(
@@ -92,12 +92,16 @@ class ServingSession:
     relation it prunes cached RDD partitions via in-memory batch stats
     instead of parquet footers. ``close()`` releases executor storage.
 
-    Each ``topk`` batch runs through :func:`wand_topk`: the claims are
-    tokenized once into a local checkpoint, hashed into about one kernel
-    group per core (``EngineConfig.serve_claims_per_batch`` caps a group's
-    claims), and every cached slice a group needs ships to it once. So a
-    batch costs one tokenize pass, one term probe and one kernel stage that
-    runs a task on every core.
+    Each ``topk`` batch runs through :func:`claim_terms` and
+    :func:`wand_topk`: the claims are hashed into about one kernel group per
+    core (``EngineConfig.serve_claims_per_batch`` caps a group's claims),
+    and every cached slice a group needs ships to it once. A batch already
+    in driver memory (``spark.createDataFrame(pandas_df)``, a local
+    relation) is tokenized and summarized on the driver, so it costs only
+    the kernel query: the pruned scan of the cache, the gather and one
+    kernel stage that runs a task on every core — at most 4 Spark jobs. Any
+    other claim relation adds one tokenize pass into a local checkpoint and
+    one term probe.
 
     Scale note: MEMORY_AND_DISK distributes slices across the cluster's
     executor storage and spills cleanly when the index exceeds aggregate
@@ -153,7 +157,7 @@ def _pruned_postings(reader: IndexReader, q: DataFrame):
     seg = reader.segments()
     bks = reader.buckets_for_terms(terms)
     if bks and "bucket" in seg.columns:
-        seg = seg.filter(F.col("bucket").isin(bks))
+        seg = seg.filter(col_in("bucket", bks))
     hits = seg.filter(term_in(terms))
     # full-term df is carried on every slice; one row per (term) suffices
     stats = hits.groupBy("term").agg(F.first("df").alias("df"))
@@ -314,7 +318,7 @@ def query_phrase(
     toks = reader.tokens()
     bks = reader.buckets_for_terms(terms)
     if bks and "bucket" in toks.columns:
-        toks = toks.filter(F.col("bucket").isin(bks))
+        toks = toks.filter(col_in("bucket", bks))
     toks = toks.filter(term_in(terms))
 
     return score_phrase(

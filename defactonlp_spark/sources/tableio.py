@@ -9,9 +9,13 @@ same metadata model:
   numbered snapshot JSONs (``v00000001.json`` ...) and a ``VERSION_HINT``
   pointer, both committed via atomic rename (os.replace),
 - each snapshot records: snapshot_id, parent_id, operation, the full data
-  file list, row counts, and free-form properties (build lineage lives here),
+  file list, row counts, free-form properties (build lineage lives here) and
+  the table schema (as the Delta Lake log does), taken at commit from the
+  Spark schema the written parquet footers carry,
 - readers resolve the current snapshot and read exactly its file list, so a
-  concurrent writer can never expose a half-written table.
+  concurrent writer can never expose a half-written table; they pass the
+  recorded schema to the reader, so reading a committed table starts no
+  Spark job (an inferring parquet read runs one to open a footer).
 
 This gives the engine the three Iceberg properties the north rule leans on:
 snapshot isolation for resumable builds, lineage (input_snapshot recorded in
@@ -22,12 +26,18 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+#: parquet footer key under which Spark stores a written frame's schema; an
+#: inferring read takes its data columns from here (ParquetFileFormat)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -45,9 +55,76 @@ class Snapshot:
     dirs: list[str] = field(default_factory=list)
     #: hive partition columns (Iceberg: the partition spec); [] = unpartitioned
     partition_by: list[str] = field(default_factory=list)
+    #: the schema an inferring read of this snapshot returns, as Spark
+    #: StructType JSON (data columns, then partition columns; every field
+    #: nullable). None when it cannot be stated exactly — snapshots written
+    #: before the field existed, partition values that are not all integers,
+    #: or appends whose files disagree — and the read then infers it.
+    schema: dict | None = None
 
     def to_json(self) -> dict:
         return self.__dict__.copy()
+
+    @classmethod
+    def load(cls, path: str) -> "Snapshot":
+        """Read one snapshot JSON. Keys this version does not know are
+        ignored and missing ones take their defaults, so snapshots written
+        by older and newer versions of this class both load."""
+        with open(path) as f:
+            d = json.load(f)
+        return cls(**{k: v for k, v in d.items() if k in cls.__dataclass_fields__})
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """Spark's ``DataType.asNullable``: every field, element and map value
+    nullable, as a file-source read reports its data columns."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _partition_type(values: set[str]) -> T.DataType | None:
+    """The type Spark's partition inference gives a column with these
+    directory values when they are all integers (int if every value fits
+    32 bits, else long); None for anything else, which then stays inferred."""
+    if not values or not all(re.fullmatch(r"[+-]?[0-9]+", v) for v in values):
+        return None
+    ints = [int(v) for v in values]
+    if all(-(2**31) <= i < 2**31 for i in ints):
+        return T.IntegerType()
+    if all(-(2**63) <= i < 2**63 for i in ints):
+        return T.LongType()
+    return None
+
+
+def _files_schema(root: str, files: list[str], metas: list, partition_by: list[str]) -> dict | None:
+    """Schema JSON an inferring ``spark.read.parquet`` of ``files`` (hive
+    layout under ``root`` when ``partition_by``) returns, from their footer
+    ``metas`` alone; None when the files disagree or a column cannot be
+    stated."""
+    keys = {(m.metadata or {}).get(_SPARK_SCHEMA_KEY) for m in metas}
+    if len(keys) != 1 or None in keys:
+        return None
+    data = _as_nullable(T.StructType.fromJson(json.loads(keys.pop())))
+    fields = [f for f in data.fields if f.name not in partition_by]
+    for col in partition_by:
+        values = set()
+        for f in files:
+            for part in os.path.relpath(f, root).split(os.sep)[:-1]:
+                name, _, value = part.partition("=")
+                if name == col:
+                    values.add(value)
+        dt = _partition_type(values)
+        if dt is None:
+            return None
+        fields.append(T.StructField(col, dt, True))
+    return T.StructType(fields).jsonValue()
 
 
 class LocalTable:
@@ -73,9 +150,7 @@ class LocalTable:
         v = self.current_version()
         if v == 0:
             return None
-        with open(os.path.join(self.meta_dir, f"v{v:08d}.json")) as f:
-            d = json.load(f)
-        return Snapshot(**d)
+        return Snapshot.load(os.path.join(self.meta_dir, f"v{v:08d}.json"))
 
     def snapshots(self) -> list["Snapshot"]:
         """All committed snapshots, oldest first (the Iceberg `snapshots`
@@ -84,8 +159,7 @@ class LocalTable:
         without re-reading data."""
         out = []
         for v in range(1, self.current_version() + 1):
-            with open(os.path.join(self.meta_dir, f"v{v:08d}.json")) as f:
-                out.append(Snapshot(**json.load(f)))
+            out.append(Snapshot.load(os.path.join(self.meta_dir, f"v{v:08d}.json")))
         return out
 
     def _commit(self, snap: Snapshot) -> Snapshot:
@@ -106,7 +180,7 @@ class LocalTable:
     # -- data -------------------------------------------------------------
     def _write_files(
         self, df: DataFrame, partition_by: list[str] | None = None
-    ) -> tuple[str, list[str], int]:
+    ) -> tuple[str, list[str], int, dict | None]:
         part = os.path.join(self.data_dir, f"part-{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -124,8 +198,10 @@ class LocalTable:
         # row count from the WRITTEN files' parquet footers — `df.count()`
         # here would re-execute the producing plan (for segment appends that
         # is the whole salt+shuffle+encode pipeline, doubling the build)
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        return part, files, rows
+        metas = [pq.ParquetFile(f).metadata for f in files]
+        rows = sum(m.num_rows for m in metas)
+        schema = _files_schema(part, files, metas, list(partition_by or [])) if files else None
+        return part, files, rows, schema
 
     def overwrite(
         self,
@@ -133,7 +209,7 @@ class LocalTable:
         properties: dict | None = None,
         partition_by: list[str] | None = None,
     ) -> Snapshot:
-        part, files, rows = self._write_files(df, partition_by)
+        part, files, rows, schema = self._write_files(df, partition_by)
         parent = self.current_snapshot()
         return self._commit(
             Snapshot(
@@ -145,6 +221,7 @@ class LocalTable:
                 properties=dict(properties or {}, committed_at=time.time()),
                 dirs=[part],
                 partition_by=list(partition_by or []),
+                schema=schema,
             )
         )
 
@@ -159,9 +236,16 @@ class LocalTable:
             raise ValueError(
                 f"append partition_by {partition_by} != table spec {parent.partition_by}"
             )
-        part, files, rows = self._write_files(df, partition_by)
+        part, files, rows, schema = self._write_files(df, partition_by)
         prev_files = parent.files if parent else []
         prev_rows = parent.total_rows if parent else 0
+        if parent is not None and parent.files:
+            # one schema must describe every file; a write that added no
+            # file keeps the parent's
+            if not files:
+                schema = parent.schema
+            elif parent.schema != schema:
+                schema = None
         return self._commit(
             Snapshot(
                 snapshot_id=uuid.uuid4().hex,
@@ -172,6 +256,7 @@ class LocalTable:
                 properties=dict(properties or {}, committed_at=time.time()),
                 dirs=(parent.dirs if parent else []) + [part],
                 partition_by=list(partition_by or []),
+                schema=schema,
             )
         )
 
@@ -208,7 +293,7 @@ class LocalTable:
         # them), but a backfill-sized df must not be forced driver-side
         survivors = current.join(df.select(*key_cols).distinct(), key_cols, "left_anti")
         merged = survivors.unionByName(df.select(*current.columns))
-        part, files, rows = self._write_files(merged)
+        part, files, rows, schema = self._write_files(merged)
         return self._commit(
             Snapshot(
                 snapshot_id=uuid.uuid4().hex,
@@ -219,6 +304,7 @@ class LocalTable:
                 properties=dict(properties or {}, committed_at=time.time()),
                 dirs=[part],
                 partition_by=[],
+                schema=schema,
             )
         )
 
@@ -267,12 +353,17 @@ class LocalTable:
         and orphan dirs from failed appends are never referenced by a
         snapshot, so dir reads keep snapshot isolation. Unpartitioned
         snapshots read the exact file list.
+
+        The snapshot's recorded schema is handed to the reader, so no job
+        opens a footer to infer it; listing stays on the driver while a read
+        has at most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        (32) paths to list at one level — past that Spark lists with a job.
+        Snapshots without a recorded schema are read by inference.
         """
         if version is None:
             snap = self.current_snapshot()
         else:
-            with open(os.path.join(self.meta_dir, f"v{version:08d}.json")) as f:
-                snap = Snapshot(**json.load(f))
+            snap = Snapshot.load(os.path.join(self.meta_dir, f"v{version:08d}.json"))
         if snap is None or not snap.files:
             raise FileNotFoundError(f"table {self.path} has no committed snapshot")
         if snap.partition_by:
@@ -282,9 +373,15 @@ class LocalTable:
             # on every branch and the dir count == append count (small)
             from functools import reduce
 
-            parts = [spark.read.parquet(d) for d in snap.dirs]
+            parts = [self._reader(spark, snap).parquet(d) for d in snap.dirs]
             return reduce(lambda a, b: a.unionByName(b), parts)
-        return spark.read.parquet(*snap.files)
+        return self._reader(spark, snap).parquet(*snap.files)
+
+    @staticmethod
+    def _reader(spark: SparkSession, snap: Snapshot):
+        if snap.schema is None:
+            return spark.read
+        return spark.read.schema(T.StructType.fromJson(snap.schema))
 
     def exists(self) -> bool:
         return self.current_version() > 0

@@ -3,13 +3,20 @@ __spark_entry__.queries() entry at sf0.01 and compare against its
 oracle_sql() in DuckDB — row count, column names, and order-insensitive
 values (floats rounded). Usage:
 
-    python scripts/check_oracle.py [sf_dir] [name ...]
+    python scripts/check_oracle.py [--bare] [sf_dir] [name-or-glob ...]
 
-It imports the engine and the harness from the checkout it sits in.
+Names select entries (shell-style globs such as 'bm25*' allowed); none
+means every entry. ``--bare`` runs the entries in a stock
+``SparkSession.builder`` session — no Arrow, no engine daemon, no tuned
+configs (only the master, the core count, and ``SPARK_DRIVER_MEM`` as the
+driver heap when set) — the conditions a caller that never calls
+``get_spark`` gives the engine. It imports the engine and the harness from
+the checkout it sits in.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import sys
 import time
@@ -45,24 +52,44 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def bare_session():
+    """A stock session: master and core count only (plus the driver heap
+    from SPARK_DRIVER_MEM when set); no get_spark configuration."""
+    from pyspark.sql import SparkSession
+
+    b = SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
+    b = b.appName("oracle-check-bare").config("spark.ui.showConsoleProgress", "false")
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        b = b.config("spark.driver.memory", os.environ["SPARK_DRIVER_MEM"])
+    return b.getOrCreate()
+
+
 def main():
+    bare = "--bare" in sys.argv
+    if bare:
+        sys.argv.remove("--bare")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
     # Data-dependent twins (ivf centroids, drqa hashed vocab probe) learn
     # their inlined constants from this dir — set BEFORE oracle_sql() runs
     # so tri-scale sweeps regenerate per-sf models (round-5 task #4).
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    spark = get_spark("oracle-check", cores=16, shuffle_partitions=16,
-                      extra={"spark.ui.showConsoleProgress": "false"})
+    if bare:
+        spark = bare_session()
+    else:
+        spark = get_spark("oracle-check", cores=16, shuffle_partitions=16,
+                          extra={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, pat) for pat in only):
             continue
+        checked += 1
         t0 = time.time()
         try:
             mine = fn(spark, sf_dir).toPandas()
@@ -100,7 +127,9 @@ def main():
         print(f"{status} {name}: rows={len(a)} [{time.time()-t0:.1f}s]")
         if status != "ok  ":
             failures.append(name)
-    print("\n" + ("ALL OK" if not failures else f"FAILURES: {failures}"))
+    mode = " (bare session)" if bare else ""
+    print("\n" + (f"ALL OK {checked}/{checked}{mode}" if not failures
+                  else f"FAILURES{mode} {len(failures)}/{checked}: {failures}"))
     spark.stop()
     sys.exit(1 if failures else 0)
 

@@ -109,6 +109,18 @@ def check_one_kernel(name: str, plan: str, udf: str, n_query: int) -> bool:
 
 
 def main():
+    import shutil
+    import tempfile
+
+    # scratch tables go under $TMPDIR (default /tmp) and are removed at exit
+    work = tempfile.mkdtemp(prefix="plan_audit_")
+    try:
+        return audit(work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def audit(work: str) -> int:
     spark = get_spark("plans", cores=8, shuffle_partitions=8,
                       extra={"spark.ui.showConsoleProgress": "false"})
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -131,8 +143,8 @@ def main():
     postings = P.build_postings(docs)
     ok &= check("tokenize stage (1-file input: floor exchange)", plan_of(postings),
                 must=["MapInPandas", "REPARTITION_BY_NUM"])
-    docs.repartition(8).write.mode("overwrite").parquet("/tmp/plan_docs8")
-    wide = spark.read.parquet("/tmp/plan_docs8")
+    docs.repartition(8).write.mode("overwrite").parquet(f"{work}/plan_docs8")
+    wide = spark.read.parquet(f"{work}/plan_docs8")
     ok &= check("tokenize stage (8-file input: no exchange)",
                 plan_of(P.build_postings(wide)),
                 must=["MapInPandas"], must_not=["Exchange"])
@@ -173,8 +185,8 @@ def main():
     ok &= n_encode == 1 and "Exchange" not in above
 
     # 5. segment scan pruning by query terms
-    seg.write.mode("overwrite").parquet("/tmp/plan_seg")
-    segr = spark.read.parquet("/tmp/plan_seg").filter(F.col("term").isin(["the", "merge"]))
+    seg.write.mode("overwrite").parquet(f"{work}/plan_seg")
+    segr = spark.read.parquet(f"{work}/plan_seg").filter(F.col("term").isin(["the", "merge"]))
     ok &= check("segment term pruning", plan_of(segr), must=["PushedFilters: [In(term"])
 
     # 6. bucket-partitioned segment table: the serving scan prunes FILES via
@@ -182,10 +194,7 @@ def main():
     from defactonlp_spark.plans.build import IndexBuild, IndexReader
     from defactonlp_spark.plans.query import query_wand
 
-    idx_dir = "/tmp/plan_idx"
-    import shutil
-
-    shutil.rmtree(idx_dir, ignore_errors=True)
+    idx_dir = f"{work}/plan_idx"
     IndexBuild(idx_dir, cfg, build_id="plans", store_tokens=True).run(
         spark, docs, input_snapshot="plans"
     )
@@ -217,6 +226,21 @@ def main():
         "query_wand scan, >10 terms (InSet)",
         plan_of(query_wand(reader, claims12, k=5, cfg=cfg)),
         must=["PartitionFilters: [bucket", "PushedFilters: [In(term", "INSET"],
+    )
+    # a batch already in driver memory (pandas-created: a local relation)
+    # keeps the scan shape; its claim side is tokenized and summarized on
+    # the driver, so the kernel query reads it as a LocalTableScan and no
+    # tokenizer MapInPandas node is left in the plan
+    import pandas as pd
+
+    claims_local = spark.createDataFrame(
+        pd.DataFrame({"claim_id": [0], "claim": ["the merge join"]})
+    )
+    ok &= check(
+        "query_wand scan, local batch",
+        plan_of(query_wand(reader, claims_local, k=5, cfg=cfg)),
+        must=["PartitionFilters: [bucket", "PushedFilters: [In(term", "LocalTableScan"],
+        must_not=["MapInPandas"],
     )
 
     # 7. phrase serving: the positional-sidecar scan prunes files (bucket)
@@ -1106,8 +1130,8 @@ def main():
 
     print("\nPLANS " + ("OK" if ok else "NOT OK"))
     spark.stop()
-    sys.exit(0 if ok else 1)
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

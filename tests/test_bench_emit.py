@@ -66,3 +66,54 @@ def test_failure_sentinels_never_hidden():
     assert out["queries"]["broken_query_a"] == -1.0
     assert out["queries"]["broken_query_b"] == -1.0
     assert len(json.dumps(out)) <= bench._MAX_LINE
+
+
+class _Sink:
+    """Stand-in for ``df.write.format("noop").mode(...).save()``."""
+
+    @property
+    def write(self):
+        return self
+
+    def format(self, _):
+        return self
+
+    def mode(self, _):
+        return self
+
+    def save(self):
+        return None
+
+
+def _fine(spark, sf_dir):
+    return _Sink()
+
+
+def _broken(spark, sf_dir):
+    raise ZeroDivisionError("float division by zero\n  at some deeper frame")
+
+
+def test_broken_entry_reason_reaches_the_line():
+    walls, errors = bench.time_queries(None, {"fine_query": _fine, "broken_query": _broken}, "/nowhere")
+    assert walls["broken_query"] == -1.0 and walls["fine_query"] >= 0.0
+    assert errors == {"broken_query": "ZeroDivisionError: float division by zero"}
+    c = _compact(300)
+    c["queries"].update(walls)
+    c["query_errors"] = errors
+    line = json.dumps(bench._fit_line(c))
+    assert len(line) <= bench._MAX_LINE
+    assert '"broken_query": -1.0' in line
+    assert '"broken_query": "ZeroDivisionError: float division by zero"' in line
+
+
+def test_many_failure_reasons_still_fit():
+    c = _compact(150)
+    names = sorted(c["queries"])[:60]
+    for n in names:
+        c["queries"][n] = -1.0
+    c["query_errors"] = {n: "AnalysisException: " + "x" * 150 for n in names}
+    out = bench._fit_line(c)
+    assert len(json.dumps(out)) <= bench._MAX_LINE
+    assert out["query_errors"]
+    assert all(len(v) <= 80 for v in out["query_errors"].values())
+    assert len(out["query_errors"]) + out["query_errors_omitted"] == 60

@@ -148,3 +148,100 @@ def test_snapshot_diff_add_remove_update(spark, tmp_path):
         for r in t.snapshot_diff(spark, 1, 2, ["doc_id"]).collect()
     }
     assert diff == {(4, "added"), (3, "removed"), (2, "updated")}
+
+
+def _read_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred(spark, snap):
+    """The snapshot read the way it was before schemas were recorded."""
+    from dataclasses import replace
+
+    return LocalTable._reader(spark, replace(snap, schema=None))
+
+
+def test_stored_schema_reads_exactly_like_inference(spark, tmp_path):
+    """Every table a build writes reads with its recorded schema — no job —
+    into exactly the schema and rows an inferring read returns."""
+    import os
+    from functools import reduce
+
+    from defactonlp_spark.config import EngineConfig
+    from defactonlp_spark.plans.build import IndexBuild, delete_docs, prepare_webpages
+    from defactonlp_spark.sources.fixtures import gen_webpages
+
+    out = str(tmp_path / "idx")
+    pages = spark.createDataFrame(gen_webpages(n=120, seed=31))
+    IndexBuild(out, EngineConfig(), build_id="schema", store_tokens=True).run(
+        spark, prepare_webpages(pages), input_snapshot="fixture:120"
+    )
+    delete_docs(spark, out, spark.createDataFrame([(1,), (2,)], "doc_id long"))
+    for name in ("segments", "tokens", "checkpoints", "metrics", "manifest", "deletes"):
+        t = LocalTable(os.path.join(out, name))
+        snap = t.current_snapshot()
+        assert snap.schema is not None, name
+        got, n_jobs = _read_jobs(spark, lambda: t.read(spark))
+        assert n_jobs == 0, name
+        inf = _inferred(spark, snap)
+        if snap.partition_by:
+            want = reduce(lambda a, b: a.unionByName(b), [inf.parquet(d) for d in snap.dirs])
+        else:
+            want = inf.parquet(*snap.files)
+        assert got.schema == want.schema, name
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), name
+    # the default 32 buckets stay within Spark's driver-side listing limit
+    assert len({f.split("bucket=")[1].split("/")[0] for f in
+                LocalTable(os.path.join(out, "segments")).current_snapshot().files}) <= 32
+
+
+def test_snapshot_without_schema_still_reads(spark, tmp_path):
+    """Snapshot JSON from before the schema field (or with it dropped)
+    loads and reads by inference; a later append keeps inferring."""
+    import json
+    import os
+
+    t = LocalTable(str(tmp_path / "old"))
+    df = spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "id long, bucket int, v string")
+    t.append(df, partition_by=["bucket"])
+    want = t.read(spark)
+    path = os.path.join(t.meta_dir, f"v{t.current_version():08d}.json")
+    with open(path) as f:
+        d = json.load(f)
+    d.pop("schema")
+    d["written_by_a_newer_version"] = True
+    with open(path, "w") as f:
+        json.dump(d, f)
+    assert t.current_snapshot().schema is None
+    got, n_jobs = _read_jobs(spark, lambda: t.read(spark))
+    assert n_jobs >= 1  # inference opens a footer
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    snap = t.append(df, partition_by=["bucket"])
+    assert snap.schema is None
+    assert t.read(spark).count() == 4
+
+
+def test_schema_is_left_to_inference_when_it_cannot_be_stated(spark, tmp_path):
+    """A non-integer partition value, or an append whose files disagree
+    with the table's, records no schema."""
+    t = LocalTable(str(tmp_path / "strpart"))
+    t.overwrite(spark.createDataFrame([(1, "x")], "id long, lang string"), partition_by=["lang"])
+    assert t.current_snapshot().schema is None
+    assert dict(t.read(spark).dtypes) == {"id": "bigint", "lang": "string"}
+
+    u = LocalTable(str(tmp_path / "drift"))
+    u.append(spark.createDataFrame([(1, "a")], "id long, v string"))
+    assert u.current_snapshot().schema is not None
+    u.append(spark.createDataFrame([(2, "b")], "id int, v string"))
+    assert u.current_snapshot().schema is None

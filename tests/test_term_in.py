@@ -46,3 +46,21 @@ def test_term_in_pushes_down(spark, terms_df, tmp_path):
         pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
         assert pushed and "In(term" in pushed[0], plan
         assert ("INSET" in plan) == (len(values) > 10), plan
+
+
+def test_col_in_on_a_partition_column_prunes_files(spark, tmp_path):
+    """Integer values (a serving batch's bucket list) become one IN
+    expression that still reaches the scan as PartitionFilters."""
+    from defactonlp_spark.operators.wand import col_in
+
+    path = str(tmp_path / "parts")
+    spark.range(40).selectExpr("id", "cast(id % 8 as int) AS bucket").write.partitionBy(
+        "bucket").parquet(path)
+    df = spark.read.parquet(path)
+    for values in ([3], [0, 2, 5], list(range(12)), []):
+        want = _ids(df.filter(F.col("bucket").isin(values)))
+        assert _ids(df.filter(col_in("bucket", values))) == want
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.filter(col_in("bucket", [0, 2, 5])).explain("formatted")
+    assert "PartitionFilters: [" in buf.getvalue() and "bucket" in buf.getvalue()
