@@ -78,5 +78,9 @@ class EngineConfig:
     #: filter (parquet row-group stat pruning applies — segments are written
     #: term-sorted). The distinct-term count is bounded by the vocabulary
     #: (Heaps' law), not by |claims|; beyond the bound a term semi-join
-    #: prunes instead (no driver materialization).
+    #: prunes instead (no driver materialization). The same number also
+    #: caps WAND serving's other plan literal: a local claim batch ships its
+    #: claim side as one term -> (group, claim ids) map literal instead of a
+    #: joined relation only with at most min(this, wand.CLAIM_MAP_MAX_PAIRS)
+    #: distinct (claim, term) pairs (operators/wand.py::wand_topk).
     isin_pushdown_max_terms: int = 20_000

@@ -17,13 +17,17 @@ BM25 path. Three pinned choices make that provable:
 Distribution model: segments are term-range partitioned (build layout), so a
 claim's terms live in several partitions. The query plan hashes each claim
 to a kernel group (about one group per core), gathers each group's
-(term, salt) slices with a join on term, and runs the kernels in ONE
-cogrouped ``applyInPandas`` stage with one task per core — the shuffle
-moves only compressed blobs of the query's terms (bounded per slice by
-salting), never the corpus, and nothing claim-shaped from a distributed
-input is ever collected to the driver (a claim batch that is already a
-local relation is summarized there, see :func:`wand_topk`). Inside the
-kernel,
+(term, salt) slices — every gathered row carrying its group and the
+group's claim ids that hold its term — and runs the kernels in ONE grouped
+``applyInPandas`` stage with one task per core. The shuffle moves only
+compressed blobs of the query's terms (bounded per slice by salting),
+never the corpus. The claims ride as data in the gathered rows, or, for a
+small batch that is already a local relation, as one map literal in the
+plan — so in every scan task's serialized binary and in the logged plan
+description — of at most :data:`CLAIM_MAP_MAX_PAIRS` (claim, term) pairs
+(see :func:`wand_topk`). Nothing claim-shaped rides the Python task
+closure, and nothing claim-shaped from a distributed input is ever
+collected to the driver. Inside the kernel,
 decode is deferred: the dense/WAND planning uses only the ``n`` column,
 dense claims decode just the slices they touch, and WAND cursors
 decompress lazily block by block.
@@ -37,6 +41,8 @@ BASELINE.json.
 from __future__ import annotations
 
 import heapq
+import itertools
+import json
 
 import numpy as np
 import pandas as pd
@@ -430,6 +436,38 @@ def term_in(terms: list[str]) -> Column:
     return col_in("term", terms)
 
 
+#: term -> [(kernel group, claim ids)]: the claim side of a local batch as
+#: one literal (:func:`claims_by_term`)
+CLAIM_MAP_TYPE = "map<string, array<struct<grp: int, claims: array<bigint>>>>"
+
+#: the largest local batch, in distinct (claim, term) pairs, whose claim
+#: side is one plan literal rather than a joined relation. The literal
+#: saves the join form's broadcast job (a fixed 30-60 ms, and the scan
+#: waits for it), but it is serialized into every scan task's binary,
+#: rendered into the plan description and searched key by key (Spark's
+#: map ``element_at`` is linear) for every slice row, so its cost grows
+#: with the batch. Measured with query_wand on a 2,000-page index, 4 vCPU,
+#: local[4]: the literal is 40-170 ms faster per batch up to 1,381 pairs,
+#: even at 2,300-3,300, and slower past that (0.1 s at 4,639 pairs, 0.3 s
+#: at 18,560); a hashed lookup still lost to the join at 18,560 pairs, so
+#: the literal's size, not only the key search, sets this crossover.
+CLAIM_MAP_MAX_PAIRS = 2_048
+
+
+def claims_by_term(gather: list[tuple[str, int, list[int]]]) -> Column:
+    """(term, grp, claim ids) rows -> one ``map<term, array<struct<grp,
+    claims>>>`` literal.
+
+    Built as ``from_json`` of one JSON string, which the optimizer folds
+    into a map literal: one py4j call, and no relation, so no broadcast
+    job. ``json.dumps`` escapes every character a term can hold (quotes,
+    backslash, control and non-ASCII characters)."""
+    m: dict[str, list[dict]] = {}
+    for term, grp, claims in gather:
+        m.setdefault(term, []).append({"grp": grp, "claims": claims})
+    return F.from_json(F.lit(json.dumps(m)), CLAIM_MAP_TYPE)
+
+
 def wand_topk(
     segments: DataFrame,
     qterms: DataFrame,
@@ -463,38 +501,53 @@ def wand_topk(
        kernel groups by ONE expression, ``pmod(xxhash64(claim_id), G)`` —
        no shuffle. A serving-sized claim batch gets one group per core;
        huge claim sets get groups of bounded size. A claim's score never
-       depends on its group, so results do not either.
+       depends on its group, so results do not either. The gather side is
+       one (term, grp, claims) entry per (term, group): ``claims`` are the
+       group's claim ids whose terms include the term.
 
        - ``qterms.isLocal()`` (a local relation exactly as passed in, e.g.
          :func:`~defactonlp_spark.operators.bm25.claim_terms` of a
          pandas-created batch): its rows are collected — no job over a
-         local relation — for the exact claim count, the sorted distinct
-         terms and the distinct (group, term) pairs, with the group
-         expression evaluated by Spark over the local relation (folded
-         into it, so again no job). The pairs become the gather side as a
-         local relation. No checkpoint, probe or distinct job runs.
+         local relation — with the group expression evaluated by Spark over
+         the local relation (folded into it, so again no job), for the
+         exact claim count, the sorted distinct terms and the gather
+         entries. With at most :data:`CLAIM_MAP_MAX_PAIRS` (and at most
+         ``cfg.isin_pushdown_max_terms``) distinct (claim, term) pairs the
+         entries become ONE map literal (:func:`claims_by_term`), the
+         *literal form*; a bigger batch becomes a local relation, the
+         *join form*. No checkpoint, probe or distinct job runs.
        - otherwise the distinct (claim_id, term) relation is computed ONCE
          into a local checkpoint (whose job also estimates the claim count
-         with HLL); the term probe and both kernel inputs read that copy;
+         with HLL); the term probe and the gather side — a
+         ``collect_list`` aggregate, the join form — read that copy;
     2. the segment scan is pruned to the query's DISTINCT terms — taken
        from the summary or collected by the probe (one job: limit+1 rows)
        for an ``IN``-list pushdown (:func:`term_in`; parquet row-group stats
        apply; the distinct term count is vocabulary-bounded by Heaps' law,
        NOT |claims|-bounded) when small, a term semi-join beyond
-       ``cfg.isin_pushdown_max_terms``;
-    3. slices join (group, term) so each blob ships ONCE PER GROUP (not per
-       claim — claims share Zipf-head terms, so per-claim gathering
-       multiplies the heaviest blobs by |claims|; measured 9x). The join is
-       unhinted: AQE broadcasts the group-term side when it is small and
-       falls back to a shuffle join when a huge claim set makes it large —
-       either way the blob volume is the inherent per-group duplication;
-    4. ONE cogrouped ``applyInPandas`` stage receives each group's claim->
-       term rows AS DATA (left cogroup side) and its slices (right side) —
-       nothing claim-shaped rides the task closure. Both sides are placed
-       by group id into exactly ``defaultParallelism`` partitions, so AQE
-       cannot coalesce the kernel stage below the core count. Per claim
-       the planner picks the vectorized dense kernel or lazy block-max WAND
-       by candidate volume; both are bit-identical
+       ``cfg.isin_pushdown_max_terms``. The literal form always takes the
+       ``IN`` list: its terms are at most its pairs;
+    3. each pruned slice row gains (grp, claims) once per group that needs
+       its term, so each blob ships ONCE PER GROUP (not per claim — claims
+       share Zipf-head terms, so per-claim gathering multiplies the
+       heaviest blobs by |claims|; measured 9x). The literal form looks the
+       term up in the map and explodes it (``inline(element_at(map,
+       term))``): no relation, no broadcast job, and the scan starts at
+       once; the map goes out in the plan, so in each scan task's binary.
+       The join form joins on term unhinted: AQE broadcasts the
+       gather side when it is small and falls back to a shuffle join when
+       a huge claim set makes it large — either way the blob volume is the
+       inherent per-group duplication;
+    4. ONE grouped ``applyInPandas`` stage over that one relation: each
+       group's kernel rebuilds its claims' term lists from the rows'
+       ``claims`` — nothing claim-shaped rides the Python closure, and a
+       claim with no indexed term has no rows and returns none. The rows
+       are placed by group id into exactly ``defaultParallelism``
+       partitions (one shuffle), so AQE cannot coalesce the kernel stage
+       below the core count. A literal-form batch thus runs 2 Spark jobs:
+       the pruned scan with its shuffle write, then the kernel stage. Per
+       claim the planner picks the vectorized dense kernel or lazy
+       block-max WAND by candidate volume; both are bit-identical
        (tests/test_topk_parity.py).
     """
     spark = segments.sparkSession
@@ -506,33 +559,44 @@ def wand_topk(
     def n_groups_for(n_claims: int) -> int:
         return max(par, -(-n_claims // max(cfg.serve_claims_per_batch, 1)))
 
+    claim_map = None
     if qterms.isLocal():
-        # -- 1-3, local batch: the claim side is summarized on the driver --
+        # -- 1, local batch: the claim side is summarized on the driver -----
         # collect() over a local relation (and over a projection of one,
         # which Catalyst folds into it) starts no job. A batch of up to
         # par * serve_claims_per_batch claims keeps G = par and is
         # collected once; a larger one again, grouped by its own G.
         def grouped(n_groups: int):
-            qt_g = qterms.select("claim_id", "term", group_of(n_groups).alias("grp"))
-            return qt_g, qt_g.collect()
+            return qterms.select("claim_id", "term", group_of(n_groups)).collect()
 
-        qt_g, rows = grouped(par)
+        rows = grouped(par)
         n_groups = n_groups_for(len({r[0] for r in rows}))
         if n_groups != par:
-            qt_g, rows = grouped(n_groups)
-        pairs = sorted({(r[2], r[1]) for r in rows})
-        terms = sorted({t for _, t in pairs})
+            rows = grouped(n_groups)
+        # distinct (term, grp, claim_id); grp is a function of the claim, so
+        # there is one entry per distinct (claim, term) pair
+        pairs = sorted({(r[1], r[2], r[0]) for r in rows})
+        terms = sorted({t for t, _, _ in pairs})
         if not terms:
             return spark.createDataFrame([], RESULTS_SCHEMA)
-        import pyarrow as pa
+        gather = [
+            (t, g, [c for _, _, c in run])
+            for (t, g), run in itertools.groupby(pairs, key=lambda p: p[:2])
+        ]
+        if len(pairs) <= min(CLAIM_MAP_MAX_PAIRS, cfg.isin_pushdown_max_terms):
+            claim_map = claims_by_term(gather)
+        else:
+            import pyarrow as pa
 
-        group_terms = spark.createDataFrame(
-            pa.table({"s_grp": pa.array([g for g, _ in pairs], pa.int32()),
-                      "term": pa.array([t for _, t in pairs], pa.string())}),
-            "s_grp int, term string",
-        )
-        if len(terms) > cfg.isin_pushdown_max_terms:
-            terms, terms_df = None, group_terms.select("term").distinct()
+            g_terms, g_grps, g_claims = zip(*gather)
+            group_terms = spark.createDataFrame(
+                pa.table({"term": pa.array(g_terms, pa.string()),
+                          "grp": pa.array(g_grps, pa.int32()),
+                          "claims": pa.array(g_claims, pa.list_(pa.int64()))}),
+                "term string, grp int, claims array<bigint>",
+            )
+            if len(terms) > cfg.isin_pushdown_max_terms:
+                terms, terms_df = None, group_terms.select("term").distinct()
     else:
         from pyspark.sql import Observation
 
@@ -545,7 +609,6 @@ def wand_topk(
             .observe(seen, F.approx_count_distinct("claim_id").alias("n_claims"))
             .localCheckpoint()
         )
-        qt_g = qt.withColumn("grp", group_of(n_groups_for(seen.get["n_claims"])))
         # -- 2. the term probe: one job probes AND fetches — collect
         # limit+1 rows; past the limit they are discarded and the semi-join
         # path runs, below it they ARE the pushdown list (no count() job)
@@ -556,10 +619,10 @@ def wand_topk(
         terms = None
         if len(probe_rows) <= cfg.isin_pushdown_max_terms:
             terms = sorted(r["term"] for r in probe_rows)
-        # -- 3. the gather side: a fresh alias for its group column — both
-        # cogroup sides descend from qt, and Spark's ambiguous-self-join
-        # check rejects the same attribute id on both sides
-        group_terms = qt_g.select(F.col("grp").alias("s_grp"), "term").distinct()
+        group_terms = (
+            qt.groupBy(group_of(n_groups_for(seen.get["n_claims"])).alias("grp"), "term")
+            .agg(F.collect_list("claim_id").alias("claims"))
+        )
 
     # -- 2. segment pruning on the distinct terms ---------------------------
     if terms is not None:
@@ -587,41 +650,37 @@ def wand_topk(
         else:
             hits = segments.join(terms_df, "term", "left_semi")
 
-    # -- 3. per-group gather ------------------------------------------------
-    joined = hits.join(group_terms, "term", "inner")
+    # -- 3. per-group gather: every slice row gains (grp, claims) ----------
+    if claim_map is not None:
+        joined = hits.select("*", F.inline(F.element_at(claim_map, F.col("term"))))
+    else:
+        joined = hits.join(group_terms, "term", "inner")
+
+    # -- sharded fan-out (operators/sharding.py): the shard folds into the
+    # kernel group, so each (group, shard) kernel computes a LOCAL top-k
+    # over its shard's slices with GLOBAL stats; a window over the claims x
+    # shards x k local winners keeps the global k, with the kernels' exact
+    # tie-break (score desc, doc_id asc) — so the result is rank-and-score
+    # identical to the unsharded path.
+    if n_shards is not None:
+        joined = joined.withColumn("grp", F.col("grp") * n_shards + F.col("shard"))
 
     params, bs, dense_thresh = cfg.bm25, cfg.block_size, cfg.dense_eval_threshold
 
-    # -- 4. cogrouped kernel: claim rows arrive as data, not closure --------
-    def per_group_fn(key: tuple, claims_pdf: pd.DataFrame, slices_pdf: pd.DataFrame) -> pd.DataFrame:
-        group_claims = [
-            (int(cid), g["term"].tolist())
-            for cid, g in claims_pdf.groupby("claim_id", sort=True)
-        ]
+    # -- 4. one-sided kernel: the claims arrive with the slices, as data ----
+    def per_group_fn(slices_pdf: pd.DataFrame) -> pd.DataFrame:
+        terms_of: dict[int, set[str]] = {}
+        for term, claims in zip(slices_pdf["term"], slices_pdf["claims"]):
+            for cid in claims:
+                terms_of.setdefault(int(cid), set()).add(term)
+        group_claims = [(cid, sorted(ts)) for cid, ts in sorted(terms_of.items())]
         return _batch_kernel(
             slices_pdf, group_claims, n_docs, avgdl, k, params, bs, dense_thresh,
             deletes=deletes,
         )
 
-    # -- sharded fan-out (operators/sharding.py): each (group, shard) cogroup
-    # computes a LOCAL top-k over its shard's slices with GLOBAL stats; a
-    # window over the claims x shards x k local winners keeps the global k,
-    # with the kernels' exact tie-break (score desc, doc_id asc) — so the
-    # result is rank-and-score identical to the unsharded path. The claim
-    # side replicates to the shard list via a broadcast range (n_shards
-    # rows), never self-joining the gather relation. The pair folds into one
-    # key column: partitioning placed by an expression over two columns
-    # would not satisfy a two-column cogroup, and Spark would shuffle again.
-    if n_shards is not None:
-        shards = spark.range(n_shards).select(F.col("id").cast("int").alias("_shard"))
-        qt_g = qt_g.crossJoin(F.broadcast(shards)).withColumn(
-            "grp", F.col("grp") * n_shards + F.col("_shard")
-        )
-        joined = joined.withColumn("s_grp", F.col("s_grp") * n_shards + F.col("shard"))
-
     local = (
-        qt_g.repartitionById(par, "grp").groupBy("grp")
-        .cogroup(joined.repartitionById(par, "s_grp").groupBy("s_grp"))
+        joined.repartitionById(par, "grp").groupBy("grp")
         .applyInPandas(per_group_fn, schema=RESULTS_SCHEMA)
     )
     if n_shards is None:

@@ -733,8 +733,14 @@ class IndexReader:
         (config.max_serving_deletes) guards the driver/closure size using
         the tombstone table's METADATA row count (an upper bound — appends
         may repeat ids) — when it trips, compact with merge_builds instead
-        of serving an unboundedly growing live-docs mask."""
+        of serving an unboundedly growing live-docs mask.
+
+        The ``doc_id`` column of the current snapshot's files is read on the
+        driver with pyarrow (the same footer and file access as
+        :func:`_parquet_rows`), so a serving batch starts no Spark job for
+        its tombstones."""
         import numpy as np
+        import pyarrow.parquet as pq
 
         tbl = LocalTable(os.path.join(self.out_dir, "deletes"))
         snap = tbl.current_snapshot()
@@ -746,12 +752,10 @@ class IndexReader:
                 f"{max_rows}); compact the index with merge_builds before "
                 "serving, or raise config.max_serving_deletes"
             )
-        pdf = tbl.read(self.spark).select("doc_id").distinct().toPandas()
-        if pdf.empty:
-            return None
-        arr = pdf["doc_id"].to_numpy(dtype="int64")
-        arr.sort()
-        return arr
+        ids = [pq.read_table(f, columns=["doc_id"]).column("doc_id").drop_null().to_numpy()
+               for f in snap.files]
+        arr = np.unique(np.concatenate(ids)).astype(np.int64) if ids else np.empty(0, np.int64)
+        return arr if arr.size else None
 
     @property
     def boundaries(self) -> list[str]:

@@ -97,11 +97,14 @@ class ServingSession:
     core (``EngineConfig.serve_claims_per_batch`` caps a group's claims),
     and every cached slice a group needs ships to it once. A batch already
     in driver memory (``spark.createDataFrame(pandas_df)``, a local
-    relation) is tokenized and summarized on the driver, so it costs only
-    the kernel query: the pruned scan of the cache, the gather and one
-    kernel stage that runs a task on every core — at most 4 Spark jobs. Any
-    other claim relation adds one tokenize pass into a local checkpoint and
-    one term probe.
+    relation) is tokenized and summarized on the driver. Up to
+    ``wand.CLAIM_MAP_MAX_PAIRS`` (claim, term) pairs its claims ride the
+    pruned scan as one map literal, so it costs 2 Spark jobs: the pruned
+    scan of the cache with its gather shuffle, and one kernel stage that
+    runs a task on every core; a bigger one adds the broadcast job of a
+    joined claim relation. Any other claim relation adds one tokenize pass
+    into a local checkpoint, one term probe and a join onto the gathered
+    slices.
 
     Scale note: MEMORY_AND_DISK distributes slices across the cluster's
     executor storage and spills cleanly when the index exceeds aggregate
@@ -144,6 +147,16 @@ class ServingSession:
             self.segments.unpersist()
 
 
+def _distinct_terms(q: DataFrame) -> list[str]:
+    """The distinct ``term`` values of a query relation. A local relation
+    (e.g. :func:`claim_terms` of a pandas-created batch) is collected and
+    deduplicated on the driver, which starts no Spark job; any other
+    relation runs the distributed ``distinct`` (two jobs)."""
+    if q.isLocal():
+        return sorted({r["term"] for r in q.select("term").collect()})
+    return [r["term"] for r in q.select("term").distinct().collect()]
+
+
 def _pruned_postings(reader: IndexReader, q: DataFrame):
     """Shared decode front half of the non-WAND query paths: bucket + term
     pruned segment scan -> (postings_long, per-term stats).
@@ -153,7 +166,7 @@ def _pruned_postings(reader: IndexReader, q: DataFrame):
     config.max_serving_deletes), while ``stats`` keeps the STORED per-term
     df. That is exactly the WAND kernels' masking semantics, so the
     wand/exhaustive rank-and-score parity contract survives deletes."""
-    terms = [r["term"] for r in q.select("term").distinct().collect()]
+    terms = _distinct_terms(q)
     seg = reader.segments()
     bks = reader.buckets_for_terms(terms)
     if bks and "bucket" in seg.columns:
@@ -200,7 +213,7 @@ def query_lm_dirichlet(
     if "ctf" in dict_df.columns:
         cstats = dict_df.select("term", "ctf")
     else:  # pre-ctf index: one term-pruned pass over stored postings
-        terms = [r["term"] for r in q.select("term").distinct().collect()]
+        terms = _distinct_terms(q)
         cstats = (
             reader.postings()
             .filter(term_in(terms))

@@ -229,19 +229,37 @@ def audit(work: str) -> int:
     )
     # a batch already in driver memory (pandas-created: a local relation)
     # keeps the scan shape; its claim side is tokenized and summarized on
-    # the driver, so the kernel query reads it as a LocalTableScan and no
-    # tokenizer MapInPandas node is left in the plan
+    # the driver and rides the scan as one map literal exploded by a
+    # Generate(inline), so the plan has no tokenizer MapInPandas, no
+    # broadcast of a claim relation, no cogroup, and exactly one Exchange:
+    # the gather shuffle right under the grouped kernel. The literal must be
+    # folded: an unfolded from_json would re-parse the claim JSON per row
     import pandas as pd
 
     claims_local = spark.createDataFrame(
         pd.DataFrame({"claim_id": [0], "claim": ["the merge join"]})
     )
+    lplan = plan_of(query_wand(reader, claims_local, k=5, cfg=cfg))
     ok &= check(
         "query_wand scan, local batch",
-        plan_of(query_wand(reader, claims_local, k=5, cfg=cfg)),
-        must=["PartitionFilters: [bucket", "PushedFilters: [In(term", "LocalTableScan"],
-        must_not=["MapInPandas"],
+        lplan,
+        must=["PartitionFilters: [bucket", "PushedFilters: [In(term", "FlatMapGroupsInPandas"],
+        must_not=["BroadcastExchange", "FlatMapCoGroupsInPandas", "MapInPandas", "from_json"],
     )
+    ltree = lplan.split("\n\n", 1)[0]
+    n_exchange = len(re.findall(r"\bExchange \(\d+\)", ltree))
+    for good, what in (
+        (re.search(r"\) Generate\nInput \[.*\]\nArguments: inline\(element_at\(map\(keys: \[",
+                   lplan) is not None,
+         "a Generate node with inline over a folded map literal"),
+        (n_exchange == 1, f"Exchange nodes: {n_exchange} (want 1)"),
+        (re.search(r"FlatMapGroupsInPandas \(\d+\)\n[ :]*\+- Sort \(\d+\)\n"
+                   r"(?:[ :]*\+- Project \(\d+\)\n)?[ :]*\+- Exchange \(\d+\)", ltree)
+         is not None,
+         "the Exchange sits under FlatMapGroupsInPandas"),
+    ):
+        print(f"  [{'x' if good else '!'}] {what}")
+        ok &= good
 
     # 7. phrase serving: the positional-sidecar scan prunes files (bucket)
     # and row groups (term) exactly like the segment scan
@@ -481,11 +499,11 @@ def audit(work: str) -> int:
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"],
     )
 
-    # 25. sharded fan-out/merge: shard-local kernels via ONE cogroup
-    # (FlatMapCoGroupsInPandas), the claim side replicated by a broadcast
-    # 4-row range (BroadcastNestedLoopJoin on a constant-sized side is the
-    # intended shape), then one window over |claims| x shards x k local
-    # winners — never a cartesian, never a corpus-sized merge input
+    # 25. sharded fan-out/merge: shard-local kernels in ONE grouped stage
+    # (FlatMapGroupsInPandas) keyed on the kernel group with the gathered
+    # slice's shard folded in, then one window over |claims| x shards x k
+    # local winners — the claim side is never replicated per shard (no
+    # nested-loop or cartesian join), never a corpus-sized merge input
     from defactonlp_spark.operators.postings import salt_plan, with_salt
     from defactonlp_spark.operators.sharding import (
         encode_sharded_segments, wand_topk_sharded,
@@ -495,10 +513,10 @@ def audit(work: str) -> int:
         with_salt(pz, salt_plan(st, 100, cfg)), st, 100, 10.0, cfg, 4, 8
     )
     ok &= check(
-        "sharded serving (cogroup fan-out + merge window)",
+        "sharded serving (grouped fan-out + merge window)",
         plan_of(wand_topk_sharded(sseg, qt, 100, 10.0, 4, k=5, cfg=cfg)),
-        must=["FlatMapCoGroupsInPandas", "Window"],
-        must_not=["CartesianProduct"],
+        must=["FlatMapGroupsInPandas", "Window"],
+        must_not=["CartesianProduct", "BroadcastNestedLoopJoin"],
     )
 
     # 26. wildcard expansion: patterns BROADCAST onto the Heaps-bounded
