@@ -38,9 +38,6 @@ class EngineConfig:
     salt_df_ratio: float = 0.10
     n_salts: int = 4
 
-    #: arrow batch sizing for the wide-row extractor stage
-    extract_batch_rows: int = 256
-
     #: per-claim query planning: if the claim's total candidate postings
     #: (sum of slice lengths, known without decoding) are below this, score
     #: them all with the vectorized numpy kernel instead of walking WAND
@@ -73,13 +70,14 @@ class EngineConfig:
     #: deletes_array raises: compact instead of serving an ever-growing mask.
     max_serving_deletes: int = 1_000_000
 
-    #: segment-scan pruning fast path: when the query set's DISTINCT terms
-    #: number at most this, they are collected and pushed as an `isin`
-    #: filter (parquet row-group stat pruning applies — segments are written
-    #: term-sorted). The distinct-term count is bounded by the vocabulary
-    #: (Heaps' law), not by |claims|; beyond the bound a term semi-join
-    #: prunes instead (no driver materialization). The same number also
-    #: caps WAND serving's other plan literal: a local claim batch ships its
+    #: index-scan pruning bound, for every query path
+    #: (operators/wand.py::query_terms + prune_to_terms): a query whose
+    #: DISTINCT terms number at most this prunes its scans with an ``IN``
+    #: list (bucket files, then parquet row-group stats on ``term``); past
+    #: it, a (bucket, term) semi-join prunes instead, and a distributed
+    #: query's terms are not collected. The distinct-term count is bounded by the
+    #: vocabulary (Heaps' law), not by |claims|. The same number also caps
+    #: WAND serving's other plan literal: a local claim batch ships its
     #: claim side as one term -> (group, claim ids) map literal instead of a
     #: joined relation only with at most min(this, wand.CLAIM_MAP_MAX_PAIRS)
     #: distinct (claim, term) pairs (operators/wand.py::wand_topk).

@@ -34,6 +34,7 @@ import re
 import unicodedata
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -57,19 +58,10 @@ def tokenize_one(text: str | None) -> list[str]:
     return TOKEN_RE.findall(unicodedata.normalize("NFD", text).casefold())
 
 
-def _batch_postings(pdf: pd.DataFrame, id_col: str, text_col: str) -> pd.DataFrame:
-    """Tokenize one Arrow batch and count tf per (doc, term).
-
-    Counting is numpy, not pandas explode+groupby: factorize the flat token
-    stream once, pack (doc_index, term_code) into one int64 key, and let a
-    single ``np.unique(return_counts)`` produce the aggregated postings —
-    measured 2.3 s -> 1.0 s per 10k fixture docs (explode materialized ~2M
-    object rows and the object-key groupby hashed every token twice).
-    Tokenization itself (NFD casefold + regex findall) is byte-for-byte the
-    pinned semantics of ``tokenize_one``."""
-    import numpy as np
-
-    texts = pdf[text_col]
+def _batch_tokens(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """Tokenize one Arrow batch of texts -> (the flat token stream as an
+    object array, tokens per text as int64). Byte-for-byte the pinned
+    semantics of ``tokenize_one``; a missing text has no tokens."""
     norm = pd.Series(
         [unicodedata.normalize("NFD", t).casefold() if isinstance(t, str) else "" for t in texts],
         index=texts.index,
@@ -78,12 +70,27 @@ def _batch_postings(pdf: pd.DataFrame, id_col: str, text_col: str) -> pd.DataFra
     toks = norm.str.findall(TOKEN_RE)
     dl = toks.str.len().to_numpy(np.int64)
     if int(dl.sum()) == 0:
-        return pd.DataFrame({"term": pd.Series(dtype=object), "doc_id": pd.Series(dtype="int64"),
-                             "tf": pd.Series(dtype="int32"), "dl": pd.Series(dtype="int32")})
+        return np.empty(0, object), dl
     flat = np.concatenate([np.asarray(t, dtype=object) if t else np.empty(0, object)
                            for t in toks.to_numpy()])
+    return flat, dl
+
+
+def _batch_postings(pdf: pd.DataFrame, id_col: str, text_col: str) -> pd.DataFrame:
+    """Tokenize one Arrow batch and count tf per (doc, term).
+
+    Counting is numpy, not pandas explode+groupby: factorize the flat token
+    stream once, pack (doc_index, term_code) into one int64 key, and let a
+    single ``np.unique(return_counts)`` produce the aggregated postings —
+    measured 2.3 s -> 1.0 s per 10k fixture docs (explode materialized ~2M
+    object rows and the object-key groupby hashed every token twice).
+    Tokenization itself is :func:`_batch_tokens`."""
+    flat, dl = _batch_tokens(pdf[text_col])
+    if flat.size == 0:
+        return pd.DataFrame({"term": pd.Series(dtype=object), "doc_id": pd.Series(dtype="int64"),
+                             "tf": pd.Series(dtype="int32"), "dl": pd.Series(dtype="int32")})
     codes, uniq_terms = pd.factorize(flat, sort=False)
-    doc_idx = np.repeat(np.arange(len(toks), dtype=np.int64), dl)
+    doc_idx = np.repeat(np.arange(dl.size, dtype=np.int64), dl)
     # doc_idx < 2^31 (Arrow batch rows), codes < 2^32 (tokens per batch):
     # one int64 key per token, one sort-based unique for the whole count
     key = (doc_idx << 32) | codes.astype(np.int64)
@@ -119,25 +126,15 @@ def tokenize_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text
     Emits |tokens| rows — ~dl/|postings| times bigger than the postings
     long table, which is why the phrase operators semi-join this relation
     down to the query's terms BEFORE anything shuffles."""
-    import numpy as np
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf[text_col]
-            norm = pd.Series(
-                [unicodedata.normalize("NFD", t).casefold() if isinstance(t, str) else ""
-                 for t in texts],
-                index=texts.index, dtype=object,
-            )
-            toks = norm.str.findall(TOKEN_RE)
-            dl = toks.str.len().to_numpy(np.int64)
-            if int(dl.sum()) == 0:
+            flat, dl = _batch_tokens(pdf[text_col])
+            if flat.size == 0:
                 yield pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                                     "pos": pd.Series(dtype="int32"),
                                     "term": pd.Series(dtype=object)})
                 continue
-            flat = np.concatenate([np.asarray(t, dtype=object) if t else np.empty(0, object)
-                                   for t in toks.to_numpy()])
             offsets = np.concatenate(([0], np.cumsum(dl)[:-1]))
             pos = np.arange(int(dl.sum()), dtype=np.int64) - np.repeat(offsets, dl)
             ids = pdf[id_col].to_numpy(np.int64)
@@ -229,8 +226,6 @@ def tokenize_postings_html(
         return df.select(id_col, html_col).mapInPandas(gen, schema=POSTINGS_SCHEMA)
 
     def gen_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         next_rank = 1  # row_number() is 1-based; parity with the window path
         for pdf in batches:
             texts = pdf[html_col].map(extract_text_one)
@@ -242,7 +237,3 @@ def tokenize_postings_html(
             yield _batch_postings(fused, "doc_id", "text")
 
     return df.select(pid_col, html_col).mapInPandas(gen_ids, schema=POSTINGS_SCHEMA)
-
-
-# alias kept for tests that pin the (single) implementation explicitly
-tokenize_postings_pandas = tokenize_postings

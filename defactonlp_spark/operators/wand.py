@@ -436,6 +436,52 @@ def term_in(terms: list[str]) -> Column:
     return col_in("term", terms)
 
 
+def query_terms(q: DataFrame, max_terms: int) -> list[str] | DataFrame:
+    """The distinct ``term`` values of a query relation, in the form
+    :func:`prune_to_terms` takes: a sorted list of at most ``max_terms``
+    terms, else the distinct-term relation itself.
+
+    A local relation (e.g. ``claim_terms`` of a pandas-created batch) is
+    collected and deduplicated on the driver, which starts no job (test
+    ``isLocal()`` on the relation as passed: any projection clears it). Any
+    other relation gets one bounded probe, ``limit(max_terms + 1)`` of its
+    distinct terms, so a term set past the bound is never collected. The
+    bound is ``EngineConfig.isin_pushdown_max_terms``; the distinct-term
+    count is bounded by the vocabulary (Heaps' law), not by the claims."""
+    if q.isLocal():
+        terms = sorted({r["term"] for r in q.select("term").collect()})
+    else:
+        probe = q.select("term").distinct().limit(max_terms + 1)
+        terms = sorted(r["term"] for r in probe.collect())
+    return terms if len(terms) <= max_terms else q.select("term").distinct()
+
+
+def prune_to_terms(table: DataFrame, terms: list[str] | DataFrame,
+                   boundaries: list[str] | None) -> DataFrame:
+    """Restrict an index table (segments, the positional sidecar, the
+    postings materialization) to a query's terms, as :func:`query_terms`
+    returns them. This is the one pruned index scan every query path reads.
+
+    - A list: when the table has a ``bucket`` column and the manifest
+      ``boundaries`` are known, ``bucket IN`` the terms' buckets first (a
+      hive-partitioned table skips whole files: ``PartitionFilters``), then
+      ``term IN`` (parquet row-group stats on the term-sorted files).
+    - A relation: a semi-join on (bucket, term), the bucket being a pure
+      expression over the boundaries, so dynamic partition pruning can still
+      skip files; on term alone for a bucket-less table."""
+    from defactonlp_spark.plans.build import bucket_expr, buckets_for_terms
+
+    bucketed = bool(boundaries) and "bucket" in table.columns
+    if isinstance(terms, DataFrame):
+        if bucketed:
+            tb = terms.withColumn("bucket", bucket_expr(boundaries))
+            return table.join(tb, ["bucket", "term"], "left_semi")
+        return table.join(terms, "term", "left_semi")
+    if bucketed and terms:
+        table = table.filter(col_in("bucket", buckets_for_terms(boundaries, terms)))
+    return table.filter(term_in(terms))
+
+
 #: term -> [(kernel group, claim ids)]: the claim side of a local batch as
 #: one literal (:func:`claims_by_term`)
 CLAIM_MAP_TYPE = "map<string, array<struct<grp: int, claims: array<bigint>>>>"
@@ -475,7 +521,6 @@ def wand_topk(
     avgdl: float,
     k: int = 5,
     cfg: EngineConfig = EngineConfig(),
-    term_buckets=None,
     boundaries: list[str] | None = None,
     deletes: np.ndarray | None = None,
     n_shards: int | None = None,
@@ -492,6 +537,10 @@ def wand_topk(
     size is capped by the caller (config.max_serving_deletes) — compaction
     via merge_builds is the scale path for large tombstone sets.
 
+    ``boundaries``: the build manifest's bucket boundaries
+    (IndexReader.boundaries), from which the scan prunes bucket files; None
+    for a bucket-less segment table.
+
     Group-gather plan. Only the claim-side summary may live on the driver,
     and only for a batch that is already there (VERDICT r1 'What's wrong'
     #1: nothing claim-shaped from a distributed input is collected):
@@ -507,26 +556,24 @@ def wand_topk(
 
        - ``qterms.isLocal()`` (a local relation exactly as passed in, e.g.
          :func:`~defactonlp_spark.operators.bm25.claim_terms` of a
-         pandas-created batch): its rows are collected — no job over a
-         local relation — with the group expression evaluated by Spark over
-         the local relation (folded into it, so again no job), for the
-         exact claim count, the sorted distinct terms and the gather
-         entries. With at most :data:`CLAIM_MAP_MAX_PAIRS` (and at most
+         pandas-created batch): its (claim_id, term, xxhash64(claim_id))
+         rows are collected ONCE — no job over a local relation — and each
+         claim's group is taken on the driver as ``h % G`` (Python's ``%``
+         with ``G > 0`` is Spark's ``pmod``), for the exact claim count,
+         the sorted distinct terms and the gather entries. With at most
+         :data:`CLAIM_MAP_MAX_PAIRS` (and at most
          ``cfg.isin_pushdown_max_terms``) distinct (claim, term) pairs the
          entries become ONE map literal (:func:`claims_by_term`), the
          *literal form*; a bigger batch becomes a local relation, the
          *join form*. No checkpoint, probe or distinct job runs.
        - otherwise the distinct (claim_id, term) relation is computed ONCE
          into a local checkpoint (whose job also estimates the claim count
-         with HLL); the term probe and the gather side — a
-         ``collect_list`` aggregate, the join form — read that copy;
-    2. the segment scan is pruned to the query's DISTINCT terms — taken
-       from the summary or collected by the probe (one job: limit+1 rows)
-       for an ``IN``-list pushdown (:func:`term_in`; parquet row-group stats
-       apply; the distinct term count is vocabulary-bounded by Heaps' law,
-       NOT |claims|-bounded) when small, a term semi-join beyond
-       ``cfg.isin_pushdown_max_terms``. The literal form always takes the
-       ``IN`` list: its terms are at most its pairs;
+         with HLL); the term probe (:func:`query_terms`) and the gather
+         side — a ``collect_list`` aggregate, the join form — read that copy;
+    2. the segment scan is :func:`prune_to_terms` over the query's distinct
+       terms and the manifest ``boundaries``: an ``IN`` list of at most
+       ``cfg.isin_pushdown_max_terms`` terms, else a semi-join. The literal
+       form always takes the list: its terms are at most its pairs;
     3. each pruned slice row gains (grp, claims) once per group that needs
        its term, so each blob ships ONCE PER GROUP (not per claim — claims
        share Zipf-head terms, so per-claim gathering multiplies the
@@ -553,9 +600,6 @@ def wand_topk(
     spark = segments.sparkSession
     par = spark.sparkContext.defaultParallelism
 
-    def group_of(n_groups: int) -> Column:
-        return F.pmod(F.xxhash64("claim_id"), F.lit(n_groups)).cast("int")
-
     def n_groups_for(n_claims: int) -> int:
         return max(par, -(-n_claims // max(cfg.serve_claims_per_batch, 1)))
 
@@ -563,19 +607,12 @@ def wand_topk(
     if qterms.isLocal():
         # -- 1, local batch: the claim side is summarized on the driver -----
         # collect() over a local relation (and over a projection of one,
-        # which Catalyst folds into it) starts no job. A batch of up to
-        # par * serve_claims_per_batch claims keeps G = par and is
-        # collected once; a larger one again, grouped by its own G.
-        def grouped(n_groups: int):
-            return qterms.select("claim_id", "term", group_of(n_groups)).collect()
-
-        rows = grouped(par)
+        # which Catalyst folds into it) starts no job; the group is h % G
+        rows = qterms.select("claim_id", "term", F.xxhash64("claim_id")).collect()
         n_groups = n_groups_for(len({r[0] for r in rows}))
-        if n_groups != par:
-            rows = grouped(n_groups)
         # distinct (term, grp, claim_id); grp is a function of the claim, so
         # there is one entry per distinct (claim, term) pair
-        pairs = sorted({(r[1], r[2], r[0]) for r in rows})
+        pairs = sorted({(r[1], r[2] % n_groups, r[0]) for r in rows})
         terms = sorted({t for t, _, _ in pairs})
         if not terms:
             return spark.createDataFrame([], RESULTS_SCHEMA)
@@ -596,7 +633,7 @@ def wand_topk(
                 "term string, grp int, claims array<bigint>",
             )
             if len(terms) > cfg.isin_pushdown_max_terms:
-                terms, terms_df = None, group_terms.select("term").distinct()
+                terms = group_terms.select("term").distinct()
     else:
         from pyspark.sql import Observation
 
@@ -609,46 +646,17 @@ def wand_topk(
             .observe(seen, F.approx_count_distinct("claim_id").alias("n_claims"))
             .localCheckpoint()
         )
-        # -- 2. the term probe: one job probes AND fetches — collect
-        # limit+1 rows; past the limit they are discarded and the semi-join
-        # path runs, below it they ARE the pushdown list (no count() job)
-        terms_df = qt.select("term").distinct()
-        probe_rows = terms_df.limit(cfg.isin_pushdown_max_terms + 1).collect()
-        if not probe_rows:
+        terms = query_terms(qt, cfg.isin_pushdown_max_terms)
+        if isinstance(terms, list) and not terms:
             return spark.createDataFrame([], RESULTS_SCHEMA)
-        terms = None
-        if len(probe_rows) <= cfg.isin_pushdown_max_terms:
-            terms = sorted(r["term"] for r in probe_rows)
+        grp = F.pmod(F.xxhash64("claim_id"), F.lit(n_groups_for(seen.get["n_claims"])))
         group_terms = (
-            qt.groupBy(group_of(n_groups_for(seen.get["n_claims"])).alias("grp"), "term")
+            qt.groupBy(grp.cast("int").alias("grp"), "term")
             .agg(F.collect_list("claim_id").alias("claims"))
         )
 
     # -- 2. segment pruning on the distinct terms ---------------------------
-    if terms is not None:
-        pruned = segments
-        # file-level pruning first: when the segment table is hive-
-        # partitioned by bucket, `bucket isin` becomes PartitionFilters and
-        # skips whole files before the `term isin` row-group stats run.
-        # ``term_buckets`` maps terms -> bucket ids from the build manifest
-        # (IndexReader.buckets_for_terms); None for bucket-less tables.
-        if term_buckets is not None and "bucket" in segments.columns:
-            bks = term_buckets(terms)
-            if bks:
-                pruned = segments.filter(col_in("bucket", bks))
-        hits = pruned.filter(term_in(terms))
-    else:
-        # huge term sets (claims >> vocabulary probe cap): semi-join instead
-        # of isin. With the bucket-partitioned layout, joining on (bucket,
-        # term) lets dynamic partition pruning skip files here too — bucket
-        # for each term is a pure expression over the manifest boundaries.
-        if boundaries and "bucket" in segments.columns:
-            from defactonlp_spark.plans.build import bucket_expr
-
-            tb = terms_df.withColumn("bucket", bucket_expr(boundaries))
-            hits = segments.join(tb, ["bucket", "term"], "left_semi")
-        else:
-            hits = segments.join(terms_df, "term", "left_semi")
+    hits = prune_to_terms(segments, terms, boundaries)
 
     # -- 3. per-group gather: every slice row gains (grp, claims) ----------
     if claim_map is not None:

@@ -180,6 +180,17 @@ def bucket_expr(boundaries: list[str]):
     ).cast("int")
 
 
+def buckets_for_terms(boundaries: list[str], terms) -> list[int]:
+    """Bucket ids the given terms can live in: the driver-side mirror of
+    :func:`bucket_expr` (#boundaries <= term, minus one, clamped at 0).
+    Empty without boundaries."""
+    from bisect import bisect_right
+
+    if not boundaries:
+        return []
+    return sorted({max(bisect_right(boundaries, t) - 1, 0) for t in terms})
+
+
 def prepare_webpages(pages: DataFrame, id_strategy: str = "global") -> DataFrame:
     """(url, warc_ts, html, ...) -> corpus(doc_id, url, text, lang).
     Dedup to the latest crawl, assign doc ids, extract text from html (B1).
@@ -760,19 +771,6 @@ class IndexReader:
     @property
     def boundaries(self) -> list[str]:
         return list(self.props.get("boundaries") or [])
-
-    def buckets_for_terms(self, terms) -> list[int]:
-        """Bucket ids the given terms can live in — driver-side mirror of
-        ``bucket_expr`` (#boundaries <= term, minus one, clamped at 0) over
-        the manifest's pinned boundaries. Serving filters the segment scan
-        with ``bucket isin`` so the hive-partitioned layout prunes whole
-        files (PartitionFilters) before `term` row-group stats apply."""
-        from bisect import bisect_right
-
-        bounds = self.boundaries
-        if not bounds:
-            return []
-        return sorted({max(bisect_right(bounds, t) - 1, 0) for t in terms})
 
 
 def plan_compaction(

@@ -27,7 +27,7 @@ from defactonlp_spark.operators.bm25 import (
     score_exhaustive,
 )
 from defactonlp_spark.operators.segments import decode_slice
-from defactonlp_spark.operators.wand import col_in, term_in, wand_topk
+from defactonlp_spark.operators.wand import prune_to_terms, query_terms, wand_topk
 from defactonlp_spark.plans.build import IndexReader
 
 DECODED_SCHEMA = T.StructType(
@@ -70,14 +70,14 @@ def query_wand(reader: IndexReader, claims: DataFrame, k: int = 5, cfg: EngineCo
     q = claim_terms(claims)
     return wand_topk(
         reader.segments(), q, reader.n_docs, reader.avgdl, k=k, cfg=cfg,
-        term_buckets=reader.buckets_for_terms, boundaries=reader.boundaries,
+        boundaries=reader.boundaries,
         deletes=reader.deletes_array(cfg.max_serving_deletes),
     )
 
 
 class ServingSession:
-    """Long-lived serving deployment shape (VERDICT r2 next-round #7):
-    one process serving MANY query batches over one index generation.
+    """Long-lived serving deployment shape: one process serving MANY query
+    batches over one index generation.
 
     ``query_wand`` alone re-scans the segment parquet (and re-ships the
     Zipf-head term blobs) on every batch. A serving deployment instead pins
@@ -87,24 +87,15 @@ class ServingSession:
     distributes slices across executor storage and the (batch, term) join
     reads them locally. ``warm()`` materializes the cache outside the
     serving path so the first measured batch is already steady-state.
+    ``close()`` releases executor storage.
 
-    The bucket/term pruning still applies per batch — against the cached
-    relation it prunes cached RDD partitions via in-memory batch stats
-    instead of parquet footers. ``close()`` releases executor storage.
-
-    Each ``topk`` batch runs through :func:`claim_terms` and
-    :func:`wand_topk`: the claims are hashed into about one kernel group per
-    core (``EngineConfig.serve_claims_per_batch`` caps a group's claims),
-    and every cached slice a group needs ships to it once. A batch already
-    in driver memory (``spark.createDataFrame(pandas_df)``, a local
-    relation) is tokenized and summarized on the driver. Up to
-    ``wand.CLAIM_MAP_MAX_PAIRS`` (claim, term) pairs its claims ride the
-    pruned scan as one map literal, so it costs 2 Spark jobs: the pruned
-    scan of the cache with its gather shuffle, and one kernel stage that
-    runs a task on every core; a bigger one adds the broadcast job of a
-    joined claim relation. Any other claim relation adds one tokenize pass
-    into a local checkpoint, one term probe and a join onto the gathered
-    slices.
+    Each ``topk`` batch is :func:`wand_topk` over :func:`claim_terms` of
+    the claims, so it prunes the cache exactly as ``query_wand`` prunes the
+    parquet (:func:`prune_to_terms`; against the cache, in-memory batch
+    stats stand in for parquet footers) and runs the same jobs: 2 for a
+    local batch of up to ``wand.CLAIM_MAP_MAX_PAIRS`` (claim, term) pairs —
+    the pruned scan with its gather shuffle, then one kernel stage with a
+    task on every core.
 
     Scale note: MEMORY_AND_DISK distributes slices across the cluster's
     executor storage and spills cleanly when the index exceeds aggregate
@@ -137,7 +128,6 @@ class ServingSession:
         return wand_topk(
             self.segments, claim_terms(claims), self.reader.n_docs,
             self.reader.avgdl, k=k, cfg=self.cfg,
-            term_buckets=self.reader.buckets_for_terms,
             boundaries=self.reader.boundaries,
             deletes=self.deletes,
         )
@@ -147,31 +137,17 @@ class ServingSession:
             self.segments.unpersist()
 
 
-def _distinct_terms(q: DataFrame) -> list[str]:
-    """The distinct ``term`` values of a query relation. A local relation
-    (e.g. :func:`claim_terms` of a pandas-created batch) is collected and
-    deduplicated on the driver, which starts no Spark job; any other
-    relation runs the distributed ``distinct`` (two jobs)."""
-    if q.isLocal():
-        return sorted({r["term"] for r in q.select("term").collect()})
-    return [r["term"] for r in q.select("term").distinct().collect()]
-
-
-def _pruned_postings(reader: IndexReader, q: DataFrame):
-    """Shared decode front half of the non-WAND query paths: bucket + term
-    pruned segment scan -> (postings_long, per-term stats).
+def _pruned_postings(reader: IndexReader, terms: list[str] | DataFrame):
+    """Shared decode front half of the non-WAND query paths: the segment
+    scan pruned to ``terms`` (:func:`query_terms` of the query relation;
+    :func:`prune_to_terms`) -> (postings_long, per-term stats).
 
     Tombstones: decoded postings are anti-joined against the index's
     deletes table (broadcast — serving-sized by the same lifecycle bound as
     config.max_serving_deletes), while ``stats`` keeps the STORED per-term
     df. That is exactly the WAND kernels' masking semantics, so the
     wand/exhaustive rank-and-score parity contract survives deletes."""
-    terms = _distinct_terms(q)
-    seg = reader.segments()
-    bks = reader.buckets_for_terms(terms)
-    if bks and "bucket" in seg.columns:
-        seg = seg.filter(col_in("bucket", bks))
-    hits = seg.filter(term_in(terms))
+    hits = prune_to_terms(reader.segments(), terms, reader.boundaries)
     # full-term df is carried on every slice; one row per (term) suffices
     stats = hits.groupBy("term").agg(F.first("df").alias("df"))
     postings = decode_segments(hits)
@@ -184,7 +160,7 @@ def _pruned_postings(reader: IndexReader, q: DataFrame):
 def query_exhaustive(reader: IndexReader, claims: DataFrame, k: int = 5, cfg: EngineConfig | None = None) -> DataFrame:
     cfg = cfg or EngineConfig()
     q = claim_terms(claims)
-    postings, stats = _pruned_postings(reader, q)
+    postings, stats = _pruned_postings(reader, query_terms(q, cfg.isin_pushdown_max_terms))
     return score_exhaustive(
         postings, stats, q, reader.n_docs, reader.avgdl, k=k, params=cfg.bm25
     )
@@ -208,15 +184,14 @@ def query_lm_dirichlet(
     back to aggregating it from the postings materialization pruned to the
     query terms (identical values — ctf is definitionally sum(tf))."""
     q = claim_terms(claims)
-    postings, _ = _pruned_postings(reader, q)
+    terms = query_terms(q, EngineConfig().isin_pushdown_max_terms)
+    postings, _ = _pruned_postings(reader, terms)
     dict_df = reader.term_stats()
     if "ctf" in dict_df.columns:
         cstats = dict_df.select("term", "ctf")
     else:  # pre-ctf index: one term-pruned pass over stored postings
-        terms = _distinct_terms(q)
         cstats = (
-            reader.postings()
-            .filter(term_in(terms))
+            prune_to_terms(reader.postings(), terms, reader.boundaries)
             .groupBy("term")
             .agg(F.sum("tf").cast("long").alias("ctf"))
         )
@@ -259,7 +234,7 @@ def query_filtered(
     """
     cfg = cfg or EngineConfig()
     q = claim_terms(claims)
-    postings, stats = _pruned_postings(reader, q)
+    postings, stats = _pruned_postings(reader, query_terms(q, cfg.isin_pushdown_max_terms))
     postings = postings.join(
         allowed.select("doc_id").distinct(), "doc_id", "left_semi"
     )
@@ -295,7 +270,7 @@ def query_collapsed(
 
     cfg = cfg or EngineConfig()
     q = claim_terms(claims)
-    postings, stats = _pruned_postings(reader, q)
+    postings, stats = _pruned_postings(reader, query_terms(q, cfg.isin_pushdown_max_terms))
     return score_collapsed(
         postings, stats, q, reader.n_docs, reader.avgdl, groups,
         k=k, params=cfg.bm25, group_col=group_col,
@@ -303,7 +278,6 @@ def query_collapsed(
 
 
 def query_phrase(
-
     reader: IndexReader,
     phrases: DataFrame,
     k: int = 5,
@@ -323,17 +297,10 @@ def query_phrase(
     from defactonlp_spark.operators.phrase import phrase_positions, score_phrase
 
     cfg = cfg or EngineConfig()
-    qpos = phrase_positions(phrases)
-    qterms = qpos.select("claim_id", "term").distinct()
-    postings, stats = _pruned_postings(reader, qterms)
-
-    terms = [r["term"] for r in qterms.select("term").distinct().collect()]
-    toks = reader.tokens()
-    bks = reader.buckets_for_terms(terms)
-    if bks and "bucket" in toks.columns:
-        toks = toks.filter(col_in("bucket", bks))
-    toks = toks.filter(term_in(terms))
-
+    # one probe: the same terms prune the segments and the sidecar
+    terms = query_terms(phrase_positions(phrases), cfg.isin_pushdown_max_terms)
+    postings, stats = _pruned_postings(reader, terms)
+    toks = prune_to_terms(reader.tokens(), terms, reader.boundaries)
     return score_phrase(
         postings, stats, toks, phrases, reader.n_docs, reader.avgdl,
         k=k, params=cfg.bm25,
@@ -350,7 +317,7 @@ def query_conjunctive(reader: IndexReader, claims: DataFrame, k: int = 5, cfg: E
     """
     cfg = cfg or EngineConfig()
     q = claim_terms(claims)
-    postings, stats = _pruned_postings(reader, q)
+    postings, stats = _pruned_postings(reader, query_terms(q, cfg.isin_pushdown_max_terms))
     return score_conjunctive(
         postings, stats, q, reader.n_docs, reader.avgdl, k=k, params=cfg.bm25
     )
@@ -376,7 +343,7 @@ def query_boolean(
 
     cfg = cfg or EngineConfig()
     q = boolean_terms(queries)
-    postings, stats = _pruned_postings(reader, q)
+    postings, stats = _pruned_postings(reader, query_terms(q, cfg.isin_pushdown_max_terms))
     return score_boolean(
         postings, stats, q, reader.n_docs, reader.avgdl, k=k, params=cfg.bm25
     )
@@ -405,7 +372,7 @@ def query_rm3(
 
     cfg = cfg or EngineConfig()
     q = claim_terms(claims)
-    postings1, stats1 = _pruned_postings(reader, q)
+    postings1, stats1 = _pruned_postings(reader, query_terms(q, cfg.isin_pushdown_max_terms))
     first = score_exhaustive(
         postings1, stats1, q, reader.n_docs, reader.avgdl, k=fb_docs,
         params=cfg.bm25, rank_dp=rank_dp,
@@ -413,7 +380,7 @@ def query_rm3(
     wterms = rm3_weights(
         first, reader.postings(), q, fb_terms=fb_terms, alpha=alpha
     )
-    postings2, stats2 = _pruned_postings(reader, wterms)
+    postings2, stats2 = _pruned_postings(reader, query_terms(wterms, cfg.isin_pushdown_max_terms))
     return score_weighted(
         postings2, stats2, wterms, reader.n_docs, reader.avgdl, k=k,
         params=cfg.bm25, rank_dp=rank_dp,
@@ -447,7 +414,7 @@ def query_more_like_this(
         seed_vecs, reader.n_docs, k=like_terms, df_counts=reader.term_stats()
     )
     qterms = kw.select(F.col("doc_id").alias("claim_id"), "term")
-    postings, stats = _pruned_postings(reader, qterms)
+    postings, stats = _pruned_postings(reader, query_terms(qterms, cfg.isin_pushdown_max_terms))
     res = score_exhaustive(
         postings, stats, qterms, reader.n_docs, reader.avgdl,
         k=k + 1, params=cfg.bm25, rank_dp=rank_dp,

@@ -1,6 +1,8 @@
 """Exact phrase retrieval (operators/phrase.py): the anchor-trick match
 and BM25 ranking vs a scalar brute-force oracle."""
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -118,10 +120,23 @@ def test_phrase_random_corpus_vs_bruteforce(spark):
     assert len(got) > 0
 
 
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_query_phrase_index_path(spark, tmp_path):
     """query_phrase over a built index (positional sidecar + pruned segment
     decode) == the operator-level plan over raw relations; tombstones
-    compose; missing sidecar raises."""
+    compose; missing sidecar raises. Planning runs one term probe (at most
+    2 jobs), which prunes both the segments and the sidecar."""
     from defactonlp_spark.config import EngineConfig
     from defactonlp_spark.functions.tokenize import tokenize_tokens as tt
     from defactonlp_spark.plans.build import (
@@ -150,8 +165,9 @@ def test_query_phrase_index_path(spark, tmp_path):
          (2, "nosuchterm whatsoever")],
         "claim_id long, phrase string",
     )
-    got = (query_phrase(r, phrases, k=5, cfg=cfg).toPandas()
-           .sort_values(["claim_id", "rank"]).reset_index(drop=True))
+    planned, n_jobs = _jobs(spark, lambda: query_phrase(r, phrases, k=5, cfg=cfg))
+    assert n_jobs <= 2
+    got = planned.toPandas().sort_values(["claim_id", "rank"]).reset_index(drop=True)
     assert len(got) > 0 and 2 not in set(got["claim_id"])
 
     pl = P.build_postings(corpus)

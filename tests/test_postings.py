@@ -135,17 +135,16 @@ def test_bucket_boundaries_driver_vs_distributed_cut(spark):
 
 
 def test_bucket_expr_matches_driver_bisect(spark):
-    """Serving prunes files with a DRIVER-side bucket computation
-    (IndexReader.buckets_for_terms / bisect) while the build assigns buckets
-    with the CATALYST expression (bucket_expr). If they ever disagree, the
-    bucket isin filter silently drops segment slices — so pin equality over
-    edge terms: below the first boundary, equal to each boundary, between
-    boundaries, past the last, empty string, unicode."""
-    from bisect import bisect_right
-
+    """Every query path prunes bucket files with a DRIVER-side bucket
+    computation (plans/build.py::buckets_for_terms, a bisect over the
+    manifest boundaries, via operators/wand.py::prune_to_terms) while the
+    build assigns buckets with the CATALYST expression (bucket_expr). If
+    they ever disagree, the bucket IN filter silently drops segment slices —
+    so pin equality over edge terms: below the first boundary, equal to each
+    boundary, between boundaries, past the last, empty string, unicode."""
     from pyspark.sql import functions as F
 
-    from defactonlp_spark.plans.build import bucket_expr
+    from defactonlp_spark.plans.build import bucket_expr, buckets_for_terms
 
     boundaries = ["apple", "gamma", "merge", "table"]
     terms = [
@@ -158,5 +157,5 @@ def test_bucket_expr_matches_driver_bisect(spark):
         for r in df.withColumn("b", bucket_expr(boundaries)).collect()
     }
     for t in terms:
-        want = max(bisect_right(boundaries, t) - 1, 0)
+        (want,) = buckets_for_terms(boundaries, [t])
         assert got[t] == want, (t, got[t], want)

@@ -7,6 +7,7 @@ not pinned, WAND + numpy both sum in ascending term order)."""
 import math
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,7 +26,9 @@ def built(spark, tmp_path_factory):
     pages = spark.createDataFrame(gen_webpages(n=600, seed=42))
     corpus = prepare_webpages(pages)
     cfg = EngineConfig(n_buckets=8)
-    props = IndexBuild(out, cfg, build_id="parity").run(spark, corpus, input_snapshot="fixture:600")
+    props = IndexBuild(out, cfg, build_id="parity", store_tokens=True).run(
+        spark, corpus, input_snapshot="fixture:600"
+    )
     reader = IndexReader(spark, out)
     texts = {r["doc_id"]: r["text"] for r in corpus.select("doc_id", "text").collect()}
     return reader, texts, cfg
@@ -118,22 +121,39 @@ def test_many_claims_distributed_planner(spark, built):
     assert (merged.doc_id_w == merged.doc_id_e).all()
 
 
-def test_semi_join_term_pruning_path(spark, built, claims_pdf):
+@pytest.mark.parametrize("query", ["query_wand", "query_exhaustive", "query_phrase"])
+def test_semi_join_term_pruning_path(spark, built, claims_pdf, query):
     """Force the semi-join pruning branch (isin_pushdown_max_terms=0) and
-    require byte-identical results to the isin fast path."""
+    require byte-identical results to the isin fast path, and the index
+    scan pruned by a LeftSemi join on (bucket, term): every query path
+    honours the bound."""
     import dataclasses
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from defactonlp_spark.plans import query as Q
 
     reader, _, cfg = built
-    claims = spark.createDataFrame(claims_pdf[["claim_id", "claim"]].head(30))
-    semi_cfg = dataclasses.replace(cfg, isin_pushdown_max_terms=0)
+    pdf = claims_pdf[["claim_id", "claim"]].head(30)
+    if query == "query_phrase":  # the claims' first two words as phrases
+        pdf = pd.DataFrame({"claim_id": pdf["claim_id"],
+                            "phrase": pdf["claim"].str.split().str[:2].str.join(" ")})
+    claims = spark.createDataFrame(pdf)
+    run = getattr(Q, query)
+    semi = run(reader, claims, k=K, cfg=dataclasses.replace(cfg, isin_pushdown_max_terms=0))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        semi.explain("formatted")
+    assert re.search(r"Left keys \[2\]: \[bucket#\d+, term#\d+\]\n"
+                     r"Right keys \[2\]: \[bucket#\d+, term#\d+\]\nJoin type: LeftSemi",
+                     buf.getvalue())
     a = (
-        query_wand(reader, claims, k=K, cfg=cfg).toPandas()
+        run(reader, claims, k=K, cfg=cfg).toPandas()
         .sort_values(["claim_id", "rank"]).reset_index(drop=True)
     )
-    b = (
-        query_wand(reader, claims, k=K, cfg=semi_cfg).toPandas()
-        .sort_values(["claim_id", "rank"]).reset_index(drop=True)
-    )
+    b = semi.toPandas().sort_values(["claim_id", "rank"]).reset_index(drop=True)
+    assert len(a) > 0 and len(a) == len(b)
     assert (a["claim_id"] == b["claim_id"]).all()
     assert (a["doc_id"] == b["doc_id"]).all()
     assert all(x == y for x, y in zip(a["score"], b["score"]))
