@@ -772,16 +772,14 @@ def _segments_cached(spark, sf_dir):
     key = (spark, "segments", sf_dir)
     if key not in _MEMO:
         from defactonlp_spark.config import EngineConfig
-        from defactonlp_spark.operators.postings import salt_plan, term_stats, with_salt
+        from defactonlp_spark.operators.postings import term_stats
         from defactonlp_spark.operators.segments import encode_segments
 
         cfg = EngineConfig(n_buckets=8)
         p = _postings_cached(spark, sf_dir)
         n_docs, avgdl = _engine_corpus_stats(p)
         stats = term_stats(p)
-        seg = encode_segments(
-            with_salt(p, salt_plan(stats, n_docs, cfg)), stats, n_docs, avgdl, cfg, 8
-        ).persist()
+        seg = encode_segments(p, stats, n_docs, avgdl, cfg, 8).persist()
         _MEMO[key] = (seg, n_docs, avgdl, cfg)
     return _MEMO[key]
 
@@ -794,17 +792,14 @@ def _sharded_segments_cached(spark, sf_dir):
     key = (spark, "sharded_segments", sf_dir)
     if key not in _MEMO:
         from defactonlp_spark.config import EngineConfig
-        from defactonlp_spark.operators.postings import salt_plan, term_stats, with_salt
+        from defactonlp_spark.operators.postings import term_stats
         from defactonlp_spark.operators.sharding import encode_sharded_segments
 
         cfg = EngineConfig(n_buckets=8)
         p = _postings_cached(spark, sf_dir)
         n_docs, avgdl = _engine_corpus_stats(p)
         stats = term_stats(p)
-        seg = encode_sharded_segments(
-            with_salt(p, salt_plan(stats, n_docs, cfg)), stats, n_docs, avgdl,
-            cfg, N_SHARDS, 8,
-        ).persist()
+        seg = encode_sharded_segments(p, stats, n_docs, avgdl, cfg, N_SHARDS, 8).persist()
         _MEMO[key] = (seg, n_docs, avgdl, cfg)
     return _MEMO[key]
 
@@ -1700,12 +1695,7 @@ def q_lm_dirichlet_indexed(spark, sf_dir):
     from defactonlp_spark.config import EngineConfig
     from defactonlp_spark.operators.bm25 import claim_terms
     from defactonlp_spark.operators.lm import score_lm_dirichlet
-    from defactonlp_spark.operators.postings import (
-        corpus_stats,
-        salt_plan,
-        term_stats,
-        with_salt,
-    )
+    from defactonlp_spark.operators.postings import corpus_stats, term_stats
     from defactonlp_spark.operators.segments import encode_segments
     from defactonlp_spark.plans.query import decode_segments
 
@@ -1714,7 +1704,7 @@ def q_lm_dirichlet_indexed(spark, sf_dir):
     cs = corpus_stats(p).collect()[0]
     n_docs, avgdl, total = int(cs["n_docs"]), float(cs["avgdl"]), int(cs["total_tokens"])
     stats = term_stats(p)
-    seg = encode_segments(with_salt(p, salt_plan(stats, n_docs, cfg)), stats, n_docs, avgdl, cfg, 8)
+    seg = encode_segments(p, stats, n_docs, avgdl, cfg, 8)
     q = claim_terms(_claims_df(spark))
     terms = [r["term"] for r in q.select("term").distinct().collect()]
     decoded = decode_segments(seg.filter(F.col("term").isin(terms)))
@@ -2145,11 +2135,7 @@ def q_bm25_topk_merged(spark, sf_dir):
     bm25_topk — compaction must be invisible in results."""
     from defactonlp_spark.config import EngineConfig
     from defactonlp_spark.operators.bm25 import claim_terms
-    from defactonlp_spark.operators.postings import (
-        salt_plan,
-        term_stats,
-        with_salt,
-    )
+    from defactonlp_spark.operators.postings import term_stats
     from defactonlp_spark.operators.segments import encode_segments, merge_segments
     from defactonlp_spark.operators.wand import wand_topk
 
@@ -2158,10 +2144,7 @@ def q_bm25_topk_merged(spark, sf_dir):
     n_docs, avgdl = _engine_corpus_stats(p)
 
     def gen(half):
-        st = term_stats(half)
-        return encode_segments(
-            with_salt(half, salt_plan(st, n_docs, cfg)), st, n_docs, avgdl, cfg, 8
-        )
+        return encode_segments(half, term_stats(half), n_docs, avgdl, cfg, 8)
 
     union = gen(p.filter(F.col("doc_id") % 2 == 0)).unionByName(
         gen(p.filter(F.col("doc_id") % 2 == 1))

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.functions.tokenize import tokenize_postings
 from defactonlp_spark.operators.bm25 import bm25_score_expr, topk
 
@@ -98,14 +97,6 @@ def build_postings(corpus: DataFrame, id_col: str = "doc_id", text_col: str = "t
     from defactonlp_spark.session import floor_parallelism
 
     return tokenize_postings(floor_parallelism(corpus), id_col=id_col, text_col=text_col)
-
-
-def build_postings_html(pages: DataFrame, id_col: str = "doc_id", html_col: str = "html") -> DataFrame:
-    """pages-with-ids -> postings_long via the FUSED extract+tokenize stage
-    (one Python round trip instead of two; see tokenize_postings_html)."""
-    from defactonlp_spark.functions.tokenize import tokenize_postings_html
-
-    return tokenize_postings_html(pages, id_col=id_col, html_col=html_col)
 
 
 def term_stats(postings: DataFrame) -> DataFrame:
@@ -215,33 +206,6 @@ def suggest_corrections(
         cand.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= topn)
         .select("claim_id", "term", "rank", "suggestion", "dist", "df")
-    )
-
-
-def salt_plan(stats: DataFrame, n_docs: int, cfg: EngineConfig) -> DataFrame:
-    """Head terms (df > salt_df_ratio * n_docs) -> n_salts sub-lists.
-
-    Returned plan: (term, n_salts). Broadcast-joined onto postings; absent
-    terms default to 1 salt. SURVEY.md §2.B3 / BASELINE.json skew mandate.
-    """
-    thresh = max(int(n_docs * cfg.salt_df_ratio), 1)
-    return stats.filter(F.col("df") > thresh).select(
-        "term", F.lit(cfg.n_salts).cast("int").alias("n_salts")
-    )
-
-
-def with_salt(postings: DataFrame, plan: DataFrame) -> DataFrame:
-    """Add ``salt`` = doc_id % n_salts for head terms, 0 otherwise."""
-    return (
-        postings.join(F.broadcast(plan), "term", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("n_salts").isNotNull(),
-                (F.col("doc_id") % F.col("n_salts")).cast("int"),
-            ).otherwise(F.lit(0).cast("int")),
-        )
-        .drop("n_salts")
     )
 
 

@@ -12,9 +12,10 @@ the global winners each rank in their own shard's local top-k. That makes
 the sharded path rank-and-score identical to the unsharded one (the driver
 checks it against the same exhaustive-BM25 oracle as ``bm25_topk``).
 
-Spark-native realization: the shard id folds into the existing ``salt``
-grouping column (``salt' = salt * n_shards + doc_id % n_shards``), so
-``encode_segments``'s one range shuffle + streaming encode kernel is reused
+Spark-native realization: ``encode_segments(..., n_shards=)`` folds the
+shard id into the ``salt`` grouping column it computes (``salt' = salt *
+n_shards + pmod(doc_id, n_shards)``, recoverable as ``shard = pmod(salt',
+n_shards)``), so its one range shuffle + streaming encode kernel is reused
 unchanged — each (term, shard) sub-list becomes its own delta+varbyte
 slice, sorted by doc_id, with the GLOBAL df stored (stats are computed
 before sharding). Serving fans the claim kernel groups out per shard by
@@ -44,23 +45,8 @@ from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.segments import encode_segments
 
 
-def with_shard_salt(salted_postings: DataFrame, n_shards: int) -> DataFrame:
-    """Fold a deterministic doc shard id into the salt grouping column.
-
-    ``salt' = salt * n_shards + pmod(doc_id, n_shards)`` — recoverable as
-    ``shard = pmod(salt', n_shards)``, and each (term, salt') group is one
-    shard's (sub-)list, so the unmodified encode kernel emits per-shard
-    slices."""
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    return salted_postings.withColumn(
-        "salt",
-        (F.col("salt") * n_shards + F.pmod(F.col("doc_id"), n_shards)).cast("int"),
-    )
-
-
 def encode_sharded_segments(
-    salted_postings: DataFrame,
+    postings: DataFrame,
     stats_df: DataFrame,
     n_docs: int,
     avgdl: float,
@@ -71,16 +57,14 @@ def encode_sharded_segments(
     """Segment table with an explicit ``shard`` column (doc_id % n_shards).
 
     Same physical plan as the unsharded build — ONE repartitionByRange on
-    (term, salt') + streaming encode — because the shard id rides the salt
-    column. ``stats_df`` / ``n_docs`` / ``avgdl`` must be GLOBAL (computed
-    before sharding): that is what makes shard-local scores globally
-    comparable. A deployment would write this table hive-partitioned by
-    shard so each serving executor group reads only its shard's files.
+    (term, salt') + streaming encode — because ``encode_segments`` folds the
+    shard id into the salt column it computes. ``stats_df`` / ``n_docs`` /
+    ``avgdl`` must be GLOBAL (computed before sharding): that is what makes
+    shard-local scores globally comparable. A deployment would write this
+    table hive-partitioned by shard so each serving executor group reads
+    only its shard's files.
     """
-    seg = encode_segments(
-        with_shard_salt(salted_postings, n_shards),
-        stats_df, n_docs, avgdl, cfg, n_partitions,
-    )
+    seg = encode_segments(postings, stats_df, n_docs, avgdl, cfg, n_partitions, n_shards=n_shards)
     return seg.withColumn("shard", F.pmod(F.col("salt"), F.lit(n_shards)).cast("int"))
 
 

@@ -244,6 +244,47 @@ def prepare_webpages_fused(pages: DataFrame, n_parts: int = 256) -> DataFrame:
     )
 
 
+def write_manifest(
+    spark: SparkSession,
+    out_dir: str,
+    build_id: str,
+    cfg: EngineConfig,
+    t0: float,
+    n_docs: int,
+    avgdl: float,
+    total_tokens: int,
+    boundaries: list[str],
+    has_tokens: bool,
+    extra: dict,
+) -> dict:
+    """Commit the manifest of the index at ``out_dir``: the one writer
+    behind ``IndexBuild.run``, :func:`merge_builds` and
+    ``streaming.incremental.publish_generations``.
+
+    Writes the keys every serving path reads (corpus stats, bucket
+    boundaries, BM25 and block parameters, ``has_tokens``, ``wall_s`` since
+    ``t0``) after the caller's ``extra`` keys (lineage, stage walls, ...),
+    and returns the props dict. The manifest commits LAST: a dir without
+    one is not an index (``IndexReader`` and ``set_alias`` refuse it)."""
+    props = {
+        **extra,
+        "n_docs": n_docs,
+        "avgdl": avgdl,
+        "total_tokens": total_tokens,
+        "n_buckets": cfg.n_buckets,
+        "boundaries": boundaries,
+        "k1": cfg.bm25.k1,
+        "b": cfg.bm25.b,
+        "block_size": cfg.block_size,
+        "has_tokens": has_tokens,
+        "wall_s": time.time() - t0,
+    }
+    LocalTable(os.path.join(out_dir, "manifest")).overwrite(
+        local_frame(spark, [(build_id,)], "build_id string"), properties=props
+    )
+    return props
+
+
 class IndexBuild:
     def __init__(
         self,
@@ -273,7 +314,6 @@ class IndexBuild:
         self.segments = LocalTable(os.path.join(out_dir, "segments"))
         self.checkpoints = LocalTable(os.path.join(out_dir, "checkpoints"))
         self.metrics = LocalTable(os.path.join(out_dir, "metrics"))
-        self.manifest = LocalTable(os.path.join(out_dir, "manifest"))
 
     # -- helpers -----------------------------------------------------------
     def _done_buckets(self, spark: SparkSession) -> set[int]:
@@ -334,12 +374,10 @@ class IndexBuild:
         bounds_path = os.path.join(self.out_dir, "boundaries.json")
         ts, bs = time.time(), _busy()
         if not os.path.exists(os.path.join(self.postings_dir, "_SUCCESS")):
-            # fused paths when the corpus still carries raw html: extract(+id
-            # assignment, for prepare_webpages_fused input) in ONE Python stage
+            # prepare_webpages_fused input still carries raw html: extract +
+            # id assignment + tokenize run in ONE Python stage
             if "text" in corpus.columns:
                 pl = P.build_postings(corpus)
-            elif "doc_id" in corpus.columns:
-                pl = P.build_postings_html(corpus)
             else:
                 from defactonlp_spark.functions.tokenize import tokenize_postings_html
 
@@ -409,7 +447,6 @@ class IndexBuild:
         ]
         groups = [g for g in groups if g]
 
-        plan = P.salt_plan(stats, n_docs, cfg)
         committed = 0
         ts, bs = time.time(), _busy()
         for g in groups:
@@ -417,9 +454,8 @@ class IndexBuild:
             # bucket membership is a pure expression over term — the group
             # scan is a column-pruned pass over the postings materialization
             part = postings.filter(bucket_expr(boundaries).isin(g))
-            salted = P.with_salt(part, plan)
             seg = encode_segments(
-                salted, stats, n_docs, avgdl, cfg,
+                part, stats, n_docs, avgdl, cfg,
                 n_partitions=max(len(g), 1),
             ).withColumn("bucket", bucket_expr(boundaries))
             # hive-partitioned by bucket: query-time term pruning then skips
@@ -464,25 +500,12 @@ class IndexBuild:
                 raise RuntimeError(f"injected failure after {committed} group commits")
         _mark("encode_commit", ts, bs)
 
-        props = {
-            "stage_walls": stage_walls,
-            "stage_cpu": stage_cpu,
-            **lineage,
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "total_tokens": total_tokens,
-            "n_buckets": cfg.n_buckets,
-            "boundaries": boundaries,
-            "k1": cfg.bm25.k1,
-            "b": cfg.bm25.b,
-            "block_size": cfg.block_size,
-            "has_tokens": self.store_tokens,
-            "wall_s": time.time() - t0,
-        }
-        self.manifest.overwrite(
-            local_frame(spark, [(self.build_id,)], "build_id string"), properties=props
+        return write_manifest(
+            spark, self.out_dir, self.build_id, cfg, t0,
+            n_docs=n_docs, avgdl=avgdl, total_tokens=total_tokens,
+            boundaries=boundaries, has_tokens=self.store_tokens,
+            extra={"stage_walls": stage_walls, "stage_cpu": stage_cpu, **lineage},
         )
-        return props
 
 
 def delete_docs(spark: SparkSession, out_dir: str, doc_ids, note: str | None = None) -> dict:
@@ -534,35 +557,22 @@ def merge_builds(
     built with distinct ``id_offset``) into one serveable index at
     ``dest_dir``.
 
-    Plan (one shuffle + one commit):
-      union of generation segment tables (compressed rows only — the corpus
-      is never touched) -> ``merge_segments`` groupBy(term, salt)
-      applyInPandas: decode, doc_id-interleave, re-encode with block-max
-      bounds from the MERGED corpus stats -> bucket boundaries recomputed
-      df-weighted from the merged term stats (aggregated off the segment
-      rows' (term, n) columns — a tiny columnar scan, blobs stay on disk)
-      -> hive-partitioned write + manifest commit.
-
     Corpus stats compose exactly from the generation manifests:
     N = sum(N_g); avgdl = sum(total_tokens_g) / N (no corpus re-scan).
     Duplicate doc ids across generations fail the merge kernel loudly.
     Lineage: source dirs + their snapshot ids recorded in the manifest.
+    The union, re-encode, bucket-partitioned write and manifest commit are
+    :func:`compact_generations`, the core this shares with
+    ``streaming.incremental.publish_generations``.
 
     Tombstones (``apply_deletes``, default on): if any source carries a
     ``deletes`` table, compaction physically drops those docs' postings and
     recomputes EXACT live corpus stats (N, avgdl, per-term df) — the
     resulting index scores identically to a fresh build over the surviving
-    corpus (tests/test_deletes.py pins this). This path decodes the union
-    and re-encodes through the build's own salt/range/encode operators —
-    one broadcast anti-join against the tombstones plus the build's single
-    range shuffle, so it scales with postings volume, never with tombstone
-    count (no tombstone array rides any closure here; that bound applies
-    only to pre-compaction serving). The blob-level k-way
-    ``merge_segments`` fast path (one exchange, no decode of tf/dl streams
-    into long rows) still serves the no-deletes case.
+    corpus (tests/test_deletes.py pins this). The positional sidecar is
+    carried through when EVERY source has one (a partial union would
+    silently break phrase recall on the merged index).
     """
-    from defactonlp_spark.operators.segments import merge_segments
-
     cfg = cfg or EngineConfig()
     t0 = time.time()
     srcs = []
@@ -570,19 +580,72 @@ def merge_builds(
         snap = LocalTable(os.path.join(d, "manifest")).current_snapshot()
         if snap is None:
             raise FileNotFoundError(f"no manifest in {d}")
-        srcs.append((d, snap.properties, LocalTable(os.path.join(d, "segments"))))
-    n_docs = sum(int(p["n_docs"]) for _, p, _ in srcs)
-    total_tokens = sum(int(p["total_tokens"]) for _, p, _ in srcs)
-    avgdl = total_tokens / max(n_docs, 1)
+        srcs.append((d, snap.properties))
+    tok_tbls = [LocalTable(os.path.join(d, "tokens")) for d, _ in srcs]
+    return compact_generations(
+        spark,
+        [LocalTable(os.path.join(d, "segments")).read(spark) for d, _ in srcs],
+        dest_dir,
+        n_docs=sum(int(p["n_docs"]) for _, p in srcs),
+        total_tokens=sum(int(p["total_tokens"]) for _, p in srcs),
+        cfg=cfg,
+        t0=t0,
+        build_id="merge",
+        lineage={
+            "operation": "merge",
+            "sources": json.dumps([
+                {"dir": d, "build_id": p.get("build_id"), "n_docs": int(p["n_docs"])}
+                for d, p in srcs
+            ]),
+        },
+        dels=_union_deletes(spark, [d for d, _ in srcs]) if apply_deletes else None,
+        tokens=(
+            [t.read(spark) for t in tok_tbls]
+            if all(t.current_snapshot() is not None for t in tok_tbls) else None
+        ),
+    )
 
-    gens = [t.read(spark) for _, _, t in srcs]
-    cols = ["term", "salt", "df", "n", "n_bytes", "n_blocks",
-            "docs_blob", "tfs_blob", "dls_blob", "blockmax"]
+
+def compact_generations(
+    spark: SparkSession,
+    gens: list[DataFrame],
+    dest_dir: str,
+    n_docs: int,
+    total_tokens: int,
+    cfg: EngineConfig,
+    t0: float,
+    build_id: str,
+    lineage: dict,
+    dels: DataFrame | None = None,
+    tokens: list[DataFrame] | None = None,
+) -> dict:
+    """Compact id-disjoint segment generations into one serveable index at
+    ``dest_dir``; returns the manifest props. ``n_docs``/``total_tokens``
+    are the generations' composed corpus stats; ``lineage`` goes into the
+    table and manifest properties.
+
+    Plan (one shuffle + one commit): union of the generation segment rows
+    (compressed rows only — the corpus is never touched) ->
+      - no tombstones: ``merge_segments`` groupBy(term, salt) applyInPandas
+        (decode, doc_id-interleave, re-encode with block-max bounds from the
+        MERGED stats); boundaries are cut df-weighted off the rows' (term, n)
+        columns (sum(n) == df; a tiny columnar scan, blobs stay on disk);
+      - ``dels`` (distinct tombstoned doc ids): decode -> broadcast
+        anti-join -> the build's own ``encode_segments`` (one range
+        shuffle), with EXACT live stats; this scales with postings volume,
+        never with tombstone count (no tombstone array rides a closure)
+    -> hive-partitioned segment write -> positional sidecar (``tokens``:
+    the sources' token tables, re-bucketed on the new boundaries, minus
+    tombstoned docs) -> manifest, written LAST by :func:`write_manifest`.
+    """
     from functools import reduce
 
-    union = reduce(lambda a, b: a.unionByName(b), [g.select(*cols) for g in gens])
+    from defactonlp_spark.operators.segments import merge_segments
 
-    dels = _union_deletes(spark, [d for d, _, _ in srcs]) if apply_deletes else None
+    cols = ["term", "salt", "df", "n", "n_bytes", "n_blocks",
+            "docs_blob", "tfs_blob", "dls_blob", "blockmax"]
+    union = reduce(lambda a, b: a.unionByName(b), [g.select(*cols) for g in gens])
+    avgdl = total_tokens / max(n_docs, 1)
     n_deleted = 0
     live = None
     if dels is not None:
@@ -590,8 +653,7 @@ def merge_builds(
 
         from defactonlp_spark.plans.query import decode_segments
 
-        # decode -> anti-join -> re-encode via the build operators; persist
-        # the live postings: stats, boundaries, and encode all read them
+        # persist the live postings: stats, boundaries, and encode all read them
         live = (
             decode_segments(union)
             .join(F.broadcast(dels), "doc_id", "left_anti")
@@ -602,48 +664,22 @@ def merge_builds(
         n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
         total_tokens = int(crow["total_tokens"])
         stats = P.term_stats(live)
-        n_terms = stats.count()
-        boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
-        merged = encode_segments(
-            P.with_salt(live, P.salt_plan(stats, n_docs, cfg)),
-            stats, n_docs, avgdl, cfg, n_partitions=cfg.n_buckets,
-        )
+        merged = encode_segments(live, stats, n_docs, avgdl, cfg, n_partitions=cfg.n_buckets)
     else:
         merged = merge_segments(union, n_docs, avgdl, cfg)
-
-        # df-weighted boundaries from the merged vocabulary: per-term postings
-        # mass is sum(n) over the term's slices (tf is per-doc aggregated, so
-        # sum(n) == df) — same cut rule as the build, no corpus scan
         stats = union.groupBy("term").agg(F.sum("n").alias("df"))
-        n_terms = stats.count()
-        boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
+    n_terms = stats.count()
+    boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
 
-    dest_seg = LocalTable(os.path.join(dest_dir, "segments"))
-    lineage = {
-        "operation": "merge",
-        "sources": json.dumps([
-            {"dir": d, "build_id": p.get("build_id"), "n_docs": int(p["n_docs"])}
-            for d, p, _ in srcs
-        ]),
-        "n_deleted": n_deleted,
-    }
-    dest_seg.overwrite(
+    lineage = {**lineage, "n_deleted": n_deleted}
+    LocalTable(os.path.join(dest_dir, "segments")).overwrite(
         merged.withColumn("bucket", bucket_expr(boundaries)),
         properties=lineage,
         partition_by=["bucket"],
     )
-
-    # positional sidecar (B11): carried through compaction when EVERY source
-    # has one (a partial union would silently break phrase recall on the
-    # merged index); tombstoned docs' tokens are dropped physically and the
-    # bucket column is recomputed against the MERGED boundaries
-    tok_tbls = [LocalTable(os.path.join(d, "tokens")) for d, _, _ in srcs]
-    has_tokens = all(t.current_snapshot() is not None for t in tok_tbls)
-    if has_tokens:
-        toks = reduce(
-            lambda a, b: a.unionByName(b),
-            [t.read(spark).select("doc_id", "pos", "term") for t in tok_tbls],
-        )
+    if tokens is not None:
+        toks = reduce(lambda a, b: a.unionByName(b),
+                      [t.select("doc_id", "pos", "term") for t in tokens])
         if dels is not None:
             toks = toks.join(F.broadcast(dels), "doc_id", "left_anti")
         toks = (
@@ -654,23 +690,11 @@ def merge_builds(
         LocalTable(os.path.join(dest_dir, "tokens")).overwrite(
             toks, properties=lineage, partition_by=["bucket"]
         )
-
-    props = {
-        **lineage,
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "total_tokens": total_tokens,
-        "n_buckets": cfg.n_buckets,
-        "boundaries": boundaries,
-        "n_terms": n_terms,
-        "k1": cfg.bm25.k1,
-        "b": cfg.bm25.b,
-        "block_size": cfg.block_size,
-        "has_tokens": has_tokens,
-        "wall_s": time.time() - t0,
-    }
-    LocalTable(os.path.join(dest_dir, "manifest")).overwrite(
-        local_frame(spark, [("merge",)], "build_id string"), properties=props
+    props = write_manifest(
+        spark, dest_dir, build_id, cfg, t0,
+        n_docs=n_docs, avgdl=avgdl, total_tokens=total_tokens,
+        boundaries=boundaries, has_tokens=tokens is not None,
+        extra={**lineage, "n_terms": n_terms},
     )
     if live is not None:
         live.unpersist()

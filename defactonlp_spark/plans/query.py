@@ -180,21 +180,10 @@ def query_lm_dirichlet(
     build's term dictionary and total_tokens from the manifest — as-built
     collection statistics; tombstoned docs are masked from SCORING by
     ``_pruned_postings``' anti-join but the collection model is unchanged
-    until compaction. Indexes built before the dictionary carried ctf fall
-    back to aggregating it from the postings materialization pruned to the
-    query terms (identical values — ctf is definitionally sum(tf))."""
+    until compaction."""
     q = claim_terms(claims)
-    terms = query_terms(q, EngineConfig().isin_pushdown_max_terms)
-    postings, _ = _pruned_postings(reader, terms)
-    dict_df = reader.term_stats()
-    if "ctf" in dict_df.columns:
-        cstats = dict_df.select("term", "ctf")
-    else:  # pre-ctf index: one term-pruned pass over stored postings
-        cstats = (
-            prune_to_terms(reader.postings(), terms, reader.boundaries)
-            .groupBy("term")
-            .agg(F.sum("tf").cast("long").alias("ctf"))
-        )
+    postings, _ = _pruned_postings(reader, query_terms(q, EngineConfig().isin_pushdown_max_terms))
+    cstats = reader.term_stats().select("term", "ctf")
     if not reader.total_tokens:
         raise ValueError(f"manifest in {reader.out_dir} lacks total_tokens")
     from defactonlp_spark.operators.lm import score_lm_dirichlet
@@ -377,9 +366,11 @@ def query_rm3(
         postings1, stats1, q, reader.n_docs, reader.avgdl, k=fb_docs,
         params=cfg.bm25, rank_dp=rank_dp,
     ).select("claim_id", "doc_id", "score")
+    # checkpointed once: the second pass's term probe and its scoring both
+    # read the weights, and each would otherwise re-run the whole first pass
     wterms = rm3_weights(
         first, reader.postings(), q, fb_terms=fb_terms, alpha=alpha
-    )
+    ).localCheckpoint()
     postings2, stats2 = _pruned_postings(reader, query_terms(wterms, cfg.isin_pushdown_max_terms))
     return score_weighted(
         postings2, stats2, wterms, reader.n_docs, reader.avgdl, k=k,

@@ -4,17 +4,20 @@ The north rule is batch (build + resume); the reference has no streaming at
 all (SURVEY.md §2.C). This module is the documented scale path for CONTINUOUS
 corpora: new page files land in a directory, each micro-batch becomes a new
 SEGMENT GENERATION appended to the segments table, and a periodic
-``merge_segments`` compacts generations (the LSM pattern).
+:func:`publish_generations` compacts them into a serveable index (the LSM
+pattern) through the same compaction core and manifest writer as
+``plans.build.merge_builds`` (``plans.build.compact_generations``).
 
 Design notes:
 - ``Trigger.AvailableNow`` drains what exists and stops — the right trigger
   for scheduled incremental builds (no long-running driver);
 - ``foreachBatch`` gives each micro-batch a normal batch DataFrame, so the
-  EXACT batch encode path (tokenize -> salt -> encode_segments) is reused —
-  no second implementation to keep in sync;
+  EXACT batch encode path (tokenize -> encode_segments, which salts head
+  terms itself) is reused — no second implementation to keep in sync;
 - corpus stats (N, avgdl) drift as generations accumulate; block-max scores
-  are recomputed from the merged stats at compaction time (merge_segments
-  already does this), so WAND bounds stay sound after every compaction.
+  are recomputed from the merged stats at compaction time (the compaction
+  core's re-encode does this), so WAND bounds stay sound after every
+  compaction.
   Between compactions, queries use the manifest stats of the last
   compaction — scores are consistent, coverage lags by <1 generation.
 - no event-time windows/watermarks are needed: the index is an append-only
@@ -23,11 +26,14 @@ Design notes:
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators import postings as P
 from defactonlp_spark.operators.segments import encode_segments
+from defactonlp_spark.plans.build import compact_generations
 from defactonlp_spark.sources.tableio import LocalTable
 
 
@@ -58,8 +64,7 @@ def start_incremental_build(
         stats = P.term_stats(postings)
         cs = P.corpus_stats(postings).collect()[0]
         n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
-        plan = P.salt_plan(stats, n_docs, cfg)
-        seg = encode_segments(P.with_salt(postings, plan), stats, n_docs, avgdl, cfg)
+        seg = encode_segments(postings, stats, n_docs, avgdl, cfg)
         table.append(seg, properties={"batch_id": batch_id, "n_docs": n_docs,
                                       "avgdl": avgdl,
                                       "total_tokens": int(cs["total_tokens"])})
@@ -90,9 +95,10 @@ def publish_generations(
 
     Corpus stats compose EXACTLY from the per-batch append properties
     (N = sum n_docs_g, total_tokens = sum total_tokens_g) — no corpus
-    re-scan, same composition rule as ``plans.build.merge_builds``. One
-    ``merge_segments`` exchange re-encodes with block-max bounds from the
-    merged stats; bucket boundaries are recomputed df-weighted off the
+    re-scan, same composition rule as ``plans.build.merge_builds``, and the
+    same compaction core (``plans.build.compact_generations``): one blob
+    merge exchange re-encodes with block-max bounds from the merged stats;
+    bucket boundaries are recomputed df-weighted off the
     generation rows' (term, n) columns (blobs stay on disk). The manifest
     commits LAST, so a publish interrupted anywhere leaves a dir the
     alias layer refuses to serve (set_alias requires a manifest).
@@ -102,15 +108,8 @@ def publish_generations(
     tokens sidecar (has_tokens=False): phrase queries need the batch
     builder today — the honest limit, recorded in the manifest.
     """
-    from pyspark.sql import functions as F
-
-    from defactonlp_spark.operators.segments import merge_segments
-    from defactonlp_spark.plans.build import bucket_boundaries, bucket_expr
-
     cfg = cfg or EngineConfig()
-    import time as _time
-
-    t0 = _time.time()
+    t0 = time.time()
     table = LocalTable(f"{stream_dir}/segments")
     appends = [
         s for s in table.snapshots()
@@ -120,52 +119,19 @@ def publish_generations(
         raise FileNotFoundError(
             f"{stream_dir}/segments has no streamed generations to publish"
         )
-    n_docs = sum(int(s.properties["n_docs"]) for s in appends)
-    total_tokens = sum(
-        int(s.properties.get(
-            "total_tokens",
-            # pre-round-5 generations recorded only (n_docs, avgdl)
-            round(int(s.properties["n_docs"]) * float(s.properties["avgdl"])),
-        ))
-        for s in appends
+    return compact_generations(
+        spark,
+        [table.read(spark)],
+        dest_dir,
+        n_docs=sum(int(s.properties["n_docs"]) for s in appends),
+        total_tokens=sum(int(s.properties["total_tokens"]) for s in appends),
+        cfg=cfg,
+        t0=t0,
+        build_id="publish",
+        lineage={
+            "operation": "publish",
+            "source": stream_dir,
+            "generations": len(appends),
+            "last_generation_snapshot": appends[-1].snapshot_id,
+        },
     )
-    avgdl = total_tokens / max(n_docs, 1)
-
-    union = table.read(spark).select(
-        "term", "salt", "df", "n", "n_bytes", "n_blocks",
-        "docs_blob", "tfs_blob", "dls_blob", "blockmax",
-    )
-    merged = merge_segments(union, n_docs, avgdl, cfg)
-    stats = union.groupBy("term").agg(F.sum("n").alias("df"))
-    n_terms = stats.count()
-    boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
-
-    lineage = {
-        "operation": "publish",
-        "source": stream_dir,
-        "generations": len(appends),
-        "last_generation_snapshot": appends[-1].snapshot_id,
-    }
-    LocalTable(f"{dest_dir}/segments").overwrite(
-        merged.withColumn("bucket", bucket_expr(boundaries)),
-        properties=lineage,
-        partition_by=["bucket"],
-    )
-    props = {
-        **lineage,
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "total_tokens": total_tokens,
-        "n_buckets": cfg.n_buckets,
-        "boundaries": boundaries,
-        "n_terms": n_terms,
-        "k1": cfg.bm25.k1,
-        "b": cfg.bm25.b,
-        "block_size": cfg.block_size,
-        "has_tokens": False,
-        "wall_s": _time.time() - t0,
-    }
-    LocalTable(f"{dest_dir}/manifest").overwrite(
-        spark.createDataFrame([("publish",)], "build_id string"), properties=props
-    )
-    return props

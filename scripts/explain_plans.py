@@ -164,20 +164,23 @@ def audit(work: str) -> int:
         must=["BroadcastHashJoin", "HashAggregate", "WindowGroupLimit"],
     )
 
-    # 4. the build shuffle: exactly one range exchange keyed (term, salt),
-    # feeding one MapInArrow encode
+    # 4. the build shuffle: encode_segments salts plain postings itself, off
+    # ONE broadcast of the term stats (the df join), then exactly one range
+    # exchange keyed (term, salt) feeding one MapInArrow encode
     cfg = EngineConfig(n_buckets=8)
-    salted = P.with_salt(postings, P.salt_plan(stats, 500, cfg))
-    seg = encode_segments(salted, stats, 500, 56.0, cfg, 8)
+    seg = encode_segments(postings, stats, 500, 56.0, cfg, 8)
     plan = plan_of(seg)
+    tree = plan.split("\n\n", 1)[0]
     n_range = plan.lower().count("rangepartitioning")
     print(f"== build shuffle ==\n  [x] rangepartitioning exchanges: {n_range} (want 1)")
     ok &= n_range == 1
-    ok &= check("build shuffle broadcast salt plan", plan, must=["BroadcastHashJoin", "Sort"])
+    n_bcast = tree.count("BroadcastExchange")
+    print(f"  [{'x' if n_bcast == 1 else '!'}] BroadcastExchange nodes: {n_bcast} (want 1)")
+    ok &= n_bcast == 1
+    ok &= check("build shuffle broadcast df join", plan, must=["BroadcastHashJoin", "Sort"])
     # the encode is ONE whole-batch MapInArrow node straight on the sorted
     # range shuffle: no second exchange between it and the output (the
     # operator tree is printed root first, so "above" = after it)
-    tree = plan.split("\n\n", 1)[0]
     n_encode = tree.count("MapInArrow")
     above = tree.split("MapInArrow", 1)[0]
     print(f"  [{'x' if n_encode == 1 else '!'}] MapInArrow encode nodes: {n_encode} (want 1)")
@@ -513,14 +516,11 @@ def audit(work: str) -> int:
     # slice's shard folded in, then one window over |claims| x shards x k
     # local winners — the claim side is never replicated per shard (no
     # nested-loop or cartesian join), never a corpus-sized merge input
-    from defactonlp_spark.operators.postings import salt_plan, with_salt
     from defactonlp_spark.operators.sharding import (
         encode_sharded_segments, wand_topk_sharded,
     )
 
-    sseg = encode_sharded_segments(
-        with_salt(pz, salt_plan(st, 100, cfg)), st, 100, 10.0, cfg, 4, 8
-    )
+    sseg = encode_sharded_segments(pz, st, 100, 10.0, cfg, 4, 8)
     ok &= check(
         "sharded serving (grouped fan-out + merge window)",
         plan_of(wand_topk_sharded(sseg, qt, 100, 10.0, 4, k=5, cfg=cfg)),

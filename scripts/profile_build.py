@@ -84,10 +84,8 @@ def main(cores: int) -> None:
         n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
 
         t0, b0 = time.time(), _busy()
-        plan = P.salt_plan(stats, n_docs, cfg)
-        salted = P.with_salt(postings, plan)
         seg = encode_segments(
-            salted, stats, n_docs, avgdl, cfg, n_partitions=cfg.n_buckets
+            postings, stats, n_docs, avgdl, cfg, n_partitions=cfg.n_buckets
         ).withColumn("bucket", B.bucket_expr(boundaries))
         ib.segments.append(seg, properties={"profile": True})
         mark("encode_append", t0, b0)

@@ -39,7 +39,7 @@ import pytest
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.bm25 import claim_terms
-from defactonlp_spark.operators.postings import salt_plan, term_stats, with_salt
+from defactonlp_spark.operators.postings import term_stats
 from defactonlp_spark.operators.segments import encode_segments
 from defactonlp_spark.operators.sharding import encode_sharded_segments, wand_topk_sharded
 from defactonlp_spark.operators import wand
@@ -185,9 +185,8 @@ def test_literal_and_join_forms_return_identical_rows(spark, readers, path):
     _, reader = readers
     if path == "sharded":
         stats = reader.term_stats().select("term", "df")
-        salted = with_salt(reader.postings(), salt_plan(stats, reader.n_docs, CFG))
         sharded = encode_sharded_segments(
-            salted, stats, reader.n_docs, reader.avgdl, CFG, 3, 8
+            reader.postings(), stats, reader.n_docs, reader.avgdl, CFG, 3, 8
         ).persist()
     deletes = reader.deletes_array()
     mixed = list(gen_claims(n=40)[["claim_id", "claim"]].itertuples(index=False, name=None)) + EXTRA
@@ -240,9 +239,7 @@ def test_literal_escaping_of_hand_made_terms(spark):
     )
     stats = term_stats(postings)
     avgdl = 12.0
-    seg = encode_segments(
-        with_salt(postings, salt_plan(stats, n_docs, CFG)), stats, n_docs, avgdl, CFG, 2
-    ).persist()
+    seg = encode_segments(postings, stats, n_docs, avgdl, CFG, 2).persist()
     qrows = [(c, t) for c in range(6) for t in ODD_TERMS[c::2]] + [(9, "unseen'term")]
     qterms = spark.createDataFrame(
         pa.table({"claim_id": pa.array([c for c, _ in qrows], pa.int64()),

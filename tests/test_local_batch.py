@@ -25,7 +25,6 @@ import pytest
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.functions.tokenize import tokenize_one
 from defactonlp_spark.operators.bm25 import claim_terms
-from defactonlp_spark.operators.postings import salt_plan, with_salt
 from defactonlp_spark.operators.sharding import encode_sharded_segments, wand_topk_sharded
 from defactonlp_spark.operators.wand import RESULTS_SCHEMA
 from defactonlp_spark.plans.build import IndexBuild, IndexReader, prepare_webpages
@@ -93,8 +92,7 @@ def session(reader):
 @pytest.fixture(scope="module")
 def sharded(reader):
     stats = reader.term_stats().select("term", "df")
-    salted = with_salt(reader.postings(), salt_plan(stats, reader.n_docs, CFG))
-    return encode_sharded_segments(salted, stats, reader.n_docs, reader.avgdl, CFG, 3, 8)
+    return encode_sharded_segments(reader.postings(), stats, reader.n_docs, reader.avgdl, CFG, 3, 8)
 
 
 def _pdf(rows) -> pd.DataFrame:

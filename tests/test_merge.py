@@ -16,8 +16,7 @@ def _segments_for(spark, pdf, n_docs, avgdl):
     df = spark.createDataFrame(pdf[["doc_id", "text"]])
     postings = P.build_postings(df)
     stats = P.term_stats(postings)
-    plan = P.salt_plan(stats, n_docs, CFG)
-    return encode_segments(P.with_salt(postings, plan), stats, n_docs, avgdl, CFG, n_partitions=4)
+    return encode_segments(postings, stats, n_docs, avgdl, CFG, n_partitions=4)
 
 
 def test_merge_equals_single_shot(spark):

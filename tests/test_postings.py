@@ -51,22 +51,24 @@ def test_corpus_stats(docs, postings):
 
 
 def test_salting_disjoint_and_complete(postings):
+    """encode_segments salts head terms itself: one segment row per
+    (term, salt) sub-list, and a term's slices partition its postings."""
+    from defactonlp_spark.operators.segments import encode_segments
+
     cfg = EngineConfig(n_salts=4, salt_df_ratio=0.10)
     stats = P.term_stats(postings)
     n_docs = postings.select("doc_id").distinct().count()
-    plan = P.salt_plan(stats, n_docs, cfg)
-    head_terms = {r["term"] for r in plan.collect()}
-    assert "the" in head_terms  # Zipf head of the fixture vocab
-    salted = P.with_salt(postings, plan)
-    # same rows, salt in range, head terms actually split
-    assert salted.count() == postings.count()
-    assert salted.filter((F.col("salt") < 0) | (F.col("salt") >= 4)).count() == 0
-    assert salted.filter(~F.col("term").isin(list(head_terms)) & (F.col("salt") != 0)).count() == 0
-    per = salted.filter(F.col("term") == "the").groupBy("salt").count().collect()
-    assert len(per) == 4
-    # salt is doc_id % n_salts -> each (term, doc) appears exactly once
-    dup = salted.groupBy("term", "doc_id").count().filter("count > 1").count()
-    assert dup == 0
+    thresh = max(int(n_docs * cfg.salt_df_ratio), 1)
+    df = {r["term"]: r["df"] for r in stats.collect()}
+    seg = encode_segments(postings, stats, n_docs, 50.0, cfg, 4)
+    seg = seg.select("term", "salt", "n").toPandas()
+    # salt in range, and only head terms (df > thresh) are split
+    assert ((seg["salt"] >= 0) & (seg["salt"] < 4)).all()
+    split = set(seg.loc[seg["salt"] != 0, "term"])
+    assert split and all(df[t] > thresh for t in split)
+    assert (seg["term"] == "the").sum() == 4  # Zipf head of the fixture vocab
+    # salt is doc_id % n_salts -> each (term, doc) lands in exactly one slice
+    assert seg.groupby("term")["n"].sum().to_dict() == df
 
 
 def test_latest_per_url_and_doc_ids(spark):

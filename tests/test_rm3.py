@@ -2,6 +2,7 @@
 oracle implementing the pinned spec, plus ad-hoc vs index-path parity."""
 
 import math
+import uuid
 from collections import Counter
 
 import pytest
@@ -157,6 +158,42 @@ def test_index_path_matches_adhoc(spark, fixtures, tmp_path):
     si = {(x["claim_id"], x["doc_id"]): x["score"] for x in idx}
     for kk, v in sa.items():
         assert si[kk] == pytest.approx(v, rel=1e-12)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_path_runs_first_pass_once(spark, fixtures, tmp_path):
+    """query_rm3 checkpoints the relevance-model weights while planning, so
+    the action runs only the second pass: fewer jobs than the planning that
+    evaluated the first pass, and the same rows on a second call."""
+    from defactonlp_spark.plans.build import IndexBuild, IndexReader
+    from defactonlp_spark.plans.query import query_rm3
+
+    docs, claims, *_ = fixtures
+    cfg = EngineConfig(n_buckets=4)
+    IndexBuild(str(tmp_path / "idx"), cfg, build_id="j").run(
+        spark, docs, input_snapshot="j"
+    )
+    r = IndexReader(spark, str(tmp_path / "idx"))
+    run = lambda: query_rm3(
+        r, claims, k=K, fb_docs=FB_DOCS, fb_terms=FB_TERMS, alpha=ALPHA,
+        cfg=cfg, rank_dp=9,
+    )
+    res, plan_jobs = _jobs(spark, run)
+    rows, action_jobs = _jobs(spark, res.collect)
+    assert action_jobs < plan_jobs, (plan_jobs, action_jobs)
+    key = lambda rows: sorted((x["claim_id"], x["rank"], x["doc_id"], x["score"]) for x in rows)
+    assert key(rows) == key(run().collect())
 
 
 def test_expand_synonyms(spark, fixtures):

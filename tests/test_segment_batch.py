@@ -3,6 +3,8 @@ every field of every slice must match byte for byte — at block-size
 edges, for salted runs, for fused doc ids (>= 2^40), and through Spark
 with runs that straddle Arrow batches."""
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -105,17 +107,22 @@ def test_encode_segments_straddling_batches_matches_oracle(spark):
         for d in np.sort(rng.choice(5_000, size=n, replace=False)):
             rows.append((f"t{t:02d}", int(d), int(rng.integers(1, 9)), int(rng.integers(5, 900))))
     pdf = pd.DataFrame(rows, columns=["term", "doc_id", "tf", "dl"])
-    pdf["salt"] = np.where(pdf["term"].isin(["t03", "t07"]), pdf["doc_id"] % 2, 0).astype(np.int32)
     stats = pdf.groupby("term").size().rename("df").reset_index()
+    # encode_segments salts the 130-posting terms (df > 50) into 2 sub-lists
+    cfg = replace(CFG, n_salts=2, salt_df_ratio=0.001)
+    head = pdf.groupby("term")["doc_id"].transform("size") > max(int(N_DOCS * 0.001), 1)
+    pdf["salt"] = np.where(head, pdf["doc_id"] % 2, 0).astype(np.int32)
+    assert head.any() and not head.all()
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
         seg = encode_segments(
-            spark.createDataFrame(pdf, "term string, doc_id long, tf int, dl int, salt int"),
+            spark.createDataFrame(pdf[["term", "doc_id", "tf", "dl"]],
+                                  "term string, doc_id long, tf int, dl int"),
             spark.createDataFrame(stats, "term string, df long"),
-            N_DOCS, AVGDL, CFG, n_partitions=3,
+            N_DOCS, AVGDL, cfg, n_partitions=3,
         ).toPandas()
     finally:
         spark.conf.set(key, prev)

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.bm25 import claim_terms
-from defactonlp_spark.operators.postings import salt_plan, with_salt
 from defactonlp_spark.operators.sharding import (
     encode_sharded_segments,
     wand_topk_sharded,
@@ -62,8 +61,7 @@ def test_group_membership_does_not_change_results(spark, reader, claims_pdf):
 
     postings = reader.postings()
     stats = reader.term_stats().select("term", "df")
-    salted = with_salt(postings, salt_plan(stats, reader.n_docs, CFG))
-    seg = encode_sharded_segments(salted, stats, reader.n_docs, reader.avgdl, CFG, 3, 8)
+    seg = encode_sharded_segments(postings, stats, reader.n_docs, reader.avgdl, CFG, 3, 8)
     sharded = _sorted(wand_topk_sharded(
         seg, claim_terms(claims), reader.n_docs, reader.avgdl, 3, k=K, cfg=CFG
     ))

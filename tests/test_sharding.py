@@ -12,9 +12,7 @@ from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.postings import (
     build_postings,
     corpus_stats,
-    salt_plan,
     term_stats,
-    with_salt,
 )
 from defactonlp_spark.operators.sharding import (
     encode_sharded_segments,
@@ -38,16 +36,15 @@ def corpus_bits(spark):
     row = corpus_stats(p).collect()[0]
     n_docs, avgdl = int(row["n_docs"]), float(row["avgdl"])
     stats = term_stats(p)
-    salted = with_salt(p, salt_plan(stats, n_docs, cfg))
     claims = spark.createDataFrame(gen_claims(n=40)[["claim_id", "claim"]])
     from defactonlp_spark.operators.bm25 import claim_terms
 
     qt = claim_terms(claims).persist()
     base = wand_topk(
-        encode_segments(salted, stats, n_docs, avgdl, cfg, 8),
+        encode_segments(p, stats, n_docs, avgdl, cfg, 8),
         qt, n_docs, avgdl, k=K, cfg=cfg,
     ).toPandas()
-    return salted, stats, n_docs, avgdl, cfg, qt, base
+    return p, stats, n_docs, avgdl, cfg, qt, base
 
 
 def _by_claim(pdf):
@@ -59,8 +56,8 @@ def _by_claim(pdf):
 
 @pytest.mark.parametrize("n_shards", [1, 4])
 def test_sharded_bitexact_vs_unsharded(spark, corpus_bits, n_shards):
-    salted, stats, n_docs, avgdl, cfg, qt, base = corpus_bits
-    seg = encode_sharded_segments(salted, stats, n_docs, avgdl, cfg, n_shards, 8)
+    postings, stats, n_docs, avgdl, cfg, qt, base = corpus_bits
+    seg = encode_sharded_segments(postings, stats, n_docs, avgdl, cfg, n_shards, 8)
     got = wand_topk_sharded(seg, qt, n_docs, avgdl, n_shards, k=K, cfg=cfg).toPandas()
     b, g = _by_claim(base), _by_claim(got)
     assert set(b) == set(g)
@@ -79,8 +76,8 @@ def test_shard_column_partitions_docs(spark, corpus_bits):
     the unsharded postings exactly."""
     from defactonlp_spark.plans.query import decode_segments
 
-    salted, stats, n_docs, avgdl, cfg, _, _ = corpus_bits
-    seg = encode_sharded_segments(salted, stats, n_docs, avgdl, cfg, 4, 8).persist()
+    postings, stats, n_docs, avgdl, cfg, _, _ = corpus_bits
+    seg = encode_sharded_segments(postings, stats, n_docs, avgdl, cfg, 4, 8).persist()
     assert sorted(r["shard"] for r in seg.select("shard").distinct().collect()) == [0, 1, 2, 3]
     total = 0
     for s in range(4):
@@ -89,7 +86,7 @@ def test_shard_column_partitions_docs(spark, corpus_bits):
         assert bad == 0, f"shard {s} holds foreign docs"
         total += dec.count()
     plain = decode_segments(
-        encode_segments(salted, stats, n_docs, avgdl, cfg, 8)
+        encode_segments(postings, stats, n_docs, avgdl, cfg, 8)
     ).count()
     assert total == plain
     seg.unpersist()
@@ -99,15 +96,15 @@ def test_sharded_with_deletes_masks(spark, corpus_bits):
     """Tombstones compose with the fan-out: deleted docs appear in no
     shard's local top-k, and the merged list re-fills from live docs with
     scores identical to unsharded masked serving."""
-    salted, stats, n_docs, avgdl, cfg, qt, base = corpus_bits
-    seg = encode_sharded_segments(salted, stats, n_docs, avgdl, cfg, 3, 8)
+    postings, stats, n_docs, avgdl, cfg, qt, base = corpus_bits
+    seg = encode_sharded_segments(postings, stats, n_docs, avgdl, cfg, 3, 8)
     dead = np.array(sorted({d for v in _by_claim(base).values() for d, _ in v[:1]}),
                     dtype=np.int64)
     got = wand_topk_sharded(
         seg, qt, n_docs, avgdl, 3, k=K, cfg=cfg, deletes=dead
     ).toPandas()
     ref = wand_topk(
-        encode_segments(salted, stats, n_docs, avgdl, cfg, 8),
+        encode_segments(postings, stats, n_docs, avgdl, cfg, 8),
         qt, n_docs, avgdl, k=K, cfg=cfg, deletes=dead,
     ).toPandas()
     assert not set(got["doc_id"]).intersection(set(dead.tolist()))

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from defactonlp_spark.config import EngineConfig
-from defactonlp_spark.operators.postings import build_postings, corpus_stats, salt_plan, term_stats, with_salt
+from defactonlp_spark.operators.postings import build_postings, corpus_stats, term_stats
 from defactonlp_spark.operators.segments import encode_segments, merge_segments
 from defactonlp_spark.plans.query import decode_segments
 from defactonlp_spark.sources.tableio import LocalTable
@@ -103,9 +103,7 @@ def test_compaction_equals_batch_build(spark, dirs):
     merged = merge_segments(generations, n_docs, avgdl, CFG)
 
     stats = term_stats(postings)
-    single = encode_segments(
-        with_salt(postings, salt_plan(stats, n_docs, CFG)), stats, n_docs, avgdl, CFG, 4
-    )
+    single = encode_segments(postings, stats, n_docs, avgdl, CFG, 4)
     # posting-for-posting equality after decode (segment row layout may group
     # salts differently between the two paths; the decoded postings must not)
     a = decode_segments(merged)
