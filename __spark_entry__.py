@@ -784,26 +784,6 @@ def _segments_cached(spark, sf_dir):
     return _MEMO[key]
 
 
-def _sharded_segments_cached(spark, sf_dir):
-    """Doc-sharded segment table (N_SHARDS doc shards x 8 term buckets),
-    encoded once per session — the fan-out serving deployment's stored
-    index (operators/sharding.py). Global stats shared with the unsharded
-    fixture's build inputs."""
-    key = (spark, "sharded_segments", sf_dir)
-    if key not in _MEMO:
-        from defactonlp_spark.config import EngineConfig
-        from defactonlp_spark.operators.postings import term_stats
-        from defactonlp_spark.operators.sharding import encode_sharded_segments
-
-        cfg = EngineConfig(n_buckets=8)
-        p = _postings_cached(spark, sf_dir)
-        n_docs, avgdl = _engine_corpus_stats(p)
-        stats = term_stats(p)
-        seg = encode_sharded_segments(p, stats, n_docs, avgdl, cfg, N_SHARDS, 8).persist()
-        _MEMO[key] = (seg, n_docs, avgdl, cfg)
-    return _MEMO[key]
-
-
 # --------------------------------------------------------------------------
 # queries
 # --------------------------------------------------------------------------
@@ -872,24 +852,6 @@ def q_bm25_topk_wand(spark, sf_dir):
 
     seg, n_docs, avgdl, cfg = _segments_cached(spark, sf_dir)
     res = wand_topk(seg, claim_terms(_claims_df(spark)), n_docs, avgdl, k=TOPK, cfg=cfg)
-    return res.select("claim_id", "doc_id", F.round("score", 4).alias("score"))
-
-
-N_SHARDS = 4
-
-
-def q_bm25_topk_sharded(spark, sf_dir):
-    """Doc-sharded fan-out/merge serving (operators/sharding.py) — the
-    1000-executor topology: shard-local block-max WAND top-k with GLOBAL
-    stats, merged to the exact global top-k. Same oracle as bm25_topk:
-    the driver checks the fan-out is rank-and-score invisible."""
-    from defactonlp_spark.operators.bm25 import claim_terms
-    from defactonlp_spark.operators.sharding import wand_topk_sharded
-
-    seg, n_docs, avgdl, cfg = _sharded_segments_cached(spark, sf_dir)
-    res = wand_topk_sharded(
-        seg, claim_terms(_claims_df(spark)), n_docs, avgdl, N_SHARDS, k=TOPK, cfg=cfg
-    )
     return res.select("claim_id", "doc_id", F.round("score", 4).alias("score"))
 
 
@@ -4232,16 +4194,22 @@ def q_matrix_stats(spark, sf_dir):
     partials in one shuffle (operators/analytics.py::matrix_stats)."""
     from defactonlp_spark.operators.analytics import matrix_stats
 
+    # the three fields carry 2 decimals: fed as round(x * 100) longs, every
+    # partial is an integer-valued double sum below 2^53, exact in any
+    # partition order; means scale back by 100, covariance by 10^4, and
+    # correlation does not depend on scale
+    fields = ["l_quantity", "l_discount", "l_tax"]
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    res = matrix_stats(li, ["l_returnflag"], ["l_quantity", "l_discount", "l_tax"])
+    cents = li.select("l_returnflag", *[F.round(F.col(f) * 100).cast("long").alias(f) for f in fields])
+    res = matrix_stats(cents, ["l_returnflag"], fields)
     return res.select(
         "l_returnflag",
         "field_x",
         "field_y",
         "count",
-        F.round("mean_x", 6).alias("mean_x"),
-        F.round("mean_y", 6).alias("mean_y"),
-        F.round("covariance", 6).alias("covariance"),
+        F.round(F.col("mean_x") / 100, 6).alias("mean_x"),
+        F.round(F.col("mean_y") / 100, 6).alias("mean_y"),
+        F.round(F.col("covariance") / 10000, 6).alias("covariance"),
         F.round("correlation", 6).alias("correlation"),
     )
 
@@ -4605,7 +4573,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # continuation waves that landed past the r04 window — the exact list is
 # scripts/window_audit.py output, mirrored in VERDICT.md r4 "Next round"
 # #1) are promoted to the front, plus 16 already-green core canaries
-# (one per pipeline family: exhaustive/WAND/sharded BM25, merge, phrase,
+# (one per pipeline family: exhaustive/WAND BM25, merge, phrase,
 # DrQA, sentence, RTE, FEVER submission, dedup/minhash/training funnel,
 # TPC-H, cosine, corpus stats, term totals) so the driver re-verifies the
 # spine every round.  CORRECTNESS_r05 ∪ r01..r04 then covers all 157
@@ -4673,7 +4641,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_explain": q_bm25_explain,
         "facet_top_hits": q_facet_top_hits,
         # -- round-4 additions (must land in the 50-entry driver window) --
-        "bm25_topk_sharded": q_bm25_topk_sharded,
         "wildcard_topk": q_wildcard_topk,
         "decontaminate_spans": q_decontaminate_spans,
         "span_near_topk": q_span_near_topk,
@@ -6781,10 +6748,6 @@ SELECT method, n_pred, n_truth, tp,
 FROM ev
 """
     d["bm25_topk_fuzzy_symspell"] = d["bm25_topk_fuzzy"]
-    # sharded fan-out/merge is rank-and-score identical to exhaustive BM25
-    # (sharding.py module docstring has the exactness argument) — sharing
-    # the oracle makes the driver CHECK that claim every round.
-    d["bm25_topk_sharded"] = d["bm25_topk"]
     wildcard_vals = ", ".join(f"({i}, '{c}')" for i, c in WILDCARD_CLAIMS)
     d["wildcard_topk"] = f"""
 WITH toks AS ({toks}),
@@ -7630,14 +7593,14 @@ FROM events e CROSS JOIN (VALUES {_PCT_VALS}) AS v(value)
 GROUP BY 1, 2
 """
     # matrix_stats: identities mirrored with explicit association
-    # (cov = sxy/n - (sx/n)*(sy/n)); fields chosen small-magnitude
-    # (quantity/discount/tax) so order-dependent double summation stays far
-    # inside the 6dp rounding
+    # (cov = sxy/n - (sx/n)*(sy/n)) over the entry's round(x * 100) longs,
+    # so every partial is an exact integer-valued sum; means scale back by
+    # 100 and covariance by 10^4 after the identity, as in the entry
     _MS_PAIRS = [("l_quantity", "l_discount"), ("l_quantity", "l_tax"), ("l_discount", "l_tax")]
     _ms_sel = " UNION ALL ".join(
         f"""SELECT l_returnflag, '{a}' AS field_x, '{b}' AS field_y, n::BIGINT AS count,
-  round(s_{a} / n, 6) AS mean_x, round(s_{b} / n, 6) AS mean_y,
-  round(sx_{a}_{b} / n - (s_{a} / n) * (s_{b} / n), 6) AS covariance,
+  round((s_{a} / n) / 100::DOUBLE, 6) AS mean_x, round((s_{b} / n) / 100::DOUBLE, 6) AS mean_y,
+  round((sx_{a}_{b} / n - (s_{a} / n) * (s_{b} / n)) / 10000::DOUBLE, 6) AS covariance,
   round((sx_{a}_{b} / n - (s_{a} / n) * (s_{b} / n))
         / sqrt((ss_{a} / n - (s_{a} / n) * (s_{a} / n))
                * (ss_{b} / n - (s_{b} / n) * (s_{b} / n))), 6) AS correlation
@@ -7656,7 +7619,9 @@ WITH agg AS (
          sum(l_quantity::DOUBLE * l_discount::DOUBLE) AS sx_l_quantity_l_discount,
          sum(l_quantity::DOUBLE * l_tax::DOUBLE) AS sx_l_quantity_l_tax,
          sum(l_discount::DOUBLE * l_tax::DOUBLE) AS sx_l_discount_l_tax
-  FROM lineitem GROUP BY 1
+  FROM (SELECT l_returnflag, round(l_quantity * 100)::BIGINT AS l_quantity,
+               round(l_discount * 100)::BIGINT AS l_discount,
+               round(l_tax * 100)::BIGINT AS l_tax FROM lineitem) GROUP BY 1
 )
 {_ms_sel}
 """

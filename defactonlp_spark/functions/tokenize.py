@@ -177,25 +177,23 @@ def tokenize_postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
 
 def tokenize_postings_html(
     df: DataFrame,
-    id_col: str = "doc_id",
     html_col: str = "html",
-    assign_ids: bool = False,
-    pid_col: str = "_pid",
     id_offset: int = 0,
 ) -> DataFrame:
-    """pages(doc_id|_pid, html, ...) -> postings_long: FUSED extract +
-    tokenize (+ optional doc-id assignment) in ONE mapInPandas stage.
+    """pages(_pid, html, ...) -> postings_long: FUSED extract + tokenize +
+    doc-id assignment in ONE mapInPandas stage.
 
     The B1 extractor is the same ``extract_text_one`` scalar the golden-byte
     tests pin, so the byte-identical contract is untouched.
 
-    ``assign_ids=True`` is the scale path's id assignment (SURVEY.md §3.1):
-    input must be hash-partitioned by url with a PINNED partition count and
-    sorted by url within partitions (see plans.build.prepare_webpages_fused);
-    the kernel then assigns ``doc_id = id_offset + pid * 2^40 +
-    rank_within_partition`` as a running counter over the sorted iterator —
-    bit-identical to ``assign_doc_ids(strategy="partitioned")``'s window,
-    with ZERO extra shuffles and no AQE interference.
+    Ids are the scale path's assignment (SURVEY.md §3.1): input must be
+    hash-partitioned by url with a PINNED partition count, carry the
+    partition id as ``_pid`` and be sorted by url within partitions (see
+    plans.build.prepare_webpages_fused); the kernel then assigns ``doc_id =
+    id_offset + pid * 2^40 + rank_within_partition`` as a running counter
+    over the sorted iterator — bit-identical to
+    ``assign_doc_ids(strategy="partitioned")``'s window, with ZERO extra
+    shuffles and no AQE interference.
 
     ``id_offset`` makes segment GENERATIONS id-disjoint: an incremental
     append build passes ``generation * 2^50`` (pids stay < 2^10 at 256-1024
@@ -215,25 +213,15 @@ def tokenize_postings_html(
     size."""
     from defactonlp_spark.functions.extract import extract_text_one
 
-    if not assign_ids:
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                texts = pdf[html_col].map(extract_text_one)
-                fused = pd.DataFrame({id_col: pdf[id_col], "text": texts})
-                yield _batch_postings(fused, id_col, "text")
-
-        return df.select(id_col, html_col).mapInPandas(gen, schema=POSTINGS_SCHEMA)
-
-    def gen_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         next_rank = 1  # row_number() is 1-based; parity with the window path
         for pdf in batches:
             texts = pdf[html_col].map(extract_text_one)
-            ids = id_offset + pdf[pid_col].to_numpy("int64") * (1 << 40) + np.arange(
+            ids = id_offset + pdf["_pid"].to_numpy("int64") * (1 << 40) + np.arange(
                 next_rank, next_rank + len(pdf), dtype="int64"
             )
             next_rank += len(pdf)
             fused = pd.DataFrame({"doc_id": ids, "text": texts})
             yield _batch_postings(fused, "doc_id", "text")
 
-    return df.select(pid_col, html_col).mapInPandas(gen_ids, schema=POSTINGS_SCHEMA)
+    return df.select("_pid", html_col).mapInPandas(gen, schema=POSTINGS_SCHEMA)

@@ -22,9 +22,8 @@ Physical layout (one segment row per (term, salt) slice):
 
 :func:`encode_segments` takes plain postings (term, doc_id, tf, dl): ONE
 broadcast join brings each term's full df, and the salt is computed from it
-(head terms split into ``n_salts`` sub-lists; sharded builds fold the doc
-shard into the same column), so no caller plans salting. Encode runs inside
-``mapInArrow`` AFTER ``repartitionByRange(term, salt)`` +
+(head terms split into ``n_salts`` sub-lists), so no caller plans salting.
+Encode runs inside ``mapInArrow`` AFTER ``repartitionByRange(term, salt)`` +
 ``sortWithinPartitions(term, salt, doc_id)`` — the exact physical plan the
 north star mandates. The kernel is a streaming group-by over the sorted
 Arrow batches: every complete (term, salt) run of a batch is encoded by ONE
@@ -252,7 +251,6 @@ def encode_segments(
     avgdl: float,
     cfg: EngineConfig,
     n_partitions: int | None = None,
-    n_shards: int = 1,
 ) -> DataFrame:
     """postings_long(term, doc_id, tf, dl) -> segment rows.
 
@@ -264,9 +262,7 @@ def encode_segments(
     Head-term salting happens here, off the joined df, so callers pass
     plain postings: a term with df > max(n_docs * salt_df_ratio, 1) splits
     into ``cfg.n_salts`` sub-lists by ``doc_id % n_salts``; every other term
-    keeps salt 0 (SURVEY.md §2.B3 / BASELINE.json skew mandate). With
-    ``n_shards`` > 1 the doc shard folds into the same column, ``salt *
-    n_shards + pmod(doc_id, n_shards)`` (operators/sharding.py).
+    keeps salt 0 (SURVEY.md §2.B3 / BASELINE.json skew mandate).
 
     Each Arrow batch is encoded whole: every complete (term, salt) run in it
     goes through one :func:`encode_runs` call and leaves as one record
@@ -275,13 +271,9 @@ def encode_segments(
     last run of a batch may continue into the next one; it is carried over
     and encoded with that batch.
     """
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     P = n_partitions or cfg.n_buckets
     thresh = max(int(n_docs * cfg.salt_df_ratio), 1)
     salt = F.when(F.col("df") > thresh, F.col("doc_id") % cfg.n_salts).otherwise(0)
-    if n_shards > 1:
-        salt = salt * n_shards + F.pmod(F.col("doc_id"), F.lit(n_shards))
     joined = (
         postings.select("term", "doc_id", "tf", "dl")
         .join(F.broadcast(stats_df.select("term", "df")), "term", "inner")

@@ -52,7 +52,6 @@ from pyspark.sql import types as T
 
 from defactonlp_spark.config import BM25Params, EngineConfig
 from defactonlp_spark.functions.varbyte import vb_decode
-from defactonlp_spark.operators.bm25 import topk
 from defactonlp_spark.operators.segments import bm25_contrib, idf
 
 RESULTS_SCHEMA = T.StructType(
@@ -523,7 +522,6 @@ def wand_topk(
     cfg: EngineConfig = EngineConfig(),
     boundaries: list[str] | None = None,
     deletes: np.ndarray | None = None,
-    n_shards: int | None = None,
 ) -> DataFrame:
     """segments x (claim_id, term) -> results(claim_id, rank, doc_id, score).
 
@@ -595,7 +593,9 @@ def wand_topk(
        the pruned scan with its shuffle write, then the kernel stage. Per
        claim the planner picks the vectorized dense kernel or lazy
        block-max WAND by candidate volume; both are bit-identical
-       (tests/test_topk_parity.py).
+       (tests/test_topk_parity.py). A claim's group holds every slice of
+       its terms, so its kernel emits its final top-k: the kernel stage is
+       the result, with no merge window after it.
     """
     spark = segments.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -664,15 +664,6 @@ def wand_topk(
     else:
         joined = hits.join(group_terms, "term", "inner")
 
-    # -- sharded fan-out (operators/sharding.py): the shard folds into the
-    # kernel group, so each (group, shard) kernel computes a LOCAL top-k
-    # over its shard's slices with GLOBAL stats; a window over the claims x
-    # shards x k local winners keeps the global k, with the kernels' exact
-    # tie-break (score desc, doc_id asc) — so the result is rank-and-score
-    # identical to the unsharded path.
-    if n_shards is not None:
-        joined = joined.withColumn("grp", F.col("grp") * n_shards + F.col("shard"))
-
     params, bs, dense_thresh = cfg.bm25, cfg.block_size, cfg.dense_eval_threshold
 
     # -- 4. one-sided kernel: the claims arrive with the slices, as data ----
@@ -687,10 +678,7 @@ def wand_topk(
             deletes=deletes,
         )
 
-    local = (
+    return (
         joined.repartitionById(par, "grp").groupBy("grp")
         .applyInPandas(per_group_fn, schema=RESULTS_SCHEMA)
     )
-    if n_shards is None:
-        return local
-    return topk(local, k, None)

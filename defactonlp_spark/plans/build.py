@@ -222,9 +222,8 @@ def prepare_webpages_fused(pages: DataFrame, n_parts: int = 256) -> DataFrame:
     (the agg's required distribution is satisfied by the repartition, so
     Catalyst inserts NO second exchange — verified in the physical plan)
     -> _pid capture -> sort by url within partitions. IndexBuild feeds this
-    to tokenize_postings_html(assign_ids=True), which assigns
-    doc_id = _pid * 2^40 + rank, bit-identical to
-    assign_doc_ids(strategy="partitioned").
+    to tokenize_postings_html, which assigns doc_id = _pid * 2^40 + rank,
+    bit-identical to assign_doc_ids(strategy="partitioned").
 
     vs prepare_webpages + build_postings (two corpus shuffles, and the
     window's exchange is AQE-coalescible — measured 9-wide on the 320k
@@ -381,9 +380,7 @@ class IndexBuild:
             else:
                 from defactonlp_spark.functions.tokenize import tokenize_postings_html
 
-                pl = tokenize_postings_html(
-                    corpus, assign_ids=True, id_offset=self.id_offset
-                )
+                pl = tokenize_postings_html(corpus, id_offset=self.id_offset)
             pl.write.mode("overwrite").parquet(self.postings_dir)
         _mark("tokenize_postings", ts, bs)
         postings = spark.read.parquet(self.postings_dir)

@@ -63,7 +63,7 @@ def main(cores: int) -> None:
         mark("plan_prepare", t0, b0)
 
         t0, b0 = time.time(), _busy()
-        tokenize_postings_html(corpus, assign_ids=True).write.mode("overwrite").parquet(ib.postings_dir)
+        tokenize_postings_html(corpus).write.mode("overwrite").parquet(ib.postings_dir)
         mark("postings_write", t0, b0)
 
         postings = spark.read.parquet(ib.postings_dir)

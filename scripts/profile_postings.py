@@ -75,7 +75,7 @@ def main(cores: int, substage: str) -> None:
         elif substage == "fused":
             from defactonlp_spark.functions.tokenize import tokenize_postings_html
             from defactonlp_spark.plans.build import prepare_webpages_fused
-            df = tokenize_postings_html(prepare_webpages_fused(pages), assign_ids=True)
+            df = tokenize_postings_html(prepare_webpages_fused(pages))
         else:
             df = P.build_postings(prepare_webpages(pages, id_strategy="partitioned"))
         if substage in ("all", "fused"):

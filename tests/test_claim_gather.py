@@ -18,9 +18,8 @@ Pinned here:
    ``query_exhaustive`` of a local batch; tombstones add none;
 2. the literal form, the join form with an ``IN``-list scan and the join
    form with the term semi-join return bit-identical rows through
-   ``query_wand``, warm ``topk`` and ``wand_topk_sharded`` — tombstones,
-   OOV and all-OOV batches, duplicate claim ids and non-ASCII text
-   included;
+   ``query_wand`` and warm ``topk`` — tombstones, OOV and all-OOV
+   batches, duplicate claim ids and non-ASCII text included;
 3. terms holding quotes, a backslash, a newline and non-ASCII letters
    survive the literal's escaping;
 4. a local batch past ``CLAIM_MAP_MAX_PAIRS`` takes the join form, with the
@@ -41,7 +40,6 @@ from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.bm25 import claim_terms
 from defactonlp_spark.operators.postings import term_stats
 from defactonlp_spark.operators.segments import encode_segments
-from defactonlp_spark.operators.sharding import encode_sharded_segments, wand_topk_sharded
 from defactonlp_spark.operators import wand
 from defactonlp_spark.operators.wand import wand_topk
 from defactonlp_spark.plans.build import IndexBuild, IndexReader, delete_docs, prepare_webpages
@@ -180,14 +178,9 @@ def test_tombstones_add_no_jobs(spark, readers):
     assert n_jobs["dead"] <= n_jobs["clean"]
 
 
-@pytest.mark.parametrize("path", ["query_wand", "warm_topk", "sharded"])
+@pytest.mark.parametrize("path", ["query_wand", "warm_topk"])
 def test_literal_and_join_forms_return_identical_rows(spark, readers, path):
     _, reader = readers
-    if path == "sharded":
-        stats = reader.term_stats().select("term", "df")
-        sharded = encode_sharded_segments(
-            reader.postings(), stats, reader.n_docs, reader.avgdl, CFG, 3, 8
-        ).persist()
     deletes = reader.deletes_array()
     mixed = list(gen_claims(n=40)[["claim_id", "claim"]].itertuples(index=False, name=None)) + EXTRA
     for rows in (mixed, ALL_OOV):
@@ -197,15 +190,10 @@ def test_literal_and_join_forms_return_identical_rows(spark, readers, path):
             assert claims.isLocal()
             if path == "query_wand":
                 res = query_wand(reader, claims, k=K, cfg=cfg)
-            elif path == "warm_topk":
+            else:
                 session = ServingSession(reader, cfg)
                 session.warm()
                 res = session.topk(claims, k=K)
-            else:
-                res = wand_topk_sharded(
-                    sharded, claim_terms(claims), reader.n_docs, reader.avgdl, 3,
-                    k=K, cfg=cfg, deletes=deletes,
-                )
             plan = _plan(res)
             if rows is mixed:
                 assert _literal_form(plan) == (form == "literal"), form
@@ -221,8 +209,6 @@ def test_literal_and_join_forms_return_identical_rows(spark, readers, path):
             assert base.empty
         for form, df in got.items():
             pd.testing.assert_frame_equal(df, base, check_exact=True, obj=f"{path} {form}")
-    if path == "sharded":
-        sharded.unpersist()
 
 
 #: terms no tokenizer emits: every character the literal must escape

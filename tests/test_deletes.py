@@ -57,7 +57,7 @@ def _build(spark, tmp_path, name="idx", n=300, seed=11):
         spark, corpus, input_snapshot=name
     )
     # the oracle's postings: same fused id assignment as the build
-    pl = tokenize_postings_html(corpus, assign_ids=True)
+    pl = tokenize_postings_html(corpus)
     return d, props, pl
 
 

@@ -10,9 +10,8 @@ cogroup kernel query runs as Spark jobs. Pinned here:
    ``ServingSession.topk`` batch;
 2. the same claims given as a local batch, a tuple-built frame, a parquet
    read or a pandas frame in a session with Arrow off return bit-identical
-   rows through ``query_wand``, warm ``topk`` and ``wand_topk_sharded`` —
-   OOV tokens, an all-OOV batch, duplicate claim ids, empty claims and
-   non-ASCII text included;
+   rows through ``query_wand`` and warm ``topk`` — OOV tokens, an all-OOV
+   batch, duplicate claim ids, empty claims and non-ASCII text included;
 3. the driver tokenizer and the ``mapInPandas`` tokenizer emit the same
    (claim_id, term) pairs under NFD and casefolding.
 """
@@ -25,7 +24,6 @@ import pytest
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.functions.tokenize import tokenize_one
 from defactonlp_spark.operators.bm25 import claim_terms
-from defactonlp_spark.operators.sharding import encode_sharded_segments, wand_topk_sharded
 from defactonlp_spark.operators.wand import RESULTS_SCHEMA
 from defactonlp_spark.plans.build import IndexBuild, IndexReader, prepare_webpages
 from defactonlp_spark.plans.query import ServingSession, query_wand
@@ -89,12 +87,6 @@ def session(reader):
     s.close()
 
 
-@pytest.fixture(scope="module")
-def sharded(reader):
-    stats = reader.term_stats().select("term", "df")
-    return encode_sharded_segments(reader.postings(), stats, reader.n_docs, reader.avgdl, CFG, 3, 8)
-
-
 def _pdf(rows) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["claim_id", "claim"])
 
@@ -114,14 +106,10 @@ def _forms(spark, rows, tmp_path) -> dict:
     return forms
 
 
-def _serve(path, reader, session, sharded, claims):
+def _serve(path, reader, session, claims):
     if path == "query_wand":
         return query_wand(reader, claims, k=K, cfg=CFG)
-    if path == "warm_topk":
-        return session.topk(claims, k=K)
-    return wand_topk_sharded(
-        sharded, claim_terms(claims), reader.n_docs, reader.avgdl, 3, k=K, cfg=CFG
-    )
+    return session.topk(claims, k=K)
 
 
 def _rows(df) -> pd.DataFrame:
@@ -159,14 +147,14 @@ def test_warm_topk_local_batch_runs_at_most_4_jobs(spark, session):
     assert n_jobs <= 4
 
 
-@pytest.mark.parametrize("path", ["query_wand", "warm_topk", "sharded"])
+@pytest.mark.parametrize("path", ["query_wand", "warm_topk"])
 def test_local_and_distributed_batches_return_identical_rows(
-    spark, reader, session, sharded, tmp_path, path
+    spark, reader, session, tmp_path, path
 ):
     rows = list(gen_claims(n=40)[["claim_id", "claim"]].itertuples(index=False, name=None))
     rows += EXTRA
     got = {
-        form: _rows(_serve(path, reader, session, sharded, claims))
+        form: _rows(_serve(path, reader, session, claims))
         for form, claims in _forms(spark, rows, tmp_path).items()
     }
     base = got.pop("local")
@@ -179,13 +167,13 @@ def test_local_and_distributed_batches_return_identical_rows(
     try:
         claims = spark.createDataFrame(_pdf(rows))
         assert not claims.isLocal()
-        no_arrow = _rows(_serve(path, reader, session, sharded, claims))
+        no_arrow = _rows(_serve(path, reader, session, claims))
     finally:
         spark.conf.set(ARROW, "true")
     pd.testing.assert_frame_equal(no_arrow, base, check_exact=True, obj="arrow off")
 
     for form, claims in _forms(spark, ALL_OOV, tmp_path).items():
-        res = _serve(path, reader, session, sharded, claims)
+        res = _serve(path, reader, session, claims)
         assert [(f.name, f.dataType) for f in res.schema] == [
             (f.name, f.dataType) for f in RESULTS_SCHEMA
         ], form

@@ -119,9 +119,9 @@ def test_merge_builds_two_generations(spark, tmp_path):
     from defactonlp_spark.functions.tokenize import tokenize_postings_html
 
     pl = tokenize_postings_html(
-        prepare_webpages_fused(pages_a, n_parts=8), assign_ids=True, id_offset=0
+        prepare_webpages_fused(pages_a, n_parts=8), id_offset=0
     ).unionByName(tokenize_postings_html(
-        prepare_webpages_fused(pages_b, n_parts=8), assign_ids=True, id_offset=OFF
+        prepare_webpages_fused(pages_b, n_parts=8), id_offset=OFF
     ))
     stats = pl.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     oracle = score_exhaustive(

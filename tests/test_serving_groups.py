@@ -4,9 +4,8 @@ Claims hash into about one kernel group per core, capped at
 ``EngineConfig.serve_claims_per_batch`` claims per group. Contracts pinned
 here:
 
-1. Group membership never changes a result: one group per claim, the
-   default grouping and the doc-sharded (group, shard) fan-out return
-   bit-identical frames.
+1. Group membership never changes a result: one group per claim and the
+   default grouping return bit-identical frames.
 2. A batch smaller than the core count leaves some groups (and kernel
    tasks) empty and still matches the exhaustive oracle.
 3. The claim relation is computed once per call: the tokenizer behind
@@ -22,10 +21,6 @@ from pyspark.sql import functions as F
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.bm25 import claim_terms
-from defactonlp_spark.operators.sharding import (
-    encode_sharded_segments,
-    wand_topk_sharded,
-)
 from defactonlp_spark.operators.wand import wand_topk
 from defactonlp_spark.plans.build import IndexBuild, IndexReader, prepare_webpages
 from defactonlp_spark.plans.query import query_exhaustive, query_wand
@@ -59,16 +54,8 @@ def test_group_membership_does_not_change_results(spark, reader, claims_pdf):
     per_claim = _sorted(query_wand(reader, claims, k=K, cfg=replace(CFG, serve_claims_per_batch=1)))
     default = _sorted(query_wand(reader, claims, k=K, cfg=CFG))
 
-    postings = reader.postings()
-    stats = reader.term_stats().select("term", "df")
-    seg = encode_sharded_segments(postings, stats, reader.n_docs, reader.avgdl, CFG, 3, 8)
-    sharded = _sorted(wand_topk_sharded(
-        seg, claim_terms(claims), reader.n_docs, reader.avgdl, 3, k=K, cfg=CFG
-    ))
-
     assert default["claim_id"].nunique() > 40  # most fixture claims match
     pd.testing.assert_frame_equal(per_claim, default, check_exact=True)
-    pd.testing.assert_frame_equal(sharded, default, check_exact=True)
 
 
 def test_small_batch_with_empty_groups_matches_exhaustive(spark, reader, claims_pdf):

@@ -44,29 +44,6 @@ def test_empty_and_null_docs(spark):
     assert set(got["dl"]) == {3}
 
 
-
-def test_fused_html_path_matches_chained(spark):
-    """The fused extract+tokenize stage must produce EXACTLY the postings of
-    extract-then-tokenize (the byte-identical extract contract composed with
-    the pinned tokenizer) — fusion is a physical-plan change only."""
-    from defactonlp_spark.functions.extract import with_extracted_text
-    from defactonlp_spark.functions.tokenize import tokenize_postings_html
-
-    pdf = gen_webpages(n=80, seed=23, dup_frac=0.0)
-    pdf["doc_id"] = range(len(pdf))
-    pages = spark.createDataFrame(pdf[["doc_id", "html"]])
-
-    chained = tokenize_postings(
-        with_extracted_text(pages, "html", "text"), id_col="doc_id"
-    ).toPandas()
-    fused = tokenize_postings_html(pages, id_col="doc_id").toPandas()
-
-    key = ["term", "doc_id"]
-    chained = chained.sort_values(key).reset_index(drop=True)
-    fused = fused.sort_values(key).reset_index(drop=True)
-    assert chained.equals(fused)
-
-
 def test_fused_id_assignment_matches_window_path(spark):
     """prepare_webpages_fused + in-kernel id assignment must reproduce the
     EXACT postings (doc_ids included) of the reference chain
@@ -80,9 +57,7 @@ def test_fused_id_assignment_matches_window_path(spark):
     chained = tokenize_postings(
         prepare_webpages(pages, id_strategy="partitioned")
     ).toPandas()
-    fused = tokenize_postings_html(
-        prepare_webpages_fused(pages), assign_ids=True
-    ).toPandas()
+    fused = tokenize_postings_html(prepare_webpages_fused(pages)).toPandas()
 
     key = ["term", "doc_id"]
     chained = chained.sort_values(key).reset_index(drop=True)
