@@ -143,11 +143,17 @@ def encode_runs(
     if rs.size == 0 or rs[0] != 0 or (lens <= 0).any():
         raise ValueError("encode_runs: runs must tile the arrays, each non-empty")
     # delta gaps restart at every run: its first gap is its absolute doc id
+    # (>= 0); every later gap must be > 0, since a 0 gap is a repeated id
+    # (overlapping compaction generations, or a corpus repeating a doc_id)
     gaps = np.empty(doc.size, dtype=np.int64)
     np.subtract(doc[1:], doc[:-1], out=gaps[1:])
+    gaps[rs] = 1
+    if gaps.min() <= 0 or doc[rs].min() < 0:
+        raise ValueError(
+            "encode_runs: doc ids must strictly ascend within a run and be >= 0 "
+            "(a duplicate doc_id repeats within its term)"
+        )
     gaps[rs] = doc[rs]
-    if gaps.min() < 0:
-        raise ValueError("encode_runs: doc ids must ascend within a run and be >= 0")
     tfs = np.ascontiguousarray(tfs, dtype=np.uint64)
     dls = np.ascontiguousarray(dls, dtype=np.uint64)
 
@@ -356,9 +362,7 @@ def merge_segments(
             dls_l.append(dls)
         ids = np.concatenate(ids_l)
         order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        if ids.size > 1 and (np.diff(ids) == 0).any():
-            raise ValueError(f"merge_segments: duplicate doc_id in term={term!r}")
+        ids = ids[order]  # a doc id in two generations fails encode_runs
         tfs = np.concatenate(tfs_l)[order]
         dls = np.concatenate(dls_l)[order]
         row = {

@@ -556,7 +556,8 @@ def merge_builds(
 
     Corpus stats compose exactly from the generation manifests:
     N = sum(N_g); avgdl = sum(total_tokens_g) / N (no corpus re-scan).
-    Duplicate doc ids across generations fail the merge kernel loudly.
+    Duplicate doc ids across generations fail the encoder loudly
+    (``encode_runs``, which both compaction branches call).
     Lineage: source dirs + their snapshot ids recorded in the manifest.
     The union, re-encode, bucket-partitioned write and manifest commit are
     :func:`compact_generations`, the core this shares with
@@ -645,35 +646,40 @@ def compact_generations(
     avgdl = total_tokens / max(n_docs, 1)
     n_deleted = 0
     live = None
-    if dels is not None:
-        from pyspark.storagelevel import StorageLevel
+    try:
+        if dels is not None:
+            from pyspark.storagelevel import StorageLevel
 
-        from defactonlp_spark.plans.query import decode_segments
+            from defactonlp_spark.plans.query import decode_segments
 
-        # persist the live postings: stats, boundaries, and encode all read them
-        live = (
-            decode_segments(union)
-            .join(F.broadcast(dels), "doc_id", "left_anti")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            # persist the live postings: stats, boundaries, and encode all read them
+            live = (
+                decode_segments(union)
+                .join(F.broadcast(dels), "doc_id", "left_anti")
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            crow = P.corpus_stats(live).collect()[0]
+            n_deleted = n_docs - int(crow["n_docs"])
+            n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
+            total_tokens = int(crow["total_tokens"])
+            stats = P.term_stats(live)
+            merged = encode_segments(live, stats, n_docs, avgdl, cfg, n_partitions=cfg.n_buckets)
+        else:
+            merged = merge_segments(union, n_docs, avgdl, cfg)
+            stats = union.groupBy("term").agg(F.sum("n").alias("df"))
+        n_terms = stats.count()
+        boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
+
+        lineage = {**lineage, "n_deleted": n_deleted}
+        LocalTable(os.path.join(dest_dir, "segments")).overwrite(
+            merged.withColumn("bucket", bucket_expr(boundaries)),
+            properties=lineage,
+            partition_by=["bucket"],
         )
-        crow = P.corpus_stats(live).collect()[0]
-        n_deleted = n_docs - int(crow["n_docs"])
-        n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-        total_tokens = int(crow["total_tokens"])
-        stats = P.term_stats(live)
-        merged = encode_segments(live, stats, n_docs, avgdl, cfg, n_partitions=cfg.n_buckets)
-    else:
-        merged = merge_segments(union, n_docs, avgdl, cfg)
-        stats = union.groupBy("term").agg(F.sum("n").alias("df"))
-    n_terms = stats.count()
-    boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
-
-    lineage = {**lineage, "n_deleted": n_deleted}
-    LocalTable(os.path.join(dest_dir, "segments")).overwrite(
-        merged.withColumn("bucket", bucket_expr(boundaries)),
-        properties=lineage,
-        partition_by=["bucket"],
-    )
+    finally:
+        # a failed compaction must not leave the live postings cached
+        if live is not None:
+            live.unpersist()
     if tokens is not None:
         toks = reduce(lambda a, b: a.unionByName(b),
                       [t.select("doc_id", "pos", "term") for t in tokens])
@@ -687,15 +693,12 @@ def compact_generations(
         LocalTable(os.path.join(dest_dir, "tokens")).overwrite(
             toks, properties=lineage, partition_by=["bucket"]
         )
-    props = write_manifest(
+    return write_manifest(
         spark, dest_dir, build_id, cfg, t0,
         n_docs=n_docs, avgdl=avgdl, total_tokens=total_tokens,
         boundaries=boundaries, has_tokens=tokens is not None,
         extra={**lineage, "n_terms": n_terms},
     )
-    if live is not None:
-        live.unpersist()
-    return props
 
 
 class IndexReader:

@@ -66,12 +66,30 @@ def test_merge_equals_single_shot(spark):
     assert hits > 0
 
 
-def test_merge_rejects_overlapping_docsets(spark):
-    pdf = gen_webpages(n=30, seed=6, dup_frac=0.0)
-    pdf["doc_id"] = range(len(pdf))
-    seg = _segments_for(spark, pdf, 30, 100.0)
+def test_merge_rejects_overlapping_docsets(spark, tmp_path):
+    """Two generations sharing doc ids fail the merge, with or without
+    tombstones (a tombstone routes it through decode -> re-encode), and a
+    failed merge leaves no cached postings behind."""
+    from defactonlp_spark.plans.build import (
+        IndexBuild,
+        delete_docs,
+        merge_builds,
+        prepare_webpages_fused,
+    )
+
+    pages = spark.createDataFrame(gen_webpages(n=30, seed=6, dup_frac=0.0))
+    dirs = [str(tmp_path / g) for g in ("a", "b")]
+    for d in dirs:  # same pages, same id_offset: every doc id repeats
+        IndexBuild(d, CFG, build_id="g", n_groups=1).run(
+            spark, prepare_webpages_fused(pages, n_parts=4), input_snapshot="g")
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(Exception, match="duplicate doc_id"):
-        merge_segments(seg.unionByName(seg), 30, 100.0, CFG).collect()
+        merge_builds(spark, dirs, str(tmp_path / "m"), CFG)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    delete_docs(spark, dirs[1], [-7])  # a tombstone no generation holds
+    with pytest.raises(Exception, match="duplicate doc_id"):
+        merge_builds(spark, dirs, str(tmp_path / "m_del"), CFG)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
 
 
 def test_merge_builds_two_generations(spark, tmp_path):

@@ -95,6 +95,31 @@ def test_guards():
         encode_runs(ids, bad_tf, ones, np.array([0, 3]), np.array([3, 2]), N_DOCS, AVGDL, CFG)
     with pytest.raises(ValueError):
         encode_slice(np.empty(0, dtype=np.int64), [], [], 1, N_DOCS, AVGDL, CFG)
+    # a repeated id inside a run is a 0 gap and is rejected, while a new run
+    # may restart at the previous run's last id; a run may start at id 0 but
+    # not below it
+    dup = np.array([3, 8, 8, 9], dtype=np.int64)
+    four = np.ones(4, dtype=np.int64)
+    encode_runs(dup, four, four, np.array([0, 2]), np.array([2, 2]), N_DOCS, AVGDL, CFG)
+    with pytest.raises(ValueError, match="duplicate doc_id"):
+        encode_runs(dup, four, four, np.array([0]), np.array([4]), N_DOCS, AVGDL, CFG)
+    encode_runs(np.array([0, 1, 0, 5]), four, four, np.array([0, 2]), np.array([2, 2]),
+                N_DOCS, AVGDL, CFG)
+    with pytest.raises(ValueError, match="duplicate doc_id"):
+        encode_runs(np.array([0, 1, -2, 5]), four, four, np.array([0, 2]), np.array([2, 2]),
+                    N_DOCS, AVGDL, CFG)
+
+
+def test_encode_segments_rejects_repeated_corpus_doc_id(spark):
+    """A text corpus repeating a doc_id yields two postings of one doc per
+    shared term: the encode fails instead of writing both."""
+    from defactonlp_spark.operators.postings import build_postings, term_stats
+
+    corpus = spark.createDataFrame([(1, "spark merge"), (2, "merge join"), (1, "merge")],
+                                   "doc_id long, text string")
+    postings = build_postings(corpus)
+    with pytest.raises(Exception, match="duplicate doc_id"):
+        encode_segments(postings, term_stats(postings), 3, 2.0, CFG, n_partitions=2).collect()
 
 
 def test_encode_segments_straddling_batches_matches_oracle(spark):
