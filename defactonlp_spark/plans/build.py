@@ -346,24 +346,14 @@ class IndexBuild:
             "code_version": defactonlp_spark.__version__,
         }
 
-        # per-stage wall + machine busy-CPU (best-effort /proc/stat deltas;
-        # meaningful when the build runs alone, e.g. bench's pinned
-        # subprocesses) — published by bench so the scaling evidence can show
-        # the DOMINANT stage does equal work at both cluster sizes
+        # per-stage driver walls, kept in the manifest: perfbench's build
+        # layers (perfbench/layers.py) and bench.py's full-results file read
+        # them; per-layer CPU, shuffle and spill come from Spark's task
+        # metrics, not from this process
         stage_walls: dict[str, float] = {}
-        stage_cpu: dict[str, float] = {}
 
-        def _busy() -> float:
-            try:
-                with open("/proc/stat") as f:
-                    p = [int(x) for x in f.readline().split()[1:]]
-                return (sum(p) - p[3] - p[4]) / 100.0
-            except Exception:
-                return 0.0
-
-        def _mark(name: str, ts: float, bs: float) -> None:
+        def _mark(name: str, ts: float) -> None:
             stage_walls[name] = round(time.time() - ts, 2)
-            stage_cpu[name] = round(_busy() - bs, 1)
 
         # ---- stage 1: materialize the postings long table (ONE tokenize
         # pass — the corpus scan is the most expensive stage at 100 TB; term
@@ -371,7 +361,7 @@ class IndexBuild:
         # materialization, never the corpus again) -------------------------
         stats_path = os.path.join(self.out_dir, "term_stats")
         bounds_path = os.path.join(self.out_dir, "boundaries.json")
-        ts, bs = time.time(), _busy()
+        ts = time.time()
         if not os.path.exists(os.path.join(self.postings_dir, "_SUCCESS")):
             # prepare_webpages_fused input still carries raw html: extract +
             # id assignment + tokenize run in ONE Python stage
@@ -382,14 +372,14 @@ class IndexBuild:
 
                 pl = tokenize_postings_html(corpus, id_offset=self.id_offset)
             pl.write.mode("overwrite").parquet(self.postings_dir)
-        _mark("tokenize_postings", ts, bs)
+        _mark("tokenize_postings", ts)
         postings = spark.read.parquet(self.postings_dir)
-        ts, bs = time.time(), _busy()
+        ts = time.time()
         if not os.path.exists(os.path.join(stats_path, "_SUCCESS")):
             P.term_stats(postings).write.mode("overwrite").parquet(stats_path)
-        _mark("term_stats", ts, bs)
+        _mark("term_stats", ts)
         stats = spark.read.parquet(stats_path)
-        ts, bs = time.time(), _busy()
+        ts = time.time()
         if not os.path.exists(bounds_path):
             n_terms = _parquet_rows(stats_path)
             boundaries = bucket_boundaries(stats, cfg.n_buckets, n_terms_hint=n_terms)
@@ -402,18 +392,18 @@ class IndexBuild:
             os.replace(tmp, bounds_path)
         with open(bounds_path) as f:
             boundaries = json.load(f)
-        _mark("boundaries", ts, bs)
+        _mark("boundaries", ts)
 
-        ts, bs = time.time(), _busy()
+        ts = time.time()
         cs = P.corpus_stats(postings).collect()[0]
         n_docs, avgdl, total_tokens = int(cs["n_docs"]), float(cs["avgdl"]), int(cs["total_tokens"])
-        _mark("corpus_stats", ts, bs)
+        _mark("corpus_stats", ts)
 
         # ---- optional positional sidecar (query_phrase): bucket-partitioned
         # like the segments so phrase queries prune FILES, term-sorted within
         # partitions so row-group stats prune inside them --------------------
         if self.store_tokens:
-            ts, bs = time.time(), _busy()
+            ts = time.time()
             tokens_tbl = LocalTable(os.path.join(self.out_dir, "tokens"))
             if tokens_tbl.current_snapshot() is None:
                 if "text" not in corpus.columns:
@@ -434,7 +424,7 @@ class IndexBuild:
                 tokens_tbl.overwrite(
                     toks, properties={**lineage}, partition_by=["bucket"]
                 )
-            _mark("tokens_sidecar", ts, bs)
+            _mark("tokens_sidecar", ts)
 
         # ---- stage 2: per bucket-group encode + commit ---------------------
         done = self._done_buckets(spark)
@@ -445,7 +435,7 @@ class IndexBuild:
         groups = [g for g in groups if g]
 
         committed = 0
-        ts, bs = time.time(), _busy()
+        ts = time.time()
         for g in groups:
             tg = time.time()
             # bucket membership is a pure expression over term — the group
@@ -495,13 +485,13 @@ class IndexBuild:
             committed += 1
             if fail_after_groups is not None and committed >= fail_after_groups:
                 raise RuntimeError(f"injected failure after {committed} group commits")
-        _mark("encode_commit", ts, bs)
+        _mark("encode_commit", ts)
 
         return write_manifest(
             spark, self.out_dir, self.build_id, cfg, t0,
             n_docs=n_docs, avgdl=avgdl, total_tokens=total_tokens,
             boundaries=boundaries, has_tokens=self.store_tokens,
-            extra={"stage_walls": stage_walls, "stage_cpu": stage_cpu, **lineage},
+            extra={"stage_walls": stage_walls, **lineage},
         )
 
 

@@ -27,6 +27,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on
+    (its affinity mask, which is what ``nproc`` prints)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app: str = "defactonlp_spark",
     cores: int | None = None,
@@ -34,7 +40,7 @@ def get_spark(
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     b = (

@@ -4,10 +4,15 @@ record because the final JSON line outgrew that window.  _fit_line is the
 hard guarantee that can never happen again, whatever the query count."""
 
 import json
+import os
+import signal
+import subprocess
 import sys
+import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
 
@@ -117,3 +122,142 @@ def test_many_failure_reasons_still_fit():
     assert out["query_errors"]
     assert all(len(v) <= 80 for v in out["query_errors"].values())
     assert len(out["query_errors"]) + out["query_errors_omitted"] == 60
+
+
+# ---- the budgeted section runner (stub sections, no Spark) ----------------
+
+
+def _record(name, log):
+    def section(runner):
+        log.append(name)
+    return section
+
+
+def test_raising_section_is_named_and_later_sections_still_run():
+    log = []
+
+    def broken(runner):
+        raise ZeroDivisionError("float division by zero\n  at some deeper frame")
+
+    runner = bench.Runner(600)
+    runner.run([("a", _record("a", log)), ("broken", broken), ("c", _record("c", log))])
+    assert log == ["a", "c"]
+    assert runner.results["section_errors"] == {
+        "broken": "ZeroDivisionError: float division by zero"}
+    assert runner.results["skipped"] == []
+    assert "interrupted" not in runner.results
+
+
+def test_exhausted_budget_lists_the_remaining_sections_in_skipped():
+    log = []
+    runner = bench.Runner(0.05)
+    runner.run([("slow", lambda r: time.sleep(0.1)), ("b", _record("b", log)),
+                ("c", _record("c", log))])
+    assert log == []
+    assert runner.results["skipped"] == ["b", "c"]
+    assert runner.results["section_errors"] == {}
+
+
+def test_time_queries_starts_no_query_past_the_deadline():
+    walls, errors = bench.time_queries(
+        None, {"fine_query": _fine, "late_query": _fine}, "/nowhere",
+        deadline=time.monotonic() - 1)
+    assert walls == {} and errors == {}
+
+
+def test_emitted_line_fits_and_carries_every_headline(tmp_path, monkeypatch, capsys):
+    monkeypatch.setattr(bench, "FULL_RESULTS_PATH", str(tmp_path / "full.json"))
+    c = _compact(171)
+    results = {k: c[k] for k in ("metric", "value", "unit", "sf", "queries",
+                                 "fixtures_warmup_sec")}
+    results.update(skipped=[], queries_skipped=0, elapsed_sec=1234.5,
+                   section_errors={"build_scaling": "RuntimeError: " + "x" * 150})
+    results["query_errors"] = {"some_operator_name_000": "AnalysisException: " + "y" * 150}
+    metrics = {k: {"value": 123.456, "unit": "u"} for k in (
+        "setup_s", "build_docs_per_s", "index_bytes_per_doc", "claims_per_s",
+        "batch_p50_s", "peak_rss_mb")}
+    results["serving"] = {w: {"trace0": {"correct": True, "attempted": 40, "failed": 0,
+                                         "metrics": metrics},
+                              "trace1": {"metrics": {"kernel.wall_s": {"value": 0.0}}}}
+                          for w in bench.WORKLOADS}
+    results["index_build"] = {"pair_efficiencies": [0.781, 0.802, 0.79],
+                              "scaling_efficiency_median": 0.79, "runs": [{}] * 3}
+    bench._emit(results)
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(line) <= bench._MAX_LINE
+    out = json.loads(line)
+    assert out["value"] == c["value"] and out["skipped"] == []
+    assert out["queries_skipped"] == 0 and out["queries_total"] == 171
+    for w in bench.WORKLOADS:
+        assert out[w] == {"claims_per_s": 123.456, "batch_p50_s": 123.456,
+                          "build_docs_per_s": 123.456, "correct": True}
+    assert out["ib_pair_efficiencies"] == [0.781, 0.802, 0.79]
+    assert out["ib_scaling_efficiency_median"] == 0.79
+    assert "kernel.wall_s" not in line and "runs" not in out
+    assert json.loads((tmp_path / "full.json").read_text())["serving"] == results["serving"]
+
+
+def _sleeper(pidfile) -> list:
+    return [sys.executable, "-c",
+            f"import os, time; open({str(pidfile)!r}, 'w').write(str(os.getpid())); "
+            "time.sleep(600)"]
+
+
+def _gone(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    return False
+
+
+def _wait_for_pid(pidfile, proc) -> int:
+    t0 = time.monotonic()
+    while time.monotonic() - t0 < 60 and proc.poll() is None:
+        if pidfile.exists() and pidfile.read_text():
+            return int(pidfile.read_text())
+        time.sleep(0.05)
+    raise AssertionError("the stub section's child never started")
+
+
+def test_budget_timeout_stops_the_child(tmp_path):
+    pidfile = tmp_path / "child.pid"
+    runner = bench.Runner(1.0)
+    runner.run([("stub", lambda r: bench.run_child(_sleeper(pidfile), r))])
+    assert runner.results["section_errors"]["stub"].startswith("TimeoutError")
+    assert _gone(int(pidfile.read_text()))
+
+
+def test_sigterm_emits_the_line_and_leaves_no_child(tmp_path):
+    pidfile = tmp_path / "child.pid"
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {ROOT!r})\n"
+        "import bench\n"
+        f"cmd = {_sleeper(pidfile)!r}\n"
+        "stub = lambda runner: bench.run_child(cmd, runner)\n"
+        "sys.exit(bench.main([('stub', stub), ('after', stub)], budget_sec=600))\n"
+    )
+    env = dict(os.environ, BENCH_FULL_PATH=str(tmp_path / "full.json"))
+    proc = subprocess.Popen([sys.executable, "-c", script], stdout=subprocess.PIPE,
+                            stderr=subprocess.PIPE, text=True, env=env)
+    try:
+        pid = _wait_for_pid(pidfile, proc)
+        proc.send_signal(signal.SIGTERM)
+        out, err = proc.communicate(timeout=60)
+    finally:
+        proc.kill()
+    assert proc.returncode == 128 + signal.SIGTERM, err
+    line = json.loads(out.strip().splitlines()[-1])
+    assert line["interrupted"] == "stub"
+    assert line["skipped"] == ["after"]
+    assert _gone(pid)
+
+
+def test_default_cores_is_the_affinity_mask_unless_set(monkeypatch):
+    from defactonlp_spark.session import default_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3
