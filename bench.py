@@ -201,7 +201,8 @@ def _spark(cores: int, shuffle_partitions: int | None = None):
 
 
 def time_queries(spark, entries: dict, sf_dir: str, after=None,
-                 deadline: float | None = None) -> tuple[dict, dict]:
+                 deadline: float | None = None, walls: dict | None = None,
+                 errors: dict | None = None) -> tuple[dict, dict]:
     """Run each ``entries[name](spark, sf_dir)`` into the noop sink (a plain
     ``count()`` when that fails) and time it. Returns ``(walls, errors)``:
     a query that fails both ways walls ``-1.0`` and its
@@ -209,8 +210,11 @@ def time_queries(spark, entries: dict, sf_dir: str, after=None,
     successful query (the long-session contract: drop operator-persisted
     intermediates so executor storage and GC pressure do not accumulate).
     No query starts once ``time.monotonic()`` has passed ``deadline``; the
-    ones left out are absent from ``walls``."""
-    walls, errors = {}, {}
+    ones left out are absent from ``walls``. ``walls`` and ``errors`` are
+    filled as each query ends, so a caller that passes its own dicts keeps
+    what was measured when an interrupt cuts the loop short."""
+    walls = {} if walls is None else walls
+    errors = {} if errors is None else errors
     for name, fn in entries.items():
         if deadline is not None and time.monotonic() >= deadline:
             break
@@ -236,6 +240,8 @@ def harness(runner: Runner) -> None:
     from defactonlp_spark.operators.dedup import release_cached
 
     r = runner.results
+    entries = entrymod.queries()
+    queries, errors = r.setdefault("queries", {}), {}
     spark = _spark(CPUS)
     try:
         # warm the session-scoped shared fixtures (postings / positional
@@ -248,17 +254,18 @@ def harness(runner: Runner) -> None:
         entrymod._segments_cached(spark, SF_DIR)[0].count()
         entrymod._child_postings(spark, SF_DIR).count()
         r["fixtures_warmup_sec"] = round(time.time() - t0, 2)
-        entries = entrymod.queries()
-        queries, errors = time_queries(spark, entries, SF_DIR, release_cached,
-                                       deadline=runner.deadline)
+        time_queries(spark, entries, SF_DIR, release_cached,
+                     deadline=runner.deadline, walls=queries, errors=errors)
     finally:
+        # recorded before spark.stop(): after a SIGTERM to the whole process
+        # group the JVM may be gone and stop() raise
+        r["queries_skipped"] = len(entries) - len(queries)
+        if errors:
+            r["query_errors"] = errors
+        if "fixtures_warmup_sec" in r:
+            r["value"] = round(sum(v for v in queries.values() if v > 0)
+                               + r["fixtures_warmup_sec"], 2)
         spark.stop()
-    r["queries"] = queries
-    r["queries_skipped"] = len(entries) - len(queries)
-    if errors:
-        r["query_errors"] = errors
-    r["value"] = round(sum(v for v in queries.values() if v > 0)
-                       + r["fixtures_warmup_sec"], 2)
 
 
 # ---------------------------------------------------------------- serving

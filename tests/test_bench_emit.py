@@ -165,6 +165,23 @@ def test_time_queries_starts_no_query_past_the_deadline():
     assert walls == {} and errors == {}
 
 
+def test_time_queries_keeps_measured_walls_when_interrupted():
+    walls, errors = {}, {}
+
+    def interrupt():
+        raise SystemExit(143)
+
+    try:
+        bench.time_queries(None, {"broken_query": _broken, "fine_query": _fine,
+                                  "never_started": _fine}, "/nowhere",
+                           after=interrupt, walls=walls, errors=errors)
+    except SystemExit:
+        pass
+    assert walls["broken_query"] == -1.0 and walls["fine_query"] >= 0.0
+    assert "never_started" not in walls
+    assert errors == {"broken_query": "ZeroDivisionError: float division by zero"}
+
+
 def test_emitted_line_fits_and_carries_every_headline(tmp_path, monkeypatch, capsys):
     monkeypatch.setattr(bench, "FULL_RESULTS_PATH", str(tmp_path / "full.json"))
     c = _compact(171)
