@@ -25,6 +25,7 @@ over the CSR matrix + argpartition (SURVEY.md §2.A10/A11).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,42 +34,58 @@ from defactonlp_spark.config import BM25Params
 from defactonlp_spark.functions.tokenize import _batch_postings, tokenize_postings
 
 
-def claim_terms(claims: DataFrame, id_col: str = "claim_id", text_col: str = "claim") -> DataFrame:
-    """claims -> distinct (claim_id, term): ``id_col`` long and ``term``
-    string, both non-null.
+def claim_pairs(
+    claims: DataFrame, id_col: str = "claim_id", text_col: str = "claim"
+) -> pd.DataFrame | DataFrame:
+    """claims -> distinct (``id_col``, ``term``) pairs, kept where the batch
+    already is.
 
     A batch already in driver memory — ``claims.isLocal()``, which is what
     ``spark.createDataFrame(pandas_df)`` returns with Arrow on — is
-    tokenized on the driver: ``collect()`` over a local relation starts no
-    Spark job, the rows go through the same ``_batch_postings`` kernel the
-    ``mapInPandas`` stage runs, and the deduplicated pairs come back as a
-    local relation (built from an Arrow table, so it is local whatever the
-    session's Arrow setting). Nothing else is collected: any other input
+    tokenized on the driver into a pandas frame (``id_col`` int64, ``term``
+    str, no duplicates): ``collect()`` over a local relation starts no
+    Spark job, and the rows go through the same ``_batch_postings`` kernel
+    the ``mapInPandas`` stage runs. Serving hands this frame straight to
+    ``wand.py::wand_topk``, so a local batch never goes back through the
+    JVM before its plan is built. Nothing else is collected: any other input
     (parquet or JSON claim sets, tuple-built frames, a projection over a
-    local relation, pandas frames in a session without Arrow) keeps the
-    distributed ``mapInPandas`` + ``distinct`` plan."""
+    local relation, pandas frames in a session without Arrow) gets the
+    distributed ``mapInPandas`` + ``distinct`` relation."""
     if claims.isLocal():
-        import pandas as pd
-        import pyarrow as pa
-
         rows = claims.collect()
         pdf = pd.DataFrame(
             {id_col: [r[id_col] for r in rows], text_col: [r[text_col] for r in rows]}
         )
         pairs = _batch_postings(pdf, id_col, text_col)[["doc_id", "term"]].drop_duplicates()
-        schema = T.StructType([
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("term", T.StringType(), False),
-        ])
-        return claims.sparkSession.createDataFrame(
-            pa.table({id_col: pa.array(pairs["doc_id"], pa.int64()),
-                      "term": pa.array(pairs["term"], pa.string())}),
-            schema,
-        )
+        return pairs.rename(columns={"doc_id": id_col}).reset_index(drop=True)
     return (
         tokenize_postings(claims, id_col=id_col, text_col=text_col)
         .select(F.col("doc_id").alias(id_col), "term")
         .distinct()
+    )
+
+
+def claim_terms(claims: DataFrame, id_col: str = "claim_id", text_col: str = "claim") -> DataFrame:
+    """claims -> distinct (claim_id, term) relation: ``id_col`` long and
+    ``term`` string, both non-null.
+
+    :func:`claim_pairs` as a relation: a local batch's pandas pairs come
+    back as a local relation (built from an Arrow table, so it is local
+    whatever the session's Arrow setting); any other input keeps the
+    distributed plan."""
+    pairs = claim_pairs(claims, id_col, text_col)
+    if not isinstance(pairs, pd.DataFrame):
+        return pairs
+    import pyarrow as pa
+
+    schema = T.StructType([
+        T.StructField(id_col, T.LongType(), False),
+        T.StructField("term", T.StringType(), False),
+    ])
+    return claims.sparkSession.createDataFrame(
+        pa.table({id_col: pa.array(pairs[id_col], pa.int64()),
+                  "term": pa.array(pairs["term"], pa.string())}),
+        schema,
     )
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.bm25 import (
+    claim_pairs,
     claim_terms,
     score_conjunctive,
     score_exhaustive,
@@ -67,9 +68,8 @@ def decode_segments(segments: DataFrame) -> DataFrame:
 
 def query_wand(reader: IndexReader, claims: DataFrame, k: int = 5, cfg: EngineConfig | None = None) -> DataFrame:
     cfg = cfg or EngineConfig()
-    q = claim_terms(claims)
     return wand_topk(
-        reader.segments(), q, reader.n_docs, reader.avgdl, k=k, cfg=cfg,
+        reader.segments(), claim_pairs(claims), reader.n_docs, reader.avgdl, k=k, cfg=cfg,
         boundaries=reader.boundaries,
         deletes=reader.deletes_array(cfg.max_serving_deletes),
     )
@@ -89,9 +89,9 @@ class ServingSession:
     serving path so the first measured batch is already steady-state.
     ``close()`` releases executor storage.
 
-    Each ``topk`` batch is :func:`wand_topk` over :func:`claim_terms` of
-    the claims, so it prunes the cache exactly as ``query_wand`` prunes the
-    parquet (:func:`prune_to_terms`; against the cache, in-memory batch
+    Each ``topk`` batch is :func:`wand_topk` over :func:`claim_pairs` of
+    the claims (a local batch's pairs stay on the driver, as pandas), so it
+    prunes the cache exactly as ``query_wand`` prunes the parquet (:func:`prune_to_terms`; against the cache, in-memory batch
     stats stand in for parquet footers) and runs the same jobs: 2 for a
     local batch of up to ``wand.CLAIM_MAP_MAX_PAIRS`` (claim, term) pairs —
     the pruned scan with its gather shuffle, then one kernel stage with a
@@ -126,7 +126,7 @@ class ServingSession:
 
     def topk(self, claims: DataFrame, k: int = 5) -> DataFrame:
         return wand_topk(
-            self.segments, claim_terms(claims), self.reader.n_docs,
+            self.segments, claim_pairs(claims), self.reader.n_docs,
             self.reader.avgdl, k=k, cfg=self.cfg,
             boundaries=self.reader.boundaries,
             deletes=self.deletes,

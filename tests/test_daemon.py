@@ -9,6 +9,10 @@ settings ``get_spark`` makes.
    ``query_wand`` rows as a ``get_spark`` session.
 4. A worker that crashes in native code leaves its Python traceback in the
    raised error (faulthandler).
+5. Python tasks of a ``get_spark`` session talk to the JVM over Unix domain
+   sockets in ``/tmp``, also when ``java.io.tmpdir`` is too long to hold a
+   socket path, and a stopped session leaves no socket file and no daemon or
+   worker process behind.
 """
 
 import importlib
@@ -159,3 +163,99 @@ def test_worker_crash_carries_python_traceback(spark):
     assert "crash_in_native_code" in msg, msg[-2000:]
     # the daemon forks a fresh worker: the session keeps serving Python tasks
     assert spark.range(3).select(F.udf(lambda x: x + 1, "long")("id")).count() == 3
+
+
+def test_python_task_runs_over_unix_domain_socket(spark):
+    def probe(_):
+        import os
+
+        yield (os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower(),
+               os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR"))
+
+    got = spark.sparkContext.parallelize(range(2), 2).mapPartitions(probe).collect()
+    assert got == [("true", "/tmp")] * 2, got
+
+
+UDS_SCRIPT = textwrap.dedent(
+    """
+    import glob, json, os, sys, time
+    import pandas as pd
+    from defactonlp_spark.session import get_spark
+
+    tmpdir = sys.argv[1]
+    socks = lambda: set(glob.glob("/tmp/.*.sock"))
+    before = socks()
+    spark = get_spark("uds", cores=2, shuffle_partitions=2, extra={
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmpdir}",
+        "spark.local.dir": tmpdir,
+        "spark.ui.showConsoleProgress": "false",
+    })
+    spark.sparkContext.setLogLevel("ERROR")
+    jvm_tmpdir = spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
+
+    def pids(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"id": pdf["id"], "worker": os.getpid(), "daemon": os.getppid()})
+
+    rows = spark.range(4).repartition(2).mapInPandas(
+        pids, "id long, worker long, daemon long").toPandas()
+    made = socks() - before
+    spark.stop()
+
+    def alive(pid):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+        except FileNotFoundError:
+            return False
+
+    procs = set(rows["worker"]) | set(rows["daemon"])
+    deadline = time.time() + 30
+    while time.time() < deadline and (made & socks() or any(alive(p) for p in procs)):
+        time.sleep(0.2)
+    print(json.dumps({
+        "jvm_tmpdir": jvm_tmpdir,
+        "ids": sorted(int(i) for i in rows["id"]),
+        "made": sorted(made),
+        "left": sorted(made & socks()),
+        "procs": sorted(int(p) for p in procs),
+        "alive": sorted(int(p) for p in procs if alive(p)),
+    }))
+    """
+)
+
+
+@pytest.fixture(scope="module")
+def uds_run(tmp_path_factory):
+    """One ``get_spark`` session in a child process whose ``java.io.tmpdir``
+    is longer than a Unix socket path can hold: it runs a ``mapInPandas``
+    task and stops; the report lists the sockets it made in /tmp and the
+    worker and daemon pids, as seen after ``stop()``."""
+    tmpdir = str(tmp_path_factory.mktemp("uds")) + "/" + "a-deliberately-long-java-io-tmpdir" * 2
+    os.makedirs(tmpdir)
+    assert len(tmpdir) >= 70
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    ))
+    proc = subprocess.run(
+        [sys.executable, "-c", UDS_SCRIPT, tmpdir],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return tmpdir, json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_long_java_tmpdir_still_runs_python_tasks(uds_run):
+    tmpdir, got = uds_run
+    assert got["jvm_tmpdir"] == tmpdir
+    assert got["ids"] == [0, 1, 2, 3]
+    # the sockets went to /tmp, not under the long tmpdir
+    assert got["made"], got
+
+
+def test_stopped_session_leaves_no_socket_or_python_process(uds_run):
+    _, got = uds_run
+    assert got["made"] and got["procs"], got
+    assert got["left"] == [], got
+    assert got["alive"] == [], got
+    assert not any(os.path.exists(s) for s in got["made"])

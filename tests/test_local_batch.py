@@ -13,13 +13,17 @@ cogroup kernel query runs as Spark jobs. Pinned here:
    rows through ``query_wand`` and warm ``topk`` — OOV tokens, an all-OOV
    batch, duplicate claim ids, empty claims and non-ASCII text included;
 3. the driver tokenizer and the ``mapInPandas`` tokenizer emit the same
-   (claim_id, term) pairs under NFD and casefolding.
+   (claim_id, term) pairs under NFD and casefolding;
+4. planning a local batch, up to the returned DataFrame, stays within a
+   pinned number of py4j round trips: the pairs never go back through the
+   JVM before the plan is built.
 """
 
 import uuid
 
 import pandas as pd
 import pytest
+from py4j import protocol as proto
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.functions.tokenize import tokenize_one
@@ -67,6 +71,29 @@ def _jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _py4j_calls(spark, fn):
+    """(fn(), number of py4j commands the driver sent while fn ran).
+
+    Frees of py4j proxies are not counted: when they are sent depends on
+    the garbage collector, and most free proxies of earlier work."""
+    client = spark.sparkContext._gateway._gateway_client
+    stock = client.send_command
+    free = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+    sent = 0
+
+    def counted(command, *args, **kwargs):
+        nonlocal sent
+        sent += not command.startswith(free)
+        return stock(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        out = fn()
+    finally:
+        del client.send_command  # back to the class's method
+    return out, sent
 
 
 @pytest.fixture(scope="module")
@@ -186,3 +213,24 @@ def test_driver_and_kernel_tokenizers_agree_on_non_ascii_claims(spark, tmp_path)
     for form, claims in _forms(spark, NON_ASCII, tmp_path).items():
         got = sorted((r["claim_id"], r["term"]) for r in claim_terms(claims).collect())
         assert got == want, form
+
+
+#: py4j round trips to plan one batch, up to the returned DataFrame, on this
+#: fixture with 8 cores. With the pairs built as a relation and collected
+#: again, a 64-claim ``query_wand`` batch (``reader.segments()`` included)
+#: took 230 and a warm 256-claim ``topk`` batch 173; handing the driver's
+#: pandas pairs to ``wand_topk`` takes 169 and 112.
+MAX_PLAN_CALLS = {"query_wand": 200, "warm_topk": 140}
+
+
+@pytest.mark.parametrize("path", ["query_wand", "warm_topk"])
+def test_planning_a_local_batch_stays_within_its_py4j_round_trips(spark, reader, session, path):
+    size = 64 if path == "query_wand" else 256
+    pdf = gen_claims(n=2 * size)[["claim_id", "claim"]]
+    # a warm-up batch of the same size takes the same plan form (literal or
+    # join), so one-time py4j lookups fall outside the count
+    _serve(path, reader, session, spark.createDataFrame(pdf.iloc[size:])).toPandas()
+    claims = spark.createDataFrame(pdf.iloc[:size])
+    res, calls = _py4j_calls(spark, lambda: _serve(path, reader, session, claims))
+    assert calls <= MAX_PLAN_CALLS[path], f"{path}: {calls} py4j calls"
+    assert res.toPandas()["claim_id"].nunique() > 30

@@ -1,13 +1,14 @@
 """Kernel-group assignment in WAND serving (operators/wand.py::wand_topk).
 
-Claims hash into about one kernel group per core, capped at
-``EngineConfig.serve_claims_per_batch`` claims per group. Contracts pinned
+Claims go into about one kernel group per core, capped at
+``EngineConfig.serve_claims_per_batch`` claims per group: a local batch by
+each claim's rank among its distinct ids, a distributed relation by hash. Contracts pinned
 here:
 
 1. Group membership never changes a result: one group per claim and the
    default grouping return bit-identical frames.
-2. A batch smaller than the core count leaves some groups (and kernel
-   tasks) empty and still matches the exhaustive oracle.
+2. A batch with fewer claims than the core count leaves some groups (and
+   kernel tasks) empty and still matches the exhaustive oracle.
 3. The claim relation is computed once per call: the tokenizer behind
    ``qterms`` runs exactly once, however many branches read it.
 """
@@ -17,11 +18,10 @@ from dataclasses import replace
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from defactonlp_spark.config import EngineConfig
 from defactonlp_spark.operators.bm25 import claim_terms
-from defactonlp_spark.operators.wand import wand_topk
+from defactonlp_spark.operators.wand import claim_groups, n_kernel_groups, wand_topk
 from defactonlp_spark.plans.build import IndexBuild, IndexReader, prepare_webpages
 from defactonlp_spark.plans.query import query_exhaustive, query_wand
 from defactonlp_spark.sources.fixtures import gen_claims, gen_webpages
@@ -59,13 +59,14 @@ def test_group_membership_does_not_change_results(spark, reader, claims_pdf):
 
 
 def test_small_batch_with_empty_groups_matches_exhaustive(spark, reader, claims_pdf):
-    sub = claims_pdf.iloc[:8]
+    sub = claims_pdf.iloc[:3]
     claims = spark.createDataFrame(sub)
     par = spark.sparkContext.defaultParallelism
-    # 8 claims under the 256-claim cap get `par` groups; the hash leaves
-    # some of them empty, which is the case under test
-    groups = claims.select(F.pmod(F.xxhash64("claim_id"), F.lit(par))).distinct().count()
-    assert groups < par
+    # 3 claims under the 256-claim cap get `par` groups, one claim each:
+    # the other groups (and kernel tasks) are empty, which is the case
+    # under test
+    assert n_kernel_groups(3, par, CFG) == par > 3
+    assert sorted(claim_groups(sub["claim_id"], par, CFG).values()) == [0, 1, 2]
 
     w = _sorted(query_wand(reader, claims, k=K, cfg=CFG))
     e = _sorted(query_exhaustive(reader, claims, k=K, cfg=CFG))
